@@ -100,3 +100,69 @@ def test_cli_interactive_with_script(spark, capsys, monkeypatch, tmp_path):
     assert main(["--interactive", str(p), "--sf-dir", "/root/testdata/sf0.001"]) == 0
     out = json.loads(capsys.readouterr().out.splitlines()[-1])
     assert out == [7]
+
+
+def _unsorted_gts(spark):
+    """Two classes, five series, rows in no particular order; one series
+    has empty labels and a null labels_key, like a `REDUCE [ ]` output."""
+    from warp10_platform_spark.core.frame import GTSFrame
+
+    def key(v):
+        return None if v is None else '[{"key":"h","value":"%s"}]' % v
+
+    rows = [
+        ("b.cls", "2", 30, 3.0), ("a.cls", "é", 20, 1.5), ("b.cls", "2", 10, 1.0),
+        ("a.cls", None, 5, 9.0), ("a.cls", "z", 7, 2.0), ("a.cls", "é", 1, 0.5),
+        ("a.cls", None, 2, 8.0), ("b.cls", "1", 40, 4.0),
+    ]
+    df = spark.createDataFrame(
+        [(c, {} if h is None else {"h": h}, {}, key(h), ts, v) for c, h, ts, v in rows],
+        "class string, labels map<string,string>, attributes map<string,string>, "
+        "labels_key string, ts bigint, v_double double",
+    )
+    return GTSFrame(df, None, "v_double")
+
+
+# (class, labels_key, ts) order: null key first, then 'z' < 'é' in UTF-8
+RENDERED = [
+    {"c": "a.cls", "l": {}, "a": {}, "v": [[2, 8.0], [5, 9.0]]},
+    {"c": "a.cls", "l": {"h": "z"}, "a": {}, "v": [[7, 2.0]]},
+    {"c": "a.cls", "l": {"h": "é"}, "a": {}, "v": [[1, 0.5], [20, 1.5]]},
+    {"c": "b.cls", "l": {"h": "1"}, "a": {}, "v": [[40, 4.0]]},
+    {"c": "b.cls", "l": {"h": "2"}, "a": {}, "v": [[10, 1.0], [30, 3.0]]},
+]
+
+
+def _record_plans(monkeypatch, gf) -> list:
+    """Physical plans of every DataFrame collected from here on."""
+    cls = type(gf.df)
+    plans, collect = [], cls.collect
+
+    def recording(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", recording)
+    return plans
+
+
+def test_series_json_sorts_on_driver_like_spark(spark, monkeypatch):
+    from warp10_platform_spark.__main__ import _series_json
+
+    gf = _unsorted_gts(spark)
+    plans = _record_plans(monkeypatch, gf)
+    got = _series_json(gf, None)
+    assert got == RENDERED
+    assert plans and not any("rangepartitioning" in p for p in plans)
+    # a limit as large as the frame takes Spark's own sort: same render
+    assert _series_json(gf, 8) == got
+
+
+def test_series_json_limit_takes_first_points_in_order(spark, monkeypatch):
+    from warp10_platform_spark.__main__ import _series_json
+
+    gf = _unsorted_gts(spark)
+    plans = _record_plans(monkeypatch, gf)
+    got = _series_json(gf, 4)
+    assert got == [RENDERED[0], RENDERED[1], {**RENDERED[2], "v": [[1, 0.5]]}]
+    assert any("TakeOrderedAndProject" in p for p in plans)

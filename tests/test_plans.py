@@ -1,5 +1,6 @@
 """Physical-plan assertions — the properties that matter at 100 TB."""
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -12,6 +13,27 @@ def test_fetch_range_pushes_predicates(spark, sf_dir):
     assert "GreaterThanOrEqual(ts" in pushed and "LessThanOrEqual(ts" in pushed
     assert any("events.purchase" in p for p in r.partition_filters)
     assert r.cartesian_products == 0
+
+
+@pytest.mark.parametrize("form", ["map", "list"])
+def test_warpscript_fetch_prunes_class_and_pushes_ts(spark, sf_dir, form):
+    """WarpScript FETCH, both argument forms, reads the class-partitioned
+    layout: a class regex prunes partitions and both time bounds reach
+    the parquet scan."""
+    from warp10_platform_spark.warpscript.functions import REGISTRY
+    from warp10_platform_spark.warpscript.stack import WarpScriptStack
+
+    st = WarpScriptStack(spark, sf_dir)
+    start, end = 1_700_000_000_000_000, 1_800_000_000_000_000
+    if form == "map":
+        st.push({"selector": r"~events\.(click|view){user~36[0-9]}", "start": start, "end": end})
+    else:
+        st.push([r"~events\.(click|view)", {"user": "~36[0-9]"}, start, end])
+    REGISTRY["FETCH"](st)
+    r = plan_report(st.pop().df)
+    assert any("class" in p and "click|view" in p for p in r.partition_filters)
+    pushed = " ".join(r.pushed_filters)
+    assert f"GreaterThanOrEqual(ts,{start})" in pushed and f"LessThanOrEqual(ts,{end})" in pushed
 
 
 def test_fetch_range_daypruned_prunes_day_partitions(spark, sf_dir):

@@ -606,3 +606,21 @@ def test_plasma_hub_throughput_under_load():
     while _time.time() < deadline and writer_threads() > base_threads:
         _time.sleep(0.2)
     assert writer_threads() <= base_threads
+
+
+def test_store_points_plan_grows_linearly(spark, sf_dir, tmp_path):
+    """Each buffered /update batch adds the same number of logical plan
+    nodes to Store.points(): the fold never re-embeds the plan built so
+    far, which would double it per batch."""
+    from warp10_platform_spark.server import Store
+
+    def nodes(df):  # one line per node of the parsed logical plan
+        return len(df._jdf.queryExecution().logical().treeString().splitlines())
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    counts = [nodes(st.points())]
+    for i in range(4):
+        st.append_update(f"{i + 1}000000// pg.a{{x={i}}} {i}\n")
+        counts.append(nodes(st.points()))
+    steps = {b - a for a, b in zip(counts, counts[1:])}
+    assert len(steps) == 1 and steps.pop() > 0, counts

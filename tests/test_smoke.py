@@ -84,9 +84,11 @@ def test_connected_components_materializes_edges_once(spark):
     ).select(cudf("raw_a").alias("id_a"), "id_b")
     got = {r["id"]: r["rep"] for r in connected_components(edges).collect()}
     assert got == {i: 1 for i in range(1, 8)}
-    # 6 edge rows, evaluated once by the eager checkpoint (task retries
-    # could legitimately add a few; pre-fix this was ≥ 5 rounds × 6 ≥ 30)
-    assert acc.value <= 12, f"edge pipeline evaluated {acc.value} row-times"
+    # 6 edge rows, materialized once by the eager checkpoint; the
+    # unionByName there evaluates the UDF on both branches, 6 × 2 = 12.
+    # The bound leaves room for task retries and stays far below the
+    # regression signal (pre-fix: ≥ 5 rounds × 6 ≥ 30).
+    assert acc.value <= 18, f"edge pipeline evaluated {acc.value} row-times"
 
 
 def test_events_points_labels_key_matches_canonical(spark):

@@ -19,6 +19,16 @@ import json
 import sys
 
 
+_ORDER = ("class", "labels_key", "ts")
+
+
+def _order_key(row) -> tuple:
+    """Spark's ascending (class, labels_key, ts) order, nulls first.
+    Python compares str by code point, which is the UTF-8 byte order
+    Spark compares strings in."""
+    return tuple((row[c] is not None, row[c]) for c in _ORDER)
+
+
 def _series_json(gf, limit: int | None):
     """GTSFrame → reference /exec GTS JSON: one object per series,
     {"c", "l", "a", "v": [[tick, (lat, lon,) (elev,) value], ...]},
@@ -49,11 +59,16 @@ def _series_json(gf, limit: int | None):
     have = set(df.columns)
     sel = [c for c in cols if not isinstance(c, str) or c in have]
     # maps are unorderable in Spark — sort series by the canonical key
-    rows = df.select(*sel).orderBy("class", "labels_key", "ts")
+    rows = df.select(*sel)
     if limit:
-        rows = rows.limit(limit)
+        # orderBy + limit plans as a one-stage top-N
+        rows = rows.orderBy(*_ORDER).limit(limit).collect()
+    else:
+        # every row reaches the driver anyway: sorting it there saves the
+        # range exchange (and its sampling job) a global orderBy plans
+        rows = sorted(rows.collect(), key=_order_key)
     out: dict[tuple, dict] = {}
-    for r in rows.collect():
+    for r in rows:
         d = r.asDict()
         key = (d["class"], tuple(sorted((d.get("labels") or {}).items())))
         series = out.setdefault(

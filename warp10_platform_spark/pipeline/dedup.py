@@ -40,8 +40,10 @@ from warp10_platform_spark.pipeline.util import spread as _spread
 # (tests/test_kernels.py), but the Python boundary has a ~0.25 s fixed
 # cost per query at local[32] — measured crossover on the sf ladder:
 # HOF wins at sf0.1 (0.6 MB, 5k docs; kernel +0.25 s), kernel wins ≥1.4×
-# at 10× that and grows with volume. 4 MB routes sf0.1-sized corpora to
-# HOF and sf1+ to the kernel; override with SPARK_GRAFT_KERNEL_MIN_BYTES.
+# at 10× that and grows with volume. The measured documents estimates,
+# sf0.1 594,568 B and sf1 911,011 B, are both under the 4 MiB gate, so
+# both take the HOF route; only corpora over 4 MiB reach the kernel.
+# Override with SPARK_GRAFT_KERNEL_MIN_BYTES.
 import os as _os
 
 _KERNEL_MIN_BYTES = int(_os.environ.get("SPARK_GRAFT_KERNEL_MIN_BYTES", 4 * 1024 * 1024))

@@ -185,6 +185,11 @@ class Store:
             d for d in os.listdir(store_dir) if d.startswith("base_")
         ) if os.path.exists(store_dir) else []
         self._base_dir = os.path.join(store_dir, bases[-1]) if bases else None
+        # /exec FETCH reads the class-partitioned points layout; build it
+        # once here so concurrent first requests never race to write it
+        from warp10_platform_spark.sources.tables import canonical_points
+
+        canonical_points(spark, sf_dir)
 
     # ---- write paths -------------------------------------------------
     def append_update(self, text: str) -> int:
@@ -243,17 +248,19 @@ class Store:
             for d in sorted(os.listdir(os.path.join(self.dir, "buffer")))
         ]
         bufdirs = [d for d in bufdirs if os.path.exists(os.path.join(d, "_SUCCESS"))]
-        if bufdirs:
-            cols = df.columns
-            # fold append batches IN ORDER so last-write-wins respects
-            # ingest order across requests, not just within one batch
-            for d in bufdirs:
-                buf = (
-                    self.spark.read.parquet(d)
-                    .unionByName(df.limit(0), allowMissingColumns=True)
-                    .select(*cols)
-                )
-                df = W.update(df, buf)
+        # fold append batches IN ORDER so last-write-wins respects
+        # ingest order across requests, not just within one batch. A
+        # batch's missing columns are typed nulls from the base schema,
+        # so each fold adds a constant number of plan nodes.
+        fields = df.schema.fields
+        for d in bufdirs:
+            buf = self.spark.read.parquet(d)
+            have = set(buf.columns)
+            buf = buf.select(*(
+                F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in fields
+            ))
+            df = W.update(df, buf)
         for t in self._load_json("tombstones.json"):
             df = W.delete(df, t["selector"], t.get("start"), t.get("end"))
         for m in self._load_json("meta.json"):

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from warp10_platform_spark.core import timeunits as _tuc
 from warp10_platform_spark.core.frame import GTSFrame
-from warp10_platform_spark.sources.tables import events_points
+from warp10_platform_spark.sources.tables import canonical_points, events_points
 
 REGISTRY: dict[str, Callable] = {}
 
@@ -465,7 +465,9 @@ def _fetch_map(st, params: dict):
             raise ValueError("FETCH 'timespan' requires 'end'.")
         start = end - int(params["timespan"]) + 1
 
-    pts = events_points(st.spark, st.sf_dir)
+    # the class-partitioned layout: the selector's class prunes
+    # partitions and the time bounds reach the scan's PushedFilters
+    pts = canonical_points(st.spark, st.sf_dir)
     from functools import reduce
 
     pred = reduce(lambda a, b: a | b, (selector_predicate(s) for s in selectors))
@@ -529,7 +531,7 @@ def _fetch(st):
     else:
         raise ValueError("FETCH expects [ token? class labels start end ]")
     selector = cls + "{" + ",".join(f"{k}={v}" for k, v in (labels or {}).items()) + "}"
-    pts = events_points(st.spark, st.sf_dir)
+    pts = canonical_points(st.spark, st.sf_dir)
     if isinstance(b, int) and b < 0:
         st.push(GTSFrame.fetch(pts, selector, end=a, count=-b))
     else:
