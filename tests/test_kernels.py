@@ -154,7 +154,7 @@ def test_minhash_kernel_matches_hof(spark, portable):
 def test_kernel_routing_threshold(spark, sf_dir):
     """Size routing: corpora at the bench/test SFs keep the HOF plan (no
     Python eval); a file-backed corpus whose Catalyst size estimate
-    crosses SPARK_GRAFT_KERNEL_MIN_BYTES routes to the Arrow kernel;
+    crosses dedup._KERNEL_MIN_BYTES routes to the Arrow kernel;
     unknown-size frames (createDataFrame) stay on the HOF plan."""
     from functools import reduce
 

@@ -184,6 +184,51 @@ def test_q21_keyed_exchange_shape(spark, sf_dir):
     assert r.cartesian_products == 0
 
 
+def test_q21_unkeyed_route_above_gate(spark, sf_dir, monkeypatch):
+    """Above _Q21_KEYED_MAX_BYTES (sf10-scale facts) the l_orderkey
+    repartition drops out: the aggregate keeps its map-side partials and
+    the window pays its own exchange."""
+    from warp10_platform_spark.plans.audit import explain_formatted
+    from warp10_platform_spark.queries import tpch2
+
+    q21 = E.queries()["tpch_q21_waiting_supplier"]
+    assert "REPARTITION_BY_COL" in explain_formatted(q21(spark, sf_dir))
+    monkeypatch.setattr(tpch2, "_Q21_KEYED_MAX_BYTES", 0)
+    assert "REPARTITION_BY_COL" not in explain_formatted(q21(spark, sf_dir))
+
+
+def test_q21_routes_return_same_rows(spark, sf_dir, monkeypatch):
+    """Both q21 keying routes return the same rows. Run on the sf0.01
+    fixture next to the test one, because q21 returns no rows at
+    sf0.001."""
+    import os
+
+    from warp10_platform_spark.queries import tpch2
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.exists(os.path.join(sf, "lineitem.parquet")):
+        pytest.skip("sf0.01 testdata not present")
+    q21 = E.queries()["tpch_q21_waiting_supplier"]
+    keyed = sorted(map(tuple, q21(spark, sf).collect()))
+    monkeypatch.setattr(tpch2, "_Q21_KEYED_MAX_BYTES", 0)
+    unkeyed = sorted(map(tuple, q21(spark, sf).collect()))
+    assert keyed and keyed == unkeyed
+
+
+def test_plan_bytes_known_and_unknown_sizes(spark, sf_dir):
+    """plan_bytes: a file scan has a size estimate; a createDataFrame
+    frame (Catalyst's Long.MaxValue sentinel) and a streaming frame have
+    none."""
+    import os
+
+    from warp10_platform_spark.plans import plan_bytes
+
+    size = plan_bytes(spark.read.parquet(os.path.join(sf_dir, "documents.parquet")))
+    assert isinstance(size, int) and 0 < size < (1 << 63) - 1
+    assert plan_bytes(spark.createDataFrame([(1,)], "a int")) is None
+    assert plan_bytes(spark.readStream.format("rate").load()) is None
+
+
 def test_chunk_dedup_single_window_shape(spark, sf_dir):
     """r9's chunk_dedup win: duplicate-count per chunk comes from ONE
     window over the chunk key (no groupBy + join-back): at most the

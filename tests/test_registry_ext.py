@@ -20,6 +20,46 @@ def test_registry_size_650_plus():
     assert len(REGISTRY) >= 650, len(REGISTRY)
 
 
+def test_registry_refuses_rebinding():
+    """Each WarpScript name has one definition: binding a bound name
+    again raises, through register() or a direct item write."""
+    from warp10_platform_spark.warpscript.functions import register
+
+    bound = REGISTRY["MAP"]
+    with pytest.raises(ValueError, match="MAP"):
+        register("MAP")(lambda st: None)
+    with pytest.raises(ValueError, match="MAP"):
+        REGISTRY["MAP"] = lambda st: None
+    assert REGISTRY["MAP"] is bound
+
+
+def test_rename_relabel_carry_construct_identity(spark, sf_dir):
+    """RENAME and RELABEL carry a NEWGTS frame's driver-side identity, so
+    ADDVALUE on the zero-row frame builds the renamed, relabelled point."""
+    from warp10_platform_spark.warpscript import functions as FN
+
+    assert REGISTRY["RENAME"] is FN._rename and REGISTRY["RELABEL"] is FN._relabel
+    st = run(
+        "NEWGTS 'a' RENAME { 'k' 'v' } RELABEL '+.x' RENAME { 'k' '' 'j' 'w' } RELABEL",
+        spark, sf_dir,
+    )
+    assert st.peek().ident == ("a.x", {"j": "w"})
+    st.exec("10 NaN NaN NaN 1.5 ADDVALUE")
+    [r] = st.pop().df.select("class", "labels", "ts", "v_double").collect()
+    assert (r["class"], r["labels"], r["ts"], r["v_double"]) == ("a.x", {"j": "w"}, 10, 1.5)
+
+
+def test_geometry_serializers_parse_text_input():
+    """->WKT and ->GEOJSON accept a serialized geometry as well as a
+    shape: the text is parsed first, in the one registered function."""
+    from warp10_platform_spark.warpscript import functions_ext as FX
+
+    assert REGISTRY["->WKT"] is FX._towkt_shape
+    assert REGISTRY["->GEOJSON"] is FX._togeojson_shape
+    st = run("'POINT (1 2)' ->WKT 'POINT (1 2)' ->GEOJSON")
+    assert st.stack == ["POINT (1 2)", '{"type": "Point", "coordinates": [1.0, 2.0]}']
+
+
 def test_exact_math_and_overflow():
     assert run("9223372036854775807 1 SUBTRACTEXACT").stack == [2**63 - 2]
     with pytest.raises(ArithmeticError):

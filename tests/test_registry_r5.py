@@ -5,6 +5,8 @@ filler.value, RANDPDF/SRANDPDF, REF, filter.latencies."""
 import pytest
 from pyspark.sql import functions as F
 
+from warp10_platform_spark.warpscript import functions as FN
+from warp10_platform_spark.warpscript.functions import REGISTRY
 from warp10_platform_spark.warpscript.stack import WarpScriptStack
 
 
@@ -31,6 +33,8 @@ def _vals(gf, value_col=None):
 
 
 def test_filter_any_all(stack):
+    # the filter.* specs run through the one FILTER dispatcher
+    assert REGISTRY["FILTER"] is FN._filter
     st = stack
     _mkgts(st, "a", [(1, None, None, None, 1.0), (2, None, None, None, 9.0)])
     _mkgts(st, "b", [(1, None, None, None, 2.0), (2, None, None, None, 3.0)])
@@ -97,6 +101,8 @@ def test_filter_latencies(stack):
 
 
 def test_mapper_dotproduct_and_npdf(stack):
+    # parameterized mappers run through the one MAP dispatcher
+    assert REGISTRY["MAP"] is FN._map
     st = stack
     _mkgts(st, "s", [(i, None, None, None, float(i)) for i in range(1, 6)])
     st.exec("'g' STORE [ $g [ 0.25 0.5 0.25 ] mapper.dotproduct 1 1 0 ] MAP")
@@ -163,6 +169,7 @@ def test_welford_and_join_aliases(stack):
 
 
 def test_filler_value(stack):
+    assert REGISTRY["FILL"] is FN._fill
     st = stack
     _mkgts(st, "s", [(100, None, None, None, 1.0), (300, None, None, None, 3.0)])
     st.exec("'g' STORE [ $g bucketizer.last 300 100 3 ] BUCKETIZE [ SWAP -1.0 filler.value ] FILL")
@@ -171,6 +178,8 @@ def test_filler_value(stack):
 
 
 def test_randpdf_and_ref(stack):
+    # EVAL/RUN apply a pushed function object in the one _eval
+    assert REGISTRY["EVAL"] is REGISTRY["RUN"] is FN._eval
     st = stack
     st.exec("SRAND { 'heads' 0.5 'tails' 0.5 } SRANDPDF 'draw' STORE")
     draws = []

@@ -31,6 +31,7 @@ _MD5_64 = "cast(conv(substr(md5({x}), 1, 15), 16, 10) AS bigint)"
 
 
 from warp10_platform_spark.pipeline.util import spread as _spread
+from warp10_platform_spark.plans import plan_bytes
 
 # r10 (guide §4.2): above this estimated input size, the fingerprint
 # folds (simhash's per-token ±1 majority, minhash's 32-hash signature)
@@ -43,28 +44,17 @@ from warp10_platform_spark.pipeline.util import spread as _spread
 # at 10× that and grows with volume. The measured documents estimates,
 # sf0.1 594,568 B and sf1 911,011 B, are both under the 4 MiB gate, so
 # both take the HOF route; only corpora over 4 MiB reach the kernel.
-# Override with SPARK_GRAFT_KERNEL_MIN_BYTES.
-import os as _os
-
-_KERNEL_MIN_BYTES = int(_os.environ.get("SPARK_GRAFT_KERNEL_MIN_BYTES", 4 * 1024 * 1024))
+_KERNEL_MIN_BYTES = 4 * 1024 * 1024
 
 
 def _kernel_input(docs: DataFrame) -> bool:
     """True when `docs` is big enough that the vectorized fingerprint
-    kernels beat the interpreted HOF forms (Catalyst size estimate —
-    the same statistic autoBroadcastJoinThreshold routes on). Streaming
-    frames have no size estimate and keep the streamable HOF forms."""
-    if docs.isStreaming:
-        return False
-    try:
-        size = int(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return False
-    # Long.MaxValue is Catalyst's "unknown" sentinel (e.g. LogicalRDD
-    # from createDataFrame): keep the HOF form there — real corpora come
-    # from files/tables whose estimates exist, and unknown-size test
-    # frames should take the same plan the bench SFs take.
-    return _KERNEL_MIN_BYTES <= size < (1 << 63) - 1
+    kernels beat the interpreted HOF forms. An unknown size (streaming
+    frames, createDataFrame test frames) keeps the HOF forms: real
+    corpora come from files whose estimates exist, and unknown-size
+    frames should take the same plan the bench SFs take."""
+    size = plan_bytes(docs)
+    return size is not None and size >= _KERNEL_MIN_BYTES
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

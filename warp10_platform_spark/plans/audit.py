@@ -14,6 +14,27 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 
+# Catalyst's "size unknown" sentinel: Statistics.sizeInBytes defaults to
+# Long.MaxValue (spark.sql.defaultSizeInBytes) for leaves it cannot
+# measure, e.g. a LogicalRDD from createDataFrame, and products of
+# estimates can exceed it.
+_UNKNOWN_SIZE = (1 << 63) - 1
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of `df` in bytes — the optimized plan's
+    statistics, the same figure autoBroadcastJoinThreshold routes on — or
+    None when the size is unknown: a streaming frame, a probe that raises,
+    or an estimate at the _UNKNOWN_SIZE sentinel."""
+    if df.isStreaming:
+        return None
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — any probe failure means "unknown"
+        return None
+    return size if size < _UNKNOWN_SIZE else None
+
+
 def explain_formatted(df: DataFrame) -> str:
     """The formatted explain string (what `.explain('formatted')` prints)."""
     jvm = df.sparkSession._jvm

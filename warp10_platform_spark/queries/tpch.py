@@ -6,10 +6,9 @@ pushdown to parquet, broadcast joins for dims, partial aggregation.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import functions as F
 
+from warp10_platform_spark.plans import plan_bytes
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.sources.tables import epoch_us_col, load_table
 
@@ -20,7 +19,7 @@ from warp10_platform_spark.sources.tables import epoch_us_col, load_table
 # and the eager pre-aggregation alone carries the win. Measured points:
 # filtered-orders estimate is 2.7 MB / 30 MB / 300 MB at sf0.1/1/10 —
 # all far below the 1 GB default (keys broadcast ≈ tens of MB there).
-_Q3_SEMI_MAX_BYTES = int(_os.environ.get("SPARK_GRAFT_Q3_SEMI_MAX_BYTES", 1 << 30))
+_Q3_SEMI_MAX_BYTES = 1 << 30
 
 # Money columns are fixed-point cents (quantization invariant asserted in
 # tests/test_tpch_quantization.py), so sums accumulate as UNSCALED LONGS:
@@ -150,11 +149,8 @@ def tpch_q3(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp_ntz"))
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp_ntz"))
     oc = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-    try:
-        o_bytes = int(o._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        o_bytes = 1 << 62
-    if o_bytes < _Q3_SEMI_MAX_BYTES:
+    o_bytes = plan_bytes(o)  # unknown size: no semi prune
+    if o_bytes is not None and o_bytes < _Q3_SEMI_MAX_BYTES:
         li = li.join(
             F.broadcast(oc.select("o_orderkey")), li.l_orderkey == F.col("o_orderkey"), "left_semi"
         )

@@ -26,14 +26,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from warp10_platform_spark.plans import plan_bytes
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.sources.tables import bucketed_fact, load_table
 
 # Integer-cents fragments (see tpch.py header for the discipline).
 # q21 exchange-keying size gate — see tpch_q21_waiting_supplier's docstring
-import os as _os
-
-_Q21_KEYED_MAX_BYTES = int(_os.environ.get("SPARK_GRAFT_Q21_KEYED_MAX_BYTES", 512 * 1024 * 1024))
+_Q21_KEYED_MAX_BYTES = 512 * 1024 * 1024
 
 _PC = "CAST(l_extendedprice*100 + 0.5D AS BIGINT)"
 _DC = "CAST(l_discount*100 + 0.5D AS BIGINT)"
@@ -405,8 +404,8 @@ def tpch_q21_waiting_supplier(spark, sf_dir):
     2.1 s) where the elided exchange dominates, and LOSES at sf10 (3/4
     pairs, ~7.6 vs ~6.9 s) where raw-row shuffle bytes overtake it — so
     the keying is routed on the fact's size estimate (same statistic
-    autoBroadcastJoinThreshold uses): below _Q21_KEYED_MAX_BYTES (512 MB,
-    env-overridable) the exchange is keyed; above, the groupBy keeps its
+    autoBroadcastJoinThreshold uses): below _Q21_KEYED_MAX_BYTES (512 MB)
+    the exchange is keyed; above, the groupBy keeps its
     map-side partials and the window pays its own exchange. Results are
     identical either way (verified at sf1/sf10; oracle-gated)."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -417,11 +416,8 @@ def tpch_q21_waiting_supplier(spark, sf_dir):
         "CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY THEN 1 ELSE 0 END"
     )
     lsj = li.join(o.select("o_orderkey", "o_orderdate"), li.l_orderkey == F.col("o_orderkey"))
-    try:
-        li_bytes = int(li._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        li_bytes = 0
-    if 0 < li_bytes < _Q21_KEYED_MAX_BYTES:
+    li_bytes = plan_bytes(li)  # unknown size: no keying
+    if li_bytes is not None and 0 < li_bytes < _Q21_KEYED_MAX_BYTES:
         lsj = lsj.repartition("l_orderkey")
     ls = lsj.groupBy("l_orderkey", "l_suppkey").agg(F.max(late).alias("late"))
     w = Window.partitionBy("l_orderkey")

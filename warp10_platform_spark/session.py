@@ -49,10 +49,7 @@ def get_spark(app_name: str = "warp10-platform-spark", shuffle_partitions: int |
         # the coalesce target is max(stage_bytes/parallelism, this floor),
         # so the floor only binds when a stage's bytes are tiny — at real
         # scale bytes/parallelism dominates and behavior is unchanged.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # r9 (measured, guide §1.2 order-of-operations step 3): Spark's
         # whole-stage-codegen class cache holds 100 entries by default;
         # this engine's query surface compiles far more distinct codegen
@@ -62,11 +59,8 @@ def get_spark(app_name: str = "warp10-platform-spark", shuffle_partitions: int |
         # (alternated A/B, two pairs each way; periodic-GC alone was
         # noise). Not a core-count tune: any long-running deployment
         # serving this operator surface cycles >100 generated classes.
-        # Cost is metaspace for the cached classes — bounded by the knob.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-        )
+        # Cost is metaspace for the cached classes — bounded by the cap.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # r9: PySpark's DataFrame-debugging call-site capture (default on)
         # adds ~3 py4j round trips + a Python stack walk to EVERY
         # DataFrame API call, purely to enrich error messages; off, plan
@@ -75,34 +69,10 @@ def get_spark(app_name: str = "warp10-platform-spark", shuffle_partitions: int |
         # behavior is unchanged apart from the call-site annotation.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    # Post-shuffle partition sizing (r8 verdict #6 asked for byte-derived
-    # partitions; the r9 measurement REJECTED it as the default): byte-
-    # targeted AQE coalescing (parallelismFirst=false, 16m advisory) cost
-    # +60% exec at sf0.1 because this engine's hottest shuffles are
-    # CPU-dense but BYTE-tiny — minhash/simhash signature windows and the
-    # HOF-cosine cell join collapsed to 1-2 serial tasks, and an explicit
-    # repartition pin for the latter disabled AQE skew-splitting of the
-    # degenerate one-cell join (2.6s → 17.8s). Parallelism-first with
-    # partitions = cores is the right default for mixed compute density;
-    # SPARK_GRAFT_PARTITION_MODE exists for controlled experiments:
-    # "cores" (default), an integer (pin that count), or "bytes" (the
-    # rejected advisory configuration, kept for A/B probes).
-    mode = os.environ.get("SPARK_GRAFT_PARTITION_MODE", "cores")
-    if shuffle_partitions is not None:
-        # explicit caller choice (tests pin 8)
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    elif mode == "bytes":
-        builder = (
-            builder.config("spark.sql.shuffle.partitions", str(max(4 * cpus_i, 64)))
-            .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-            .config(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "16m"),
-            )
-            .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-        )
-    elif mode.isdigit():
-        builder = builder.config("spark.sql.shuffle.partitions", mode)
-    else:
-        builder = builder.config("spark.sql.shuffle.partitions", str(cpus_i))
-    return builder.getOrCreate()
+    # Post-shuffle partitions = cores, parallelism-first (r9 measured the
+    # byte-targeted alternative and rejected it: this engine's hottest
+    # shuffles are CPU-dense but byte-tiny, and byte-sized coalescing
+    # serialized them onto 1-2 tasks, +60 % exec at sf0.1 — recorded in
+    # OPTIMIZATION_r09.md). An explicit caller choice wins (tests pin 8).
+    partitions = shuffle_partitions if shuffle_partitions is not None else cpus_i
+    return builder.config("spark.sql.shuffle.partitions", str(partitions)).getOrCreate()

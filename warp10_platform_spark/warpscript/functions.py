@@ -18,7 +18,21 @@ from warp10_platform_spark.core import timeunits as _tuc
 from warp10_platform_spark.core.frame import GTSFrame
 from warp10_platform_spark.sources.tables import canonical_points, events_points
 
-REGISTRY: dict[str, Callable] = {}
+
+class _Registry(dict):
+    """Name → function table that binds each WarpScript name once, like the
+    reference's single block of addNamedWarpScriptFunction calls
+    (WarpScriptLib.java:1966-3570): binding a name that is already bound
+    raises, so a second definition fails at import instead of silently
+    shadowing the first."""
+
+    def __setitem__(self, name, fn):
+        if name in self:
+            raise ValueError(f"WarpScript function {name!r} is already registered")
+        super().__setitem__(name, fn)
+
+
+REGISTRY: dict[str, Callable] = _Registry()
 
 
 def register(*names: str):
@@ -165,10 +179,12 @@ def _load(st):
 
 @register("EVAL", "RUN")
 def _eval(st):
-    from warp10_platform_spark.warpscript.stack import Macro
+    from warp10_platform_spark.warpscript.stack import Macro, NativeMacro
 
     v = st.pop()
-    if isinstance(v, Macro):
+    if isinstance(v, NativeMacro):
+        v.fn(st)
+    elif isinstance(v, Macro):
         st.exec_macro(v)
     elif isinstance(v, str):
         st.exec(v)
@@ -312,7 +328,7 @@ REGISTRY["NOW"] = lambda st: st.push(int(_time.time() * _tuc.UNITS_PER_S))
 
 _AGG_BASENAMES = (
     "sum mean min max count first last median sd sd.pop var var.pop delta rate rms "
-    "join and or argmin argmax mad mean.circular shannonentropy.0 highest lowest percentile"
+    "join and or argmin argmax mad mean.circular shannonentropy.0"
 ).split()
 for _fam in ("bucketizer", "mapper", "reducer"):
     for _bn in _AGG_BASENAMES:
@@ -580,18 +596,152 @@ def _bucketize(st):
     ))
 
 
+# ---- parameterized mappers with their own operators (registrations
+# WarpScriptLib.java:2770-2830): each factory pushes a (name, param) spec
+# that MAP looks up in _MAPPER_TABLE ----
+
+for _nm in ("mapper.dotproduct", "mapper.dotproduct.positive",
+            "mapper.dotproduct.sigmoid", "mapper.dotproduct.tanh"):
+    REGISTRY[_nm] = (lambda name: lambda st: st.push((name, [float(x) for x in st.pop()])))(_nm)
+
+
+def _npdf_factory(st):
+    """mu sigma mapper.npdf (MapperNPDF.Builder:43-63: pops sigma, then
+    mu)."""
+    sigma = float(st.pop())
+    mu = float(st.pop())
+    st.push(("mapper.npdf", (mu, sigma)))
+
+
+REGISTRY["mapper.npdf"] = _npdf_factory
+REGISTRY["mapper.replace"] = lambda st: st.push(("mapper.replace", st.pop()))
+
+
+def _regexp_replace_factory(st):
+    """'regex' 'replacement' mapper.regexp.replace
+    (MapperRegExpReplace.Builder:43-55: pops replacement, then regex)."""
+    rep = str(st.pop())
+    pat = str(st.pop())
+    st.push(("mapper.regexp.replace", (pat, rep)))
+
+
+REGISTRY["mapper.regexp.replace"] = _regexp_replace_factory
+REGISTRY["mapper.regexp.match"] = lambda st: st.push(("mapper.regexp.match", str(st.pop())))
+
+for _nm in ("mapper.geo.within", "mapper.geo.outside", "mapper.geo.fence"):
+    REGISTRY[_nm] = (lambda name: lambda st: st.push((name, st.pop())))(_nm)
+REGISTRY["mapper.geo.approximate"] = lambda st: st.push(("mapper.geo.approximate", int(st.pop())))
+REGISTRY["mapper.sd.welford"] = lambda st: st.push("mapper.sd.welford")
+REGISTRY["mapper.var.welford"] = lambda st: st.push("mapper.var.welford")
+
+
+def _shape_pred(shape):
+    from warp10_platform_spark.operators import geocells as GC
+    from warp10_platform_spark.operators.wkt import shape_contains_expr
+
+    if isinstance(shape, GC.GeoCells):
+        from warp10_platform_spark.core.geoxp import to_geoxp_col
+
+        return shape.contains_hh_expr(to_geoxp_col(F.col("lat"), F.col("lon")))
+    return shape_contains_expr(shape, F.col("lat"), F.col("lon"))
+
+
+def _m_dot(activation):
+    def run(gf, weights, pre, post):
+        from warp10_platform_spark.operators.mapper import dotproduct_mapper
+
+        return GTSFrame(
+            dotproduct_mapper(gf.df, weights, pre, post, value_col=gf.value_col,
+                              activation=activation),
+            gf.bucketspec, "v_mapped",
+        )
+
+    return run
+
+
+def _m_npdf(gf, p, pre, post):
+    from warp10_platform_spark.operators.mapper import npdf_mapper
+
+    mu, sigma = p
+    return GTSFrame(npdf_mapper(gf.df, mu, sigma, value_col=gf.value_col), gf.bucketspec, "v_mapped")
+
+
+def _m_scalar(engine_name):
+    def run(gf, p, pre, post):
+        return gf.map_scalar(engine_name, p)
+
+    return run
+
+
+def _m_geo_within(gf, shape, pre, post):
+    return GTSFrame(
+        gf.df.where(F.col("lat").isNotNull() & _shape_pred(shape)), gf.bucketspec, gf.value_col
+    )
+
+
+def _m_geo_outside(gf, shape, pre, post):
+    return GTSFrame(
+        gf.df.where(F.col("lat").isNull() | ~_shape_pred(shape)), gf.bucketspec, gf.value_col
+    )
+
+
+def _m_geo_fence(gf, shape, pre, post):
+    # MapperGeoFence.apply: value := boolean inside-ness, location kept
+    return GTSFrame(
+        gf.df.withColumn("v_mapped", F.col("lat").isNotNull() & _shape_pred(shape)),
+        gf.bucketspec, "v_mapped",
+    )
+
+
+def _m_geo_approximate(gf, res, pre, post):
+    # MapperGeoApproximate: resolution 2..32 even → bits per axis = res/2
+    from warp10_platform_spark.operators.geo import geo_approximate
+
+    return GTSFrame(geo_approximate(gf.df, bits=max(1, res // 2)), gf.bucketspec, gf.value_col)
+
+
+def _m_welford(base):
+    def run(gf, p, pre, post):
+        return gf.map_aggregate(base, pre, post)
+
+    return run
+
+
+_MAPPER_TABLE = {
+    "mapper.dotproduct": _m_dot(None),
+    "mapper.dotproduct.positive": _m_dot("positive"),
+    "mapper.dotproduct.sigmoid": _m_dot("sigmoid"),
+    "mapper.dotproduct.tanh": _m_dot("tanh"),
+    "mapper.npdf": _m_npdf,
+    "mapper.replace": _m_scalar("mapper.replace"),
+    "mapper.regexp.replace": _m_scalar("mapper.regexp-replace"),
+    "mapper.regexp.match": _m_scalar("mapper.regexp-match"),
+    "mapper.geo.within": _m_geo_within,
+    "mapper.geo.outside": _m_geo_outside,
+    "mapper.geo.fence": _m_geo_fence,
+    "mapper.geo.approximate": _m_geo_approximate,
+    "mapper.sd.welford": _m_welford("mapper.sd"),
+    "mapper.var.welford": _m_welford("mapper.var"),
+}
+
+
 @register("MAP")
 def _map(st):
     """[ gts… mapper pre post occurrences ] MAP (MAP.java:39-47). The
     mapper slot holds an aggregator name, a scalar-mapper name, or a
-    (scalar-mapper, param) factory tuple."""
+    (scalar-mapper, param) factory tuple; names in _MAPPER_TABLE run
+    their own operator."""
     from warp10_platform_spark.operators.mapper import _BINARY as _SCB
     from warp10_platform_spark.operators.mapper import _UNARY as _SCU
 
     args = st.pop()
     gts, mapper, pre, post, _occ = args[:-4], args[-4], args[-3], args[-2], args[-1]
     gf = _as_frame(gts if len(gts) != 1 else gts[0])
-    if isinstance(mapper, tuple) and mapper[0] == "macromapper":
+    name = mapper[0] if isinstance(mapper, tuple) else mapper
+    if isinstance(name, str) and name in _MAPPER_TABLE:
+        param = mapper[1] if isinstance(mapper, tuple) else None
+        st.push(_MAPPER_TABLE[name](gf, param, pre, post))
+    elif isinstance(mapper, tuple) and mapper[0] == "macromapper":
         from warp10_platform_spark.functions.custom import macro_mapper
 
         st.push(GTSFrame(
@@ -769,9 +919,197 @@ def macrofilter_semijoin(df, tokens, symbols: dict | None = None,
     return df.join(kept, ["class", "labels_key"], "left_semi")
 
 
+# ---- filter specs with their own operators (registrations
+# WarpScriptLib.java:2770-2830): FilterAny.java, FilterByLabels.java with
+# attribute checking, FilterByMetadata.java and LatencyFilter.java. FILTER
+# looks these names up in _FILTER_TABLE. `filter.all.X t` retains series
+# where NO point matches the complement comparator (the reference builds
+# all.* from the complemented any.* builder, :2796-2803). ----
+
+_CMP_EXPR = {
+    "eq": lambda c, t: c == t,
+    "ne": lambda c, t: c != t,
+    "gt": lambda c, t: c > t,
+    "ge": lambda c, t: c >= t,
+    "lt": lambda c, t: c < t,
+    "le": lambda c, t: c <= t,
+}
+_ALL_COMPLEMENT = {"ne": "eq", "lt": "ge", "le": "gt", "ge": "lt", "gt": "le", "eq": "ne"}
+
+for _c in _CMP_EXPR:
+    REGISTRY[f"filter.any.{_c}"] = _param_filter(f"filter.any.{_c}")
+    REGISTRY[f"filter.all.{_c}"] = _param_filter(f"filter.all.{_c}")
+REGISTRY["filter.byattr"] = _param_filter("filter.byattr")
+REGISTRY["filter.bylabelsattr"] = _param_filter("filter.bylabelsattr")
+REGISTRY["filter.bymetadata"] = _param_filter("filter.bymetadata")
+
+
+def _latency_filter_factory(st):
+    """min max [options] filter.latencies (LatencyFilter.Builder:110-140:
+    pops options list, then max latency, then min latency)."""
+    options = st.pop()
+    mx = int(st.pop())
+    mn = int(st.pop())
+    st.push(("filter.latencies", (mn, mx, [str(o) for o in options])))
+
+
+REGISTRY["filter.latencies"] = _latency_filter_factory
+
+
+def _selector_pred(col, sel: str):
+    """Reference label-selector semantics (FilterByLabels.java:80-92):
+    '=' prefix or bare → exact match; '~' prefix → regex."""
+    if sel.startswith("~"):
+        return col.isNotNull() & col.rlike(sel[1:])
+    if sel.startswith("="):
+        sel = sel[1:]
+    return col.isNotNull() & (col == F.lit(sel))
+
+
+def _series_with_any(df, pred, how):
+    """Keep (how="left_semi") or drop (how="left_anti") whole series that
+    have >=1 point matching pred — a series-key join, so a surviving
+    series keeps all its points."""
+    keys = df.where(pred).select("gts_id").distinct()
+    return df.join(keys, "gts_id", how)
+
+
+def _latencies(frames, mn, mx, options):
+    """filter.latencies (LatencyFilter.filter:200-420): series[0] =
+    uplink packets (LONG ids), rest = downlinks; match equal values with
+    downlink tick in [uptick+min, uptick+max]; emit the option-selected
+    derived series. Spark shape: value equi-join + tick range predicate
+    (range join), aggregated per requested output."""
+    if not isinstance(frames, list) or len(frames) < 2:
+        raise ValueError("filter.latencies expects [uplink downlink...] GTS list")
+    def _pkt(gf):
+        # packet id: LONG value column when present, else the frame's
+        # value column cast (construct pipelines carry v_double)
+        if "v_long" in gf.df.columns:
+            return F.coalesce(F.col("v_long"), F.col(gf.value_col).cast("long"))
+        return F.col(gf.value_col).cast("long")
+
+    up = frames[0].df.select(
+        F.col("class").alias("u_class"), _pkt(frames[0]).alias("pkt"),
+        F.col("ts").alias("u_ts"),
+    )
+    outs = []
+    for dgf in frames[1:]:
+        d = dgf.df.select(
+            F.col("class").alias("d_class"),
+            _pkt(dgf).alias("pkt"), F.col("ts").alias("d_ts"),
+        )
+        m = up.join(d, "pkt").where(
+            (F.col("d_ts") - F.col("u_ts") >= mn) & (F.col("d_ts") - F.col("u_ts") <= mx)
+        ).withColumn("lat_us", F.col("d_ts") - F.col("u_ts"))
+        if "uplink.latency.min" in options or "uplink.latency.max" in options:
+            aggs = []
+            if "uplink.latency.min" in options:
+                aggs.append(F.min("lat_us").alias("v_min"))
+            if "uplink.latency.max" in options:
+                aggs.append(F.max("lat_us").alias("v_max"))
+            g = m.groupBy("u_class", "u_ts").agg(*aggs)
+            if "uplink.latency.min" in options:
+                outs.append(g.select(
+                    F.concat(F.col("u_class"), F.lit(":uplink.latency.min")).alias("class"),
+                    F.col("u_ts").alias("ts"), F.col("v_min").cast("double").alias("v_double"),
+                ))
+            if "uplink.latency.max" in options:
+                outs.append(g.select(
+                    F.concat(F.col("u_class"), F.lit(":uplink.latency.max")).alias("class"),
+                    F.col("u_ts").alias("ts"), F.col("v_max").cast("double").alias("v_double"),
+                ))
+        for opt, agg, suffix in (
+            ("downlink.latency.min", F.min("lat_us"), ":downlink.latency.min"),
+            ("downlink.latency.max", F.max("lat_us"), ":downlink.latency.max"),
+            ("downlink.matches", F.count("lat_us"), ":downlink.matches"),
+        ):
+            if opt in options:
+                g = m.groupBy("d_class", "d_ts").agg(agg.alias("v"))
+                outs.append(g.select(
+                    F.concat(F.col("d_class"), F.lit(suffix)).alias("class"),
+                    F.col("d_ts").alias("ts"), F.col("v").cast("double").alias("v_double"),
+                ))
+    if not outs:
+        raise ValueError("filter.latencies: no recognized option requested")
+    u = outs[0]
+    for o in outs[1:]:
+        u = u.unionByName(o)
+    from warp10_platform_spark.core.schema import with_gts_id
+
+    full = u.selectExpr(
+        "class", "cast(map() as map<string,string>) AS labels",
+        "cast(map() as map<string,string>) AS attributes", "ts",
+        "cast(null as double) AS lat", "cast(null as double) AS lon",
+        "cast(null as long) AS elev", "cast(null as long) AS v_long",
+        "v_double", "cast(null as boolean) AS v_bool", "cast(null as string) AS v_string",
+    )
+    return GTSFrame(with_gts_id(full), None, "v_double")
+
+
+def _f_any(cmp):
+    def run(gf, thr, raw):
+        return GTSFrame(
+            _series_with_any(gf.df, _CMP_EXPR[cmp](F.col(gf.value_col), F.lit(thr)), "left_semi"),
+            gf.bucketspec, gf.value_col,
+        )
+
+    return run
+
+
+def _f_all(cmp):
+    comp = _ALL_COMPLEMENT[cmp]
+
+    def run(gf, thr, raw):
+        return GTSFrame(
+            _series_with_any(gf.df, _CMP_EXPR[comp](F.col(gf.value_col), F.lit(thr)), "left_anti"),
+            gf.bucketspec, gf.value_col,
+        )
+
+    return run
+
+
+def _f_byattr(gf, clauses, raw):
+    pred = F.lit(True)
+    for k, sel in clauses.items():
+        pred = pred & _selector_pred(F.element_at(F.col("attributes"), k), sel)
+    return GTSFrame(gf.df.where(pred), gf.bucketspec, gf.value_col)
+
+
+def _f_bylabelsattr(gf, clauses, raw):
+    # FilterByLabels.filter with checkLabels+checkAttributes: the label
+    # value if present, else the attribute value (:121-135).
+    pred = F.lit(True)
+    for k, sel in clauses.items():
+        v = F.coalesce(F.element_at(F.col("labels"), k), F.element_at(F.col("attributes"), k))
+        pred = pred & _selector_pred(v, sel)
+    return GTSFrame(gf.df.where(pred), gf.bucketspec, gf.value_col)
+
+
+def _f_bymetadata(gf, sel_frames, raw):
+    sel = _as_frame(sel_frames)
+    keys = sel.df.select("class", "labels_key").distinct()
+    return GTSFrame(
+        gf.df.join(F.broadcast(keys), ["class", "labels_key"], "left_semi"),
+        gf.bucketspec, gf.value_col,
+    )
+
+
+_FILTER_TABLE = {
+    "filter.byattr": _f_byattr,
+    "filter.bylabelsattr": _f_bylabelsattr,
+    "filter.bymetadata": _f_bymetadata,
+    "filter.latencies": lambda gf, p, raw: _latencies(raw, *p),
+}
+for _c in _CMP_EXPR:
+    _FILTER_TABLE[f"filter.any.{_c}"] = _f_any(_c)
+    _FILTER_TABLE[f"filter.all.{_c}"] = _f_all(_c)
+
+
 @register("FILTER")
 def _filter(st):
-    """[ [gts…] [label …] filterspec ] FILTER (FILTER.java:39)."""
+    """[ [gts…] [label …] filterspec ] FILTER (FILTER.java:39); names in
+    _FILTER_TABLE run their own operator."""
     args = st.pop()
     gf = _as_frame(args[0])
     spec = args[-1]
@@ -825,6 +1163,8 @@ def _filter(st):
                 key_col = F.concat_ws("\x00", F.col("class"), F.col("labels_key"))
                 keys = [c + "\x00" + lk for c, lk in kept]
                 st.push(GTSFrame(gf.df.where(key_col.isin(keys)), gf.bucketspec, gf.value_col))
+    elif name in _FILTER_TABLE:
+        st.push(_FILTER_TABLE[name](gf, param, args[0]))
     else:
         raise ValueError(f"unknown filter {name}")
 
@@ -1041,11 +1381,6 @@ def _stop(st):
 def _assert(st):
     if not st.pop():
         raise RuntimeError("ASSERT failed")
-
-
-@register("MSGFAIL")
-def _msgfail(st):
-    raise RuntimeError(str(st.pop()))
 
 
 @register("DEFINED")
@@ -1471,7 +1806,6 @@ def _tselements(st):
 
 # ---------- additional GTS bindings (engine operators already built) ----------
 
-_frame_method("RENAME", "rename", n_params=1)
 _frame_method("ATINDEX", "atindex", n_params=1)
 _frame_method("ATTICK", "attick", n_params=1)
 _frame_method("CROP", "crop")
@@ -1482,12 +1816,40 @@ _frame_method("RANGECOMPACT", "rangecompact")
 _frame_method("UNIQUE", "unique")
 
 
+# NEWGTS/MAKEGTS track a construct frame's (class, labels) identity
+# driver-side (`ident`) so ADDVALUE works on zero-row frames; RENAME and
+# RELABEL carry that identity through, as RENAME.java / RELABEL.java
+# rewrite the Metadata in place in the reference.
+
+@register("RENAME")
+def _rename(st):
+    """gts 'name' RENAME (RENAME.java: a leading '+' appends, :52)."""
+    name = st.pop()
+    src = st.pop()
+    out = _as_frame(src).rename(name)
+    si = getattr(src, "ident", None)
+    if isinstance(out, GTSFrame) and si is not None and isinstance(name, str):
+        out.ident = (si[0] + name[1:] if name.startswith("+") else name, si[1])
+    st.push(out)
+
+
 @register("RELABEL")
 def _relabel(st):
     """gts { changes } RELABEL (RELABEL.java: empty-string value removes a
     label; the engine method recomputes gts_id)."""
     changes = st.pop()
-    st.push(_as_frame(st.pop()).relabel(changes))
+    src = st.pop()
+    out = _as_frame(src).relabel(changes)
+    si = getattr(src, "ident", None)
+    if isinstance(out, GTSFrame) and si is not None and isinstance(changes, dict):
+        labels = dict(si[1])
+        for k, v in changes.items():
+            if v == "" or v is None:
+                labels.pop(k, None)
+            else:
+                labels[k] = str(v)
+        out.ident = (si[0], labels)
+    st.push(out)
 
 
 @register("NAME")
@@ -1696,9 +2058,6 @@ COLUMN_BINDINGS = {
 
 
 # ---------- sets / maps ----------
-
-REGISTRY["->SET"] = lambda st: st.push(set(st.pop()))
-REGISTRY["SET->"] = lambda st: st.push(sorted(st.pop(), key=repr))
 
 def _setop(f):
     def inner(st):
@@ -2127,11 +2486,37 @@ for _var in ("add.ignore-nulls", "mul.ignore-nulls", "and.ignore-nulls", "or.ign
     _base = "op." + _var.split(".")[0]
     REGISTRY[f"op.{_var}"] = (lambda name: lambda st: st.push(name))(_base)
 
+# Welford / null-policy aggregator aliases. Welford's streaming update
+# yields the identical sample variance/sd as the two-pass formula, so the
+# alias shares the batch Catalyst expression (Welford matters for the
+# reference's single-pass engine, not for Spark's agg).
+for _alias, _base in (
+    ("bucketizer.sd.welford", "bucketizer.sd"),
+    ("bucketizer.var.welford", "bucketizer.var"),
+    ("reducer.sd.welford", "reducer.sd"),
+    ("reducer.var.welford", "reducer.var"),
+    ("reducer.sd.welford.forbid-nulls", "reducer.sd"),
+    ("reducer.var.welford.forbid-nulls", "reducer.var"),
+    ("reducer.sd.forbid-nulls", "reducer.sd"),
+    ("reducer.var.forbid-nulls", "reducer.var"),
+    ("reducer.percentile.forbid-nulls", "reducer.percentile"),
+    ("reducer.mean.circular.exclude-nulls", "reducer.mean.circular"),
+    ("reducer.join.forbid-nulls", "reducer.join"),
+    ("reducer.join.nonnull", "reducer.join"),
+):
+    REGISTRY[_alias] = (lambda b: lambda st: st.push(b))(_base)
+
+# reducer.join.urlencoded URL-encodes each value before joining
+# (Join.java with urlencode=true) — own expression in bucketize.py.
+REGISTRY["reducer.join.urlencoded"] = lambda st: st.push("reducer.join.urlencoded")
+
 # filler tokens + the generic FILL dispatcher
 for _fn in ("next", "previous", "trend", "interpolate", "linear", "akima",
             "spline", "newton", "lowess", "rlowess"):
     _full = f"filler.{_fn}"
     REGISTRY[_full] = (lambda name: lambda st: st.push(name))(_full)
+# filler.value: FILLVALUE's FILL-framework form (FillerValue builder)
+REGISTRY["filler.value"] = lambda st: st.push(("filler.value", st.pop()))
 
 
 @register("FILL")
@@ -2141,6 +2526,9 @@ def _fill(st):
     args = st.pop()
     gf = _as_frame(args[0] if isinstance(args, list) else args)
     filler = args[-1] if isinstance(args, list) else st.pop()
+    if isinstance(filler, tuple) and filler[0] == "filler.value":
+        st.push(gf.fillvalue(filler[1]))
+        return
     name = filler.replace("filler.", "")
     if name == "previous":
         st.push(gf.fillprevious())

@@ -558,14 +558,10 @@ def _resets(st):
     st.push(GTSFrame(gf.df.withColumn(gf.value_col, v + drop), gf.bucketspec, gf.value_col))
 
 
-@register("FETCHLONG", "FETCHDOUBLE", "FETCHBOOLEAN", "FETCHSTRING")
-def _fetch_typed(st):
+def _mk_fetch_typed(col):
     """[ selector {labels} start end ] FETCHLONG/… (FETCHLONG.java):
     FETCH constrained to one value type column."""
-    raise RuntimeError("bound separately")  # pragma: no cover
 
-
-def _mk_fetch_typed(col):
     def fn(st):
         args = st.pop()
         fetch = REGISTRY["FETCH"]
@@ -1238,13 +1234,6 @@ REGISTRY["BINTOHEX"] = lambda st: st.push(bytes(
 REGISTRY["HEXTOBIN"] = lambda st: st.push("".join(f"{b:08b}" for b in bytes.fromhex(str(st.pop()))))
 REGISTRY["B64TOHEX"] = lambda st: st.push(_b64.b64decode(str(st.pop())).hex())
 REGISTRY["HEXTOB64"] = lambda st: st.push(_b64.b64encode(bytes.fromhex(str(st.pop()))).decode("ascii"))
-
-
-@register("OPB64->")
-def _opb64to(st):
-    from warp10_platform_spark.core.gtscodec import opb64_decode
-
-    st.push(opb64_decode(str(st.pop())))
 
 
 @register("OPB64TOHEX")
@@ -2630,6 +2619,90 @@ def _goldwrap(st):
     st.push(gold(v))
 
 
+# ---- multivalue tier — WRAPMV/WRAPMV!, MVVALUES/MVTICKS/MVLOCATIONS/
+#      MVELEVATIONS/MVHHCODES, MVTICKSPLIT/MVINDEXSPLIT, ->MVSTRING
+#      (registrations WarpScriptLib.java:2605-2615; core/multivalue.py) ----
+
+def _element_or_list(fn):
+    """ElementOrListStackFunction.apply: map over a list operand, apply
+    directly otherwise."""
+
+    def run(st):
+        v = st.pop()
+        if isinstance(v, list):
+            st.push([fn(e) for e in v])
+        else:
+            st.push(fn(v))
+
+    return run
+
+
+def _mv_wrap_fn(compress):
+    from warp10_platform_spark.core.multivalue import mv_wrap
+
+    def one(e):
+        if isinstance(e, _enc().Encoder):
+            return mv_wrap(e, compress=compress)
+        raise TypeError("WRAPMV operates on ENCODER values (use ASENCODERS on a GTS set)")
+
+    return one
+
+
+REGISTRY["WRAPMV"] = _element_or_list(_mv_wrap_fn(True))
+REGISTRY["WRAPMV!"] = _element_or_list(_mv_wrap_fn(False))
+
+
+def _mvextract_fn(element):
+    from warp10_platform_spark.core.multivalue import mvextract
+
+    def one(e):
+        if not isinstance(e, _enc().Encoder):
+            raise TypeError("MV extraction operates on ENCODER values")
+        return mvextract(e, element)
+
+    return one
+
+
+for _nm, _el in (("MVVALUES", "VALUE"), ("MVTICKS", "TICK"), ("MVLOCATIONS", "LATLON"),
+                 ("MVELEVATIONS", "ELEVATION"), ("MVHHCODES", "LOCATION")):
+    REGISTRY[_nm] = _element_or_list(_mvextract_fn(_el))
+
+
+def _mvsplit_factory(bytick):
+    def run(st):
+        from warp10_platform_spark.core.multivalue import mvsplit
+
+        Encoder = _enc().Encoder
+        renaming = None
+        selection = None
+        top = st.pop()
+        if isinstance(top, dict):
+            renaming = top
+            top = st.pop()
+        if isinstance(top, list) and top and not isinstance(top[0], Encoder):
+            selection = top
+            top = st.pop()
+        if isinstance(top, Encoder):
+            st.push(mvsplit(top, bytick, selection, renaming))
+        elif isinstance(top, list):
+            st.push([mvsplit(e, bytick, selection, renaming) for e in top])
+        else:
+            raise TypeError("MVSPLIT operates on ENCODER values or a list thereof")
+
+    return run
+
+
+REGISTRY["MVTICKSPLIT"] = _mvsplit_factory(True)
+REGISTRY["MVINDEXSPLIT"] = _mvsplit_factory(False)
+
+
+@register("->MVSTRING")
+def _to_mvstring(st):
+    from warp10_platform_spark.core.multivalue import to_mvstring
+
+    st.push(to_mvstring(st.pop()))
+
+
 # =====================================================================
 # Tranche H — constructive geometry on GeoXP coverages
 # (GeoWKT/GeoJSON → GeoXPShape; GeoUnion/GeoIntersection/GeoSubtraction
@@ -3099,6 +3172,101 @@ for _k in ("update", "delete", "meta"):
     REGISTRY[f"{_k.upper()}OFF"] = _mk_toggle(f"{_k}.enabled", False)
 
 
+def _attr_toggle(attr_name):
+    """ATTRDELTA / ATTRSKIP (functions/ATTRDELTA.java): BOOLEAN sets the
+    stack attribute, NULL pushes its current value."""
+
+    def run(st):
+        top = st.pop()
+        attrs = st.__dict__.setdefault("attributes", {})
+        if isinstance(top, bool):
+            attrs[attr_name] = top
+        elif top is None:
+            st.push(bool(attrs.get(attr_name, False)))
+        else:
+            raise TypeError("expected a BOOLEAN or NULL")
+
+    return run
+
+
+REGISTRY["ATTRDELTA"] = _attr_toggle("attributes.delta")
+REGISTRY["ATTRSKIP"] = _attr_toggle("attributes.skip")
+
+
+@register("HEADER")
+def _header(st):
+    """name value HEADER (functions/HEADER.java): set (or, with NULL,
+    clear) an X-* response header in the stack's headers attribute —
+    surfaced to the transport layer exactly like the reference's
+    ATTRIBUTE_HEADERS."""
+    value = st.pop()
+    name = st.pop()
+    if not isinstance(name, str):
+        raise TypeError("HEADER expects a header name (a string) below the value")
+    headers = st.__dict__.setdefault("attributes", {}).setdefault("headers", {})
+    if value is None:
+        headers.pop(name, None)
+    else:
+        if not name.upper().startswith("X-"):
+            raise ValueError("HEADER: only headers beginning with 'X-' can be set")
+        headers[name] = str(value)
+
+
+@register("IMPORT")
+def _import(st):
+    """namespace alias IMPORT (functions/IMPORT.java): register an alias
+    rewrite rule (longest-alias-first), applied at name-resolution time
+    by the stack dispatcher; NULL namespace removes the alias."""
+    alias = st.pop()
+    imported = st.pop()
+    if not isinstance(alias, str):
+        raise TypeError("IMPORT expects an alias string on top of the stack")
+    if imported is not None and not isinstance(imported, str):
+        raise TypeError("IMPORT expects a namespace string or NULL below the alias")
+    rules = st.__dict__.setdefault("attributes", {}).setdefault("import.rules", {})
+    if imported is None:
+        rules.pop(alias, None)
+    else:
+        rules[alias] = imported
+
+
+# ---- time guards (NOTBEFORE.java / NOTAFTER.java) ----
+
+def _instant_of(st, top) -> int:
+    if isinstance(top, str):
+        # reuse the registered ISO8601 parser (TOTIMESTAMP surface)
+        st.push(top)
+        REGISTRY["TOTIMESTAMP"](st)
+        return int(st.pop())
+    if isinstance(top, int) and not isinstance(top, bool):
+        return top
+    raise TypeError("expects a timestamp or ISO8601 datetime string")
+
+
+@register("NOTBEFORE")
+def _notbefore(st):
+    """instant NOTBEFORE (functions/NOTBEFORE.java): fail the script when
+    current time (µs) is before the instant."""
+    import time
+
+    top = st.pop()
+    instant = _instant_of(st, top)
+    if int(time.time() * _tuc.UNITS_PER_S) < instant:
+        raise RuntimeError(f"Current time is before '{top}'")
+
+
+@register("NOTAFTER")
+def _notafter(st):
+    """instant NOTAFTER (functions/NOTAFTER.java): fail when current
+    time is after the instant."""
+    import time
+
+    top = st.pop()
+    instant = _instant_of(st, top)
+    if int(time.time() * _tuc.UNITS_PER_S) > instant:
+        raise RuntimeError(f"NOTAFTER failed because the current time is after '{top}'")
+
+
 # ---- JSON forms (JSONSTRICT/JSONLOOSE/JSONPRETTY/JSONCOMPACT) ----
 
 @register("JSONSTRICT", "JSONLOOSE")
@@ -3198,6 +3366,57 @@ def _shuffle_list(st):
         st.push(out)
     else:
         st.push(v)  # frame SHUFFLE handled by the dedicated query op
+
+
+def _randpdf_factory(seeded: bool, name: str):
+    """{ value weight … } RANDPDF / SRANDPDF (RANDPDF.java:46-120): push a
+    function object drawing a value with the given cumulative
+    probabilities; SRANDPDF draws from the seeded stack PRNG."""
+    from warp10_platform_spark.warpscript.stack import NativeMacro
+
+    def build(st):
+        hist = st.pop()
+        if not isinstance(hist, dict):
+            raise TypeError(f"{name} expects a value histogram map")
+        total = float(sum(hist.values()))
+        values, cum = [], []
+        acc = 0.0
+        for k in hist:  # insertion order — deterministic per script
+            acc += float(hist[k]) / total
+            values.append(k)
+            cum.append(acc)
+
+        def draw(stk):
+            import random as _random
+
+            rng = getattr(stk, "rng", None)
+            if seeded:
+                if rng is None:
+                    raise RuntimeError(f"{name} requires a seeded PRNG (SRAND first)")
+            elif rng is None:
+                rng = _random.Random()
+            u = rng.random()
+            for v, c in zip(values, cum):
+                if u <= c:
+                    stk.push(v)
+                    return
+            stk.push(values[-1])
+
+        st.push(NativeMacro(draw, name))
+
+    return build
+
+
+REGISTRY["RANDPDF"] = _randpdf_factory(False, "RANDPDF")
+REGISTRY["SRANDPDF"] = _randpdf_factory(True, "SRANDPDF")
+
+
+@register("REF")
+def _ref(st):
+    """REF (REF.java:30-35): push the function object itself."""
+    from warp10_platform_spark.warpscript.stack import NativeMacro
+
+    st.push(NativeMacro(_ref, "REF"))
 
 
 # ---- conversions ----
@@ -4341,7 +4560,18 @@ def _optimize(st):
     pass
 
 
-# ---- geo serializers (->WKT / ->GEOJSON over shapes and coverages) ----
+# ---- geometry interchange formats (registrations WarpScriptLib.java:
+#      1011-1026): GEO.WKB/GEO.KML/GEO.GML (+ .UNIFORM) parse into a
+#      coverage; ->WKT/->GEOJSON/->WKB/->KML/->GML serialize any geometry
+#      input — a GEOSHAPE coverage, a Shape, or a WKT/GeoJSON/GML/KML
+#      string or WKB bytes (the TOGEOJSON.java:106-133 toGeometry
+#      dispatch). Codecs live in operators/geoformats.py. ----
+
+def _geoformats():
+    from warp10_platform_spark.operators import geoformats as gf
+
+    return gf
+
 
 def _cov_to_polys(cov):
     GC = _gc()
@@ -4352,14 +4582,49 @@ def _cov_to_polys(cov):
     return polys
 
 
+def _parse_geometry(v):
+    """TOGEOJSON.toGeometry for serialized inputs: bytes are WKB; strings
+    sniff '{'→GeoJSON, '<gml'→GML, '<'→KML, else WKT. Other values pass
+    through unchanged."""
+    from warp10_platform_spark.operators.wkt import parse_geojson, parse_wkt
+
+    gf = _geoformats()
+    if isinstance(v, (bytes, bytearray)):
+        return gf.parse_wkb(bytes(v))
+    if isinstance(v, str):
+        t = v.strip()
+        if t.startswith("{"):
+            return parse_geojson(t)
+        if t.startswith("<gml"):
+            return gf.parse_gml(t)
+        if t.startswith("<"):
+            return gf.parse_kml(t)
+        return parse_wkt(t)
+    return v
+
+
+def _any_to_shape(v):
+    """Any geometry input as a Shape; a coverage becomes the MULTIPOLYGON
+    of its cell bboxes (the allCells form of TOGEOJSON, which
+    TOWKB/TOKML/TOGML pivot through)."""
+    from warp10_platform_spark.operators.wkt import Shape
+
+    v = _parse_geometry(v)
+    if isinstance(v, Shape):
+        return v
+    if isinstance(v, _gc().GeoCells):
+        return Shape("MULTIPOLYGON", [[_p] for _p in _cov_to_polys(v)])
+    raise TypeError(f"not a geometry value: {type(v).__name__}")
+
+
 @register("->WKT")
 def _towkt_shape(st):
-    """shape|coverage ->WKT (TOWKT.java): WKT text; a coverage serializes
-    as the MULTIPOLYGON of its cells."""
+    """geom ->WKT (TOWKT.java): WKT text; a coverage serializes as the
+    MULTIPOLYGON of its cells."""
     from warp10_platform_spark.operators.wkt import Shape, to_wkt
 
     GC = _gc()
-    v = st.pop()
+    v = _parse_geometry(st.pop())
     if isinstance(v, GC.GeoCells):
         st.push(to_wkt(Shape("MULTIPOLYGON", [[_p] for _p in _cov_to_polys(v)])))
     else:
@@ -4368,13 +4633,13 @@ def _towkt_shape(st):
 
 @register("->GEOJSON")
 def _togeojson_shape(st):
-    """shape|coverage ->GEOJSON (TOGEOJSON.java)."""
+    """geom ->GEOJSON (TOGEOJSON.java)."""
     import json as _json
 
     from warp10_platform_spark.operators.wkt import Shape
 
     GC = _gc()
-    v = st.pop()
+    v = _parse_geometry(st.pop())
     if isinstance(v, GC.GeoCells):
         coords = [[[list(pt) for pt in ring] + [list(ring[0])]] for ring in _cov_to_polys(v)]
         st.push(_json.dumps({"type": "MultiPolygon", "coordinates": coords}))
@@ -4389,6 +4654,44 @@ def _togeojson_shape(st):
                 [[list(p) for p in r] + [list(r[0])] for r in poly] for poly in v.coords]}))
     else:
         raise TypeError("->GEOJSON operates on a shape or coverage")
+
+
+@register("->WKB")
+def _to_wkb(st):
+    """geom ->WKB (TOWKB.java): WKB bytes, big-endian like the JTS
+    WKBWriter the reference delegates to."""
+    st.push(_geoformats().to_wkb(_any_to_shape(st.pop())))
+
+
+@register("->KML")
+def _to_kml(st):
+    """geom ->KML (TOKML.java): unprefixed GML2 grammar, multi-geometries
+    wrapped in <MultiGeometry>."""
+    st.push(_geoformats().to_kml(_any_to_shape(st.pop())))
+
+
+@register("->GML")
+def _to_gml(st):
+    """geom ->GML (TOGML.java): GML2 with the gml: prefix."""
+    st.push(_geoformats().to_gml(_any_to_shape(st.pop())))
+
+
+def _geo_parse_factory(parse_name):
+    def run(st):
+        # same contract as GEO.WKT: 'geom' pcterror|res inside → coverage
+        inside = st.pop()
+        pct = st.pop()
+        raw = st.pop()
+        parse = getattr(_geoformats(), parse_name)
+        shape = parse(bytes(raw) if parse_name == "parse_wkb" else str(raw))
+        st.push(_to_coverage(shape, pct, inside))
+
+    return run
+
+
+REGISTRY["GEO.WKB"] = REGISTRY["GEO.WKB.UNIFORM"] = _geo_parse_factory("parse_wkb")
+REGISTRY["GEO.KML"] = REGISTRY["GEO.KML.UNIFORM"] = _geo_parse_factory("parse_kml")
+REGISTRY["GEO.GML"] = REGISTRY["GEO.GML.UNIFORM"] = _geo_parse_factory("parse_gml")
 
 
 @register("LOCATIONOFFSET")
@@ -4412,6 +4715,36 @@ def _bbox_gts(st):
 
 
 # ---- vector/matrix literal tokens ----
+
+@register("SHAPE")
+def _shape(st):
+    """[fast] nested-list SHAPE (functions/shape/SHAPE.java): the tensor
+    shape as a list of longs; validates rectangularity unless fast."""
+    top = st.pop()
+    fast = False
+    if isinstance(top, bool):
+        fast = top
+        top = st.pop()
+    if not isinstance(top, list):
+        raise TypeError("SHAPE expects a LIST")
+    shape = []
+    first = top
+    while isinstance(first, list):
+        shape.append(len(first))
+        first = first[0] if first else None
+
+    def valid(x, dims):
+        if not dims:
+            return not isinstance(x, list)
+        return (
+            isinstance(x, list) and len(x) == dims[0]
+            and all(valid(e, dims[1:]) for e in x)
+        )
+
+    if not fast and not valid(top, shape):
+        raise ValueError("SHAPE expects coherent nested list sizes (a tensor)")
+    st.push(shape)
+
 
 class _VecMark:
     __slots__ = ()
@@ -4465,7 +4798,6 @@ def _mat_close(st):
 REGISTRY["[]"] = lambda st: st.push([])
 REGISTRY["()"] = lambda st: st.push([])
 REGISTRY["[[]]"] = lambda st: st.push([])
-REGISTRY["{}"] = lambda st: st.push({})
 
 
 @register("+!")
@@ -4669,9 +5001,7 @@ def _every(st):
     st.push(_ev(st.spark, fire, interval=f"{max(1, period_us // _tuc.UNITS_PER_S)} seconds"))
 
 
-# ---------- round-5 tranche (registration side effects) ----------
-from warp10_platform_spark.warpscript import functions_r5 as _r5  # noqa: E402,F401
-from warp10_platform_spark.warpscript import functions_r6 as _r6  # noqa: E402,F401
+# ---------- later tranches (registration side effects) ----------
 from warp10_platform_spark.warpscript import functions_canvas as _cv  # noqa: E402,F401
 from warp10_platform_spark.warpscript import functions_concurrent as _cc  # noqa: E402,F401
 from warp10_platform_spark.warpscript import functions_secure as _sec  # noqa: E402,F401

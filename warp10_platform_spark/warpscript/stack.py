@@ -32,6 +32,21 @@ class Macro:
         return f"<Macro {len(self.tokens)} stmts>"
 
 
+class NativeMacro:
+    """A driver-side callable usable where the stack expects a Macro —
+    the reference pushes WarpScriptStackFunction instances the same way
+    (RANDPDF pushes a function object EVAL then applies)."""
+
+    __slots__ = ("fn", "name")
+
+    def __init__(self, fn, name: str):
+        self.fn = fn
+        self.name = name
+
+    def __repr__(self):  # pragma: no cover
+        return f"<NativeMacro {self.name}>"
+
+
 class BreakLoop(Exception):
     """BREAK (BREAK.java): exit the nearest enclosing loop."""
 
