@@ -28,12 +28,21 @@ def test_cli_fetch_bucketize_gts_json(spark, capsys, tmp_path):
     assert all(len(pt) == 2 for pt in gts["v"])
 
 
-def test_cli_explain_mode(spark, capsys, tmp_path):
+def test_cli_explain_mode(spark, capsys, tmp_path, monkeypatch):
+    from warp10_platform_spark.warpscript import functions as WF
+
     p = tmp_path / "s.mc2"
     p.write_text("[ 'events.purchase{}' {} 0 1704931200000000 ] FETCH")
-    assert main([str(p), "--sf-dir", "/root/testdata/sf0.001", "--explain"]) == 0
+    with monkeypatch.context() as m:
+        m.setattr(WF, "_LOCAL_MAX_BYTES", 0)
+        assert main([str(p), "--sf-dir", "/root/testdata/sf0.001", "--explain"]) == 0
     out = json.loads(capsys.readouterr().out)
     assert "gts_plan" in out[0] and "Scan parquet" in out[0]["gts_plan"] or "FileScan" in out[0]["gts_plan"]
+    # under the gate the answer comes from Arrow: explain names the files
+    assert main([str(p), "--sf-dir", "/root/testdata/sf0.001", "--explain"]) == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out[0]["gts_route"] == "arrow" and out[0]["rows"] > 0
+    assert out[0]["files"] and all("class=events.purchase" in f for f in out[0]["files"])
 
 
 def test_cli_error_contract(spark, capsys, tmp_path):
@@ -148,6 +157,7 @@ def _record_plans(monkeypatch, gf) -> list:
 
 def test_series_json_sorts_on_driver_like_spark(spark, monkeypatch):
     from warp10_platform_spark.__main__ import _series_json
+    from warp10_platform_spark.core.frame import GTSFrame
 
     gf = _unsorted_gts(spark)
     plans = _record_plans(monkeypatch, gf)
@@ -156,6 +166,11 @@ def test_series_json_sorts_on_driver_like_spark(spark, monkeypatch):
     assert plans and not any("rangepartitioning" in p for p in plans)
     # a limit as large as the frame takes Spark's own sort: same render
     assert _series_json(gf, 8) == got
+    # the Arrow-backed twin renders on the driver without a Spark job
+    twin = GTSFrame(None, None, "v_double", table=gf.df.toArrow(), spark=spark)
+    n = len(plans)
+    assert _series_json(twin, None) == RENDERED and _series_json(twin, 8) == RENDERED
+    assert len(plans) == n
 
 
 def test_series_json_limit_takes_first_points_in_order(spark, monkeypatch):

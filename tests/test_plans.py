@@ -16,24 +16,43 @@ def test_fetch_range_pushes_predicates(spark, sf_dir):
 
 
 @pytest.mark.parametrize("form", ["map", "list"])
-def test_warpscript_fetch_prunes_class_and_pushes_ts(spark, sf_dir, form):
+def test_warpscript_fetch_prunes_class_and_pushes_ts(spark, sf_dir, form, monkeypatch):
     """WarpScript FETCH, both argument forms, reads the class-partitioned
-    layout: a class regex prunes partitions and both time bounds reach
-    the parquet scan."""
-    from warp10_platform_spark.warpscript.functions import REGISTRY
+    layout on both routes. Spark route: a class regex prunes partitions
+    and both time bounds reach the parquet scan. Arrow route: only the
+    selected classes' files are read and every row lies in the range."""
+    import os
+
+    from warp10_platform_spark.warpscript import functions as WF
     from warp10_platform_spark.warpscript.stack import WarpScriptStack
 
-    st = WarpScriptStack(spark, sf_dir)
+    def fetch(user_re, start, end):
+        st = WarpScriptStack(spark, sf_dir)
+        clause = f"user~{user_re}" if user_re else ""
+        if form == "map":
+            st.push({"selector": rf"~events\.(click|view){{{clause}}}", "start": start, "end": end})
+        else:
+            st.push([r"~events\.(click|view)", {"user": f"~{user_re}"} if user_re else {}, start, end])
+        WF.REGISTRY["FETCH"](st)
+        return st.pop()
+
     start, end = 1_700_000_000_000_000, 1_800_000_000_000_000
-    if form == "map":
-        st.push({"selector": r"~events\.(click|view){user~36[0-9]}", "start": start, "end": end})
-    else:
-        st.push([r"~events\.(click|view)", {"user": "~36[0-9]"}, start, end])
-    REGISTRY["FETCH"](st)
-    r = plan_report(st.pop().df)
+    with monkeypatch.context() as m:
+        m.setattr(WF, "_LOCAL_MAX_BYTES", 0)
+        gf = fetch("36[0-9]", start, end)
+    assert gf.table is None
+    r = plan_report(gf.df)
     assert any("class" in p and "click|view" in p for p in r.partition_filters)
     pushed = " ".join(r.pushed_filters)
     assert f"GreaterThanOrEqual(ts,{start})" in pushed and f"LessThanOrEqual(ts,{end})" in pushed
+
+    start, end = 1_704_844_800_000_000, 1_705_449_600_000_000  # a week inside the data
+    gf = fetch(None, start, end)
+    assert gf.table is not None and gf.table.num_rows
+    assert {os.path.basename(os.path.dirname(f)) for f in gf.files} == {
+        "class=events.click", "class=events.view"}
+    assert set(gf.table["class"].to_pylist()) == {"events.click", "events.view"}
+    assert all(start <= t <= end for t in gf.table["ts"].to_pylist())
 
 
 def test_fetch_range_daypruned_prunes_day_partitions(spark, sf_dir):

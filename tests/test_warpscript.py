@@ -191,6 +191,13 @@ def test_math_scalars():
     assert st.stack == [-1.0, 0.0, True]
 
 
+def test_random_draws_like_rand():
+    """RANDOM is RAND under its other name: uniform draws in [0, 1) from
+    the stack's generator, so SRAND replays them."""
+    a, b = run("RANDOM RANDOM").stack
+    assert a != b and 0 <= a < 1 and 0 <= b < 1
+    assert run("SRAND RANDOM RAND").stack == run("SRAND RAND RANDOM").stack
+
 def test_string_functions():
     st = run("' padded ' TRIM TOUPPER")
     assert st.stack == ["PADDED"]

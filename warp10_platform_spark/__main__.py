@@ -29,10 +29,33 @@ def _order_key(row) -> tuple:
     return tuple((row[c] is not None, row[c]) for c in _ORDER)
 
 
+def _arrow_rows(gf, limit: int | None) -> list[dict]:
+    """The rows _series_json renders, from an Arrow-backed frame: the
+    same columns, order and value typing as the Spark projection."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = gf.table
+    vc = gf.value_col or "v_double"
+    if vc != "v_double" and vc in t.column_names:
+        vnum = pc.cast(t[vc], pa.float64())
+    else:
+        typed = [c for c in ("v_double", "v_long", "v_bool") if c in t.column_names]
+        vnum = pc.coalesce(*(pc.cast(t[c], pa.float64()) for c in typed)) if typed else pa.nulls(len(t), pa.float64())
+    cols = {c: t[c] for c in ("class", "labels", "attributes", "ts", "lat", "lon", "elev") if c in t.column_names}
+    cols["_vnum"] = vnum
+    if "v_string" in t.column_names:
+        cols["_vstr"] = t["v_string"]
+    order = pc.sort_indices(t, sort_keys=[(c, "ascending") for c in _ORDER], null_placement="at_start")
+    return pa.table(cols).take(order[:limit] if limit else order).to_pylist()
+
+
 def _series_json(gf, limit: int | None):
     """GTSFrame → reference /exec GTS JSON: one object per series,
     {"c", "l", "a", "v": [[tick, (lat, lon,) (elev,) value], ...]},
     ticks ascending (GTSHelper JSON serialization order)."""
+    if gf.table is not None:
+        return _render(_arrow_rows(gf, limit))
     from pyspark.sql import functions as F
 
     df = gf.df
@@ -67,18 +90,18 @@ def _series_json(gf, limit: int | None):
         # every row reaches the driver anyway: sorting it there saves the
         # range exchange (and its sampling job) a global orderBy plans
         rows = sorted(rows.collect(), key=_order_key)
+    return _render([r.asDict() for r in rows])
+
+
+def _render(rows: list[dict]) -> list[dict]:
+    """Rows in (class, labels_key, ts) order → one object per series.
+    Maps arrive as dicts from Spark and as (key, value) lists from Arrow."""
     out: dict[tuple, dict] = {}
-    for r in rows:
-        d = r.asDict()
-        key = (d["class"], tuple(sorted((d.get("labels") or {}).items())))
+    for d in rows:
+        labels = dict(d.get("labels") or ())
         series = out.setdefault(
-            key,
-            {
-                "c": d["class"],
-                "l": dict(d.get("labels") or {}),
-                "a": dict(d.get("attributes") or {}),
-                "v": [],
-            },
+            (d["class"], tuple(sorted(labels.items()))),
+            {"c": d["class"], "l": labels, "a": dict(d.get("attributes") or ()), "v": []},
         )
         v = d["_vstr"] if d.get("_vstr") is not None else d.get("_vnum")
         point = [d["ts"]]
@@ -97,6 +120,9 @@ def _jsonable(v, limit: int | None, explain: bool):
     from warp10_platform_spark.core.frame import GTSFrame
 
     if isinstance(v, GTSFrame):
+        if explain and v.table is not None:
+            # answered on the driver: no Spark plan exists to show
+            return {"gts_route": "arrow", "files": list(v.files), "rows": v.table.num_rows}
         if explain:
             return {"gts_plan": v.df._jdf.queryExecution().executedPlan().toString()}
         return _series_json(v, limit)

@@ -16,6 +16,12 @@ becomes
 Every method is lazy — it appends DataFrame transformations; Catalyst
 parses/optimizes/plans at action time, which is the reference's missing
 query optimizer (SURVEY §4.1) obtained for free.
+
+A frame can instead hold its points in driver memory as a pyarrow Table
+(`table`), when FETCH answers a small request on the driver.  BUCKETIZE,
+MAP and REDUCE then run as numpy kernels (operators/gts_kernels.py) where
+one covers the case; any other op reads `df`, which builds the Spark frame
+from the Table once and continues in Spark.
 """
 
 from __future__ import annotations
@@ -27,6 +33,7 @@ from warp10_platform_spark.core.schema import with_gts_id
 from warp10_platform_spark.core.selector import selector_predicate
 from warp10_platform_spark.operators import fill as _fill
 from warp10_platform_spark.operators import filters as _filters
+from warp10_platform_spark.operators import gts_kernels as _gk
 from warp10_platform_spark.operators import mapper as _mapper
 from warp10_platform_spark.operators import reduce_apply as _ra
 from warp10_platform_spark.operators import reshape as _reshape
@@ -46,10 +53,31 @@ class GTSFrame:
     copying columns around.
     """
 
-    def __init__(self, df: DataFrame, bucketspec: BucketSpec | None = None, value_col: str = "v_double"):
-        self.df = df
+    def __init__(self, df: DataFrame | None, bucketspec: BucketSpec | None = None, value_col: str = "v_double",
+                 *, table=None, spark: SparkSession | None = None, files: tuple[str, ...] = ()):
+        self._df = df
         self.bucketspec = bucketspec
         self.value_col = value_col
+        # Arrow-backed frames: the points, the session that builds `df`,
+        # and the layout files the FETCH scanned
+        self.table = table
+        self.spark = spark
+        self.files = files
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = _gk.to_spark(self.spark, self.table)
+        return self._df
+
+    @classmethod
+    def local(cls, spark: SparkSession, table, files: tuple[str, ...] = (),
+              bucketspec: BucketSpec | None = None, value_col: str = "v_double") -> "GTSFrame":
+        """An Arrow-backed frame (FETCH's driver route)."""
+        return cls(None, bucketspec, value_col, table=table, spark=spark, files=files)
+
+    def _local(self, table, bucketspec: BucketSpec | None, value_col: str) -> "GTSFrame":
+        return GTSFrame.local(self.spark, table, self.files, bucketspec, value_col)
 
     # ---- construction ----
 
@@ -180,10 +208,18 @@ class GTSFrame:
 
     def bucketize(self, bucketizer: str, span: int, lastbucket: int | None = None,
                   bucketcount: int | None = None, p: float | None = None) -> "GTSFrame":
+        if self.table is not None:
+            local = _gk.bucketize(self.table, bucketizer, span, lastbucket, bucketcount, self.value_col, p)
+            if local is not None:
+                return self._local(*local, "v_agg")
         out, spec = _bucketize(self.df, bucketizer, span, lastbucket, bucketcount, value_col=self.value_col, p=p)
         return GTSFrame(out, bucketspec=spec, value_col="v_agg")
 
     def map_aggregate(self, mapper: str, pre: int = 0, post: int = 0, p: float | None = None) -> "GTSFrame":
+        if self.table is not None:
+            local = _gk.map_window(self.table, mapper, pre, post, self.value_col)
+            if local is not None:
+                return self._local(local, self.bucketspec, "v_mapped")
         out = _mapper.map_aggregate(self.df, mapper, pre, post, value_col=self.value_col, p=p)
         return GTSFrame(out, self.bucketspec, value_col="v_mapped")
 
@@ -234,8 +270,12 @@ class GTSFrame:
         the congruence merge over the partition inputs is the spec
         itself when bucketized, None otherwise — carried on the result
         frame so a following FILL can scaffold the grid."""
-        out = _ra.reduce_gts(self.df, reducer, by, value_col=self.value_col, p=p)
         spec = _merge_specs(self.bucketspec)
+        if self.table is not None and p is None:
+            local = _gk.reduce(self.table, reducer, by, self.value_col, klass)
+            if local is not None:
+                return self._local(local, spec, "v_reduced")
+        out = _ra.reduce_gts(self.df, reducer, by, value_col=self.value_col, p=p)
         return GTSFrame(
             self._canonical_eq(out, by, "v_reduced", klass), bucketspec=spec, value_col="v_reduced"
         )

@@ -16,6 +16,7 @@ directory-table pre-filter (see sources/directory.py).
 
 from __future__ import annotations
 
+import functools
 import re
 import urllib.parse
 from dataclasses import dataclass, field
@@ -142,12 +143,8 @@ def matches(
     sel = parse_selector(selector) if isinstance(selector, str) else selector
     labels = labels or {}
     attributes = attributes or {}
-    if sel.class_exact is not None:
-        if cls != sel.class_exact:
-            return False
-    elif sel.class_regex not in (".*", None):
-        if re.match(_anchor(sel.class_regex), cls) is None:
-            return False
+    if not class_matches(sel, cls):
+        return False
 
     def clause_ok(src: dict[str, str], key: str, op: str, val: str) -> bool:
         v = src.get(key)
@@ -158,7 +155,7 @@ def matches(
             return v == val
         if val == ".*":
             return True if key == "" else v is not None
-        return v is not None and re.match(_anchor(val), v) is not None
+        return v is not None and _pattern(val).match(v) is not None
 
     for key, op, val in sel.labels:
         if not clause_ok(labels, key, op, val):
@@ -167,6 +164,20 @@ def matches(
         if not clause_ok(attributes, key, op, val):
             return False
     return True
+
+
+def class_matches(sel: Selector, cls: str) -> bool:
+    """The class part of `matches`: exact, anchored regex, or any."""
+    if sel.class_exact is not None:
+        return cls == sel.class_exact
+    if sel.class_regex in (".*", None):
+        return True
+    return _pattern(sel.class_regex).match(cls) is not None
+
+
+@functools.lru_cache(maxsize=1024)
+def _pattern(regex: str) -> re.Pattern:
+    return re.compile(_anchor(regex))
 
 
 def metamatch_predicate(

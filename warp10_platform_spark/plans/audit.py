@@ -25,7 +25,13 @@ def plan_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate of `df` in bytes — the optimized plan's
     statistics, the same figure autoBroadcastJoinThreshold routes on — or
     None when the size is unknown: a streaming frame, a probe that raises,
-    or an estimate at the _UNKNOWN_SIZE sentinel."""
+    or an estimate at the _UNKNOWN_SIZE sentinel.
+
+    A path-based read of a partitioned layout (spark.read.parquet(dir))
+    reports the whole layout's size whatever its partition filters: the
+    relation's statistics come from the file index before pruning.  So
+    /exec FETCH gates on the bytes of the files left after class pruning
+    (sources/tables.PointsLayout.size) instead of on this figure."""
     if df.isStreaming:
         return None
     try:

@@ -186,10 +186,11 @@ class Store:
         ) if os.path.exists(store_dir) else []
         self._base_dir = os.path.join(store_dir, bases[-1]) if bases else None
         # /exec FETCH reads the class-partitioned points layout; build it
-        # once here so concurrent first requests never race to write it
-        from warp10_platform_spark.sources.tables import canonical_points
+        # (and its driver-side file index) once here so concurrent first
+        # requests never race to write it
+        from warp10_platform_spark.sources.tables import points_layout
 
-        canonical_points(spark, sf_dir)
+        points_layout(spark, sf_dir)
 
     # ---- write paths -------------------------------------------------
     def append_update(self, text: str) -> int:

@@ -178,11 +178,78 @@ def canonical_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Materialized once per sf_dir under the repo's .cache/ and reused;
     FETCH range + class predicates then land in PushedFilters /
     partition pruning for real."""
-    key = _cache_key(sf_dir)
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".cache", f"points_{key}")
+    path = _points_path(sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         events_points(spark, sf_dir).write.mode("overwrite").partitionBy("class").parquet(path)
     return _read_parquet_memo(spark, path)
+
+
+def _points_path(sf_dir: str) -> str:
+    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    return os.path.join(root, ".cache", f"points_{_cache_key(sf_dir)}")
+
+
+class PointsLayout:
+    """The canonical_points files seen from the driver, through pyarrow:
+    the files that hold each class and their bytes on disk.
+
+    Catalyst's size estimate of a path-based partitioned read is the whole
+    layout whatever the class predicate (plans.plan_bytes), so the bytes a
+    FETCH will read after class pruning come from here instead: summing
+    the selected partitions' file sizes reads no parquet."""
+
+    def __init__(self, path: str):
+        import pyarrow.dataset as ds
+
+        self.dataset = ds.dataset(path, format="parquet", partitioning="hive")
+        self.fragments: dict[str, list] = {}
+        for frag in self.dataset.get_fragments():
+            cls = ds.get_partition_keys(frag.partition_expression)["class"]
+            self.fragments.setdefault(cls, []).append(frag)
+        self._bytes = {c: sum(os.path.getsize(f.path) for f in fs) for c, fs in self.fragments.items()}
+
+    def classes(self, selectors) -> list[str]:
+        """The classes any of the parsed `selectors` can match."""
+        from warp10_platform_spark.core.selector import class_matches
+
+        return sorted(c for c in self.fragments if any(class_matches(s, c) for s in selectors))
+
+    def size(self, classes: list[str]) -> int:
+        """Bytes on disk of the files that hold `classes`."""
+        return sum(self._bytes[c] for c in classes)
+
+    def files(self, classes: list[str]) -> tuple[str, ...]:
+        return tuple(f.path for c in classes for f in self.fragments[c])
+
+    def scan(self, classes: list[str], start: int | None, end: int | None):
+        """Rows of `classes` with start <= ts <= end, as a pyarrow Table,
+        read from those classes' files only; the ts bounds reach the row
+        groups."""
+        import pyarrow.dataset as ds
+
+        d = self.dataset
+        cond = ds.scalar(True)
+        if start is not None:
+            cond &= ds.field("ts") >= start
+        if end is not None:
+            cond &= ds.field("ts") <= end
+        frags = [f for c in classes for f in self.fragments[c]]
+        return ds.FileSystemDataset(frags, d.schema, d.format, d.filesystem).to_table(filter=cond)
+
+
+# path -> PointsLayout; the layout is write-once, like _SCANS' entries
+_LAYOUTS: dict[str, PointsLayout] = {}
+
+
+def points_layout(spark: SparkSession, sf_dir: str) -> PointsLayout:
+    """The memoized PointsLayout of canonical_points(spark, sf_dir),
+    materializing the layout first when it is missing."""
+    canonical_points(spark, sf_dir)
+    path = _points_path(sf_dir)
+    hit = _LAYOUTS.get(path)
+    if hit is None:
+        hit = _LAYOUTS[path] = PointsLayout(path)
+    return hit
 
 
 # DuckDB-side equivalent of events_points, for oracle SQL construction —

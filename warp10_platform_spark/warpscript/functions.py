@@ -411,6 +411,56 @@ def _ts_param(v, now_us: int) -> int:
     return int(dt.replace(microsecond=0).timestamp()) * _tuc.UNITS_PER_S + _tuc.us(dt.microsecond)
 
 
+# FETCH answers on the driver from Arrow (GTSFrame.local) when the files
+# left after class pruning take fewer bytes on disk than this, and plans
+# Spark jobs otherwise.  On 4 cores (scripts/fetch_route_crossover.py,
+# figures in CHANGES.md) Arrow answered dashboard scripts 2.4x faster at
+# 20 MB, level with Spark at 41 MB and 2x slower at 81 MB.
+_LOCAL_MAX_BYTES = 32 << 20
+
+
+def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -> GTSFrame | None:
+    """FETCH's driver route, or None above _LOCAL_MAX_BYTES: an Arrow
+    scan of the selected classes' files with the ts bounds applied in the
+    scan, then the label clauses applied per distinct series."""
+    from warp10_platform_spark.core.selector import parse_selector
+    from warp10_platform_spark.operators.gts_kernels import select_series
+    from warp10_platform_spark.sources.tables import points_layout
+
+    if not all(t is None or isinstance(t, int) for t in (start, end)):
+        return None
+    sels = [parse_selector(s) for s in selectors]
+    if any(s.attributes for s in sels):  # select_series matches labels only
+        return None
+    layout = points_layout(st.spark, st.sf_dir)
+    classes = layout.classes(sels)
+    if layout.size(classes) >= _LOCAL_MAX_BYTES:
+        return None
+    table = select_series(layout.scan(classes, start, end), sels)
+    return GTSFrame.local(st.spark, table, layout.files(classes))
+
+
+def _selected_points(st, selectors: list[str]):
+    """The class-partitioned layout where any selector matches: the
+    selector's class prunes partitions (FETCH's Spark route)."""
+    from functools import reduce
+
+    from warp10_platform_spark.core.selector import selector_predicate
+
+    pred = reduce(lambda a, b: a | b, (selector_predicate(s) for s in selectors))
+    return canonical_points(st.spark, st.sf_dir).where(pred)
+
+
+def _fetch_frame(st, selectors: list[str], start: int | None, end: int | None, count: int | None) -> GTSFrame:
+    """Selector + time-range FETCH on whichever route _local_fetch picks
+    (on Spark's, the time bounds reach the scan's PushedFilters); a
+    count-based FETCH keeps the last `count` points per series in Spark."""
+    gf = _local_fetch(st, selectors, start, end)
+    if gf is None:
+        return GTSFrame.fetch(_selected_points(st, selectors), None, start=start, end=end, count=count)
+    return GTSFrame.fetch(gf.df, None, count=count) if count is not None else gf
+
+
 def _fetch_map(st, params: dict):
     """Map-parameter FETCH (FETCH.java:1100-1400): selector/selectors/
     class+labels/metaset targeting; start+end, end+timespan or end+count
@@ -419,7 +469,7 @@ def _fetch_map(st, params: dict):
     that already implements it (core/frame.py, sources/directory.py)."""
     import time as _t
 
-    from warp10_platform_spark.core.selector import selector_predicate, to_selector
+    from warp10_platform_spark.core.selector import to_selector
 
     now_us = int(_t.time() * _tuc.UNITS_PER_S)
     params = dict(params)
@@ -481,33 +531,28 @@ def _fetch_map(st, params: dict):
             raise ValueError("FETCH 'timespan' requires 'end'.")
         start = end - int(params["timespan"]) + 1
 
-    # the class-partitioned layout: the selector's class prunes
-    # partitions and the time bounds reach the scan's PushedFilters
-    pts = canonical_points(st.spark, st.sf_dir)
-    from functools import reduce
-
-    pred = reduce(lambda a, b: a | b, (selector_predicate(s) for s in selectors))
-    pts = pts.where(pred)
-
-    if "gskip" in params or "gcount" in params:
-        from warp10_platform_spark.sources.directory import build_directory, fetch_gskip_gcount
-
-        # predicate already applied; rank the remaining series
-        pts = fetch_gskip_gcount(
-            pts, build_directory(pts), "~.*{}",
-            gskip=int(params.get("gskip", 0)),
-            gcount=int(params["gcount"]) if "gcount" in params else None,
-        )
-
     pre = int(params.get("boundary.pre", params.get("boundary", 0)))
     post = int(params.get("boundary.post", params.get("boundary", 0)))
-    if pre or post:
-        gf = GTSFrame.fetch_with_boundary(
-            pts, None, start if start is not None else 0,
-            end if end is not None else now_us, boundary_pre=pre, boundary_post=post,
-        )
+    if pre or post or "gskip" in params or "gcount" in params:
+        pts = _selected_points(st, selectors)
+        if "gskip" in params or "gcount" in params:
+            from warp10_platform_spark.sources.directory import build_directory, fetch_gskip_gcount
+
+            # predicate already applied; rank the remaining series
+            pts = fetch_gskip_gcount(
+                pts, build_directory(pts), "~.*{}",
+                gskip=int(params.get("gskip", 0)),
+                gcount=int(params["gcount"]) if "gcount" in params else None,
+            )
+        if pre or post:
+            gf = GTSFrame.fetch_with_boundary(
+                pts, None, start if start is not None else 0,
+                end if end is not None else now_us, boundary_pre=pre, boundary_post=post,
+            )
+        else:
+            gf = GTSFrame.fetch(pts, None, start=start, end=end, count=count)
     else:
-        gf = GTSFrame.fetch(pts, None, start=start, end=end, count=count)
+        gf = _fetch_frame(st, selectors, start, end, count)
 
     if "skip" in params:
         gf = gf.skip(int(params["skip"]))
@@ -547,11 +592,10 @@ def _fetch(st):
     else:
         raise ValueError("FETCH expects [ token? class labels start end ]")
     selector = cls + "{" + ",".join(f"{k}={v}" for k, v in (labels or {}).items()) + "}"
-    pts = canonical_points(st.spark, st.sf_dir)
     if isinstance(b, int) and b < 0:
-        st.push(GTSFrame.fetch(pts, selector, end=a, count=-b))
+        st.push(_fetch_frame(st, [selector], None, a, -b))
     else:
-        st.push(GTSFrame.fetch(pts, selector, start=a, end=b))
+        st.push(_fetch_frame(st, [selector], a, b, None))
 
 
 @register("FIND")

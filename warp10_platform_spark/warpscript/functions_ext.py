@@ -1011,7 +1011,6 @@ def _revbits(st):
     st.push(r - 2**64 if r > _I64_MAX else r)
 
 
-REGISTRY["RANDOM"] = REGISTRY.get("RAND", lambda st: st.push(0.5))
 REGISTRY["e"] = lambda st: st.push(_math.e)
 REGISTRY["pi"] = lambda st: st.push(_math.pi)
 
@@ -3335,7 +3334,7 @@ def _srand(st):
     st.rng = _random.Random(42)
 
 
-@register("RAND")
+@register("RAND", "RANDOM")
 def _rand(st):
     import random as _random
 
