@@ -210,3 +210,73 @@ def test_routes_answer_dashboard_scripts_alike(spark, sf_dir, monkeypatch):
                      flat, rel)
         points += len(flat)
     assert points > 1000
+
+
+def _fetch(spark, sf_dir, text):
+    from warp10_platform_spark.warpscript.stack import WarpScriptStack
+
+    st = WarpScriptStack(spark, sf_dir)
+    st.exec(text)
+    return st.pop()
+
+
+def _plan(df) -> str:
+    import re
+
+    return re.sub(r"#\d+", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+_RANGE = "'end' 2000000000000000 'timespan' 1000000000000000"
+
+
+@pytest.mark.parametrize("sel, same_as", [
+    (r"~events\.\p%7BLower%7D+{}", r"~events\.[a-z]+{}"),
+    (r"~events\.(?<kind>click){}", "events.click{}"),
+    (r"events.click{user~\p%7BDigit%7D+}", "events.click{user~[0-9]+}"),
+    (r"~events\.[a-z&&[^v]]+{}", r"~events\.[a-uw-z]+{}"),
+])
+def test_java_only_regexes_take_the_spark_route(spark, sf_dir, sel, same_as):
+    """Selectors whose regexes Python's re cannot read as Java does are
+    answered by Spark, which compiles them as Java regexes, in both FETCH
+    forms; they select what their Python-readable twins select.  Braces
+    inside a selector are URL-encoded, as in the reference's syntax."""
+    from warp10_platform_spark.warpscript.stack import WarpScriptStack
+
+    def fetch(args):
+        st = WarpScriptStack(spark, sf_dir)
+        st.push(args)
+        WF.REGISTRY["FETCH"](st)
+        gf = st.pop()
+        return gf.local, sorted(map(tuple, gf.df.select("class", "labels_key", "ts").collect()))
+
+    end, span = 2_000_000_000_000_000, 1_000_000_000_000_000
+    local, want = fetch({"selector": same_as, "end": end, "timespan": span})
+    assert local and want
+    assert fetch({"selector": sel, "end": end, "timespan": span}) == (False, want)
+    if "user" not in sel:  # the list form spells label clauses as exact values
+        assert fetch([sel[:-2], {}, end - span + 1, end]) == (False, want)
+
+
+def test_fetch_without_kernel_runs_the_spark_plan(spark, sf_dir, monkeypatch):
+    """Under the gate, a FETCH followed by an op without a kernel, or a
+    count-based FETCH, plans what the Spark route plans and reads nothing
+    on the driver."""
+    from warp10_platform_spark.sources.tables import PointsLayout
+
+    scripts = [
+        f"{{ 'selector' 'events.click{{user~1[0-9]}}' {_RANGE} }} FETCH [ SWAP mapper.delta 1 0 0 ] MAP",
+        f"{{ 'selector' 'events.click{{}}' {_RANGE} }} FETCH [ SWAP bucketizer.last 2000000000000000 3600000000 0 ] BUCKETIZE",
+        "{ 'selector' 'events.click{}' 'end' 2000000000000000 'count' 3 } FETCH",
+        "[ 'events.view' {} 2000000000000000 -3 ] FETCH",
+    ]
+    with monkeypatch.context() as m:
+        m.setattr(WF, "_LOCAL_MAX_BYTES", 0)
+        want = [_plan(_fetch(spark, sf_dir, s).df) for s in scripts]
+
+    def no_scan(*a):
+        raise AssertionError("scanned on the driver")
+
+    monkeypatch.setattr(PointsLayout, "scan", no_scan)
+    for s, w in zip(scripts, want):
+        gf = _fetch(spark, sf_dir, s)
+        assert not gf.local and _plan(gf.df) == w, s

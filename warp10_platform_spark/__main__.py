@@ -54,7 +54,7 @@ def _series_json(gf, limit: int | None):
     """GTSFrame → reference /exec GTS JSON: one object per series,
     {"c", "l", "a", "v": [[tick, (lat, lon,) (elev,) value], ...]},
     ticks ascending (GTSHelper JSON serialization order)."""
-    if gf.table is not None:
+    if gf.local:
         return _render(_arrow_rows(gf, limit))
     from pyspark.sql import functions as F
 
@@ -120,7 +120,7 @@ def _jsonable(v, limit: int | None, explain: bool):
     from warp10_platform_spark.core.frame import GTSFrame
 
     if isinstance(v, GTSFrame):
-        if explain and v.table is not None:
+        if explain and v.local:
             # answered on the driver: no Spark plan exists to show
             return {"gts_route": "arrow", "files": list(v.files), "rows": v.table.num_rows}
         if explain:

@@ -20,8 +20,10 @@ query optimizer (SURVEY §4.1) obtained for free.
 A frame can instead hold its points in driver memory as a pyarrow Table
 (`table`), when FETCH answers a small request on the driver.  BUCKETIZE,
 MAP and REDUCE then run as numpy kernels (operators/gts_kernels.py) where
-one covers the case; any other op reads `df`, which builds the Spark frame
-from the Table once and continues in Spark.
+one covers the case; any other op reads `df` and continues in Spark.  A
+FETCH frame holds both routes lazily: its `df` is the Spark scan plan
+and its `table` the Arrow scan, so an op without a kernel runs the plan
+the Spark route would, and reads nothing on the driver.
 """
 
 from __future__ import annotations
@@ -53,14 +55,17 @@ class GTSFrame:
     copying columns around.
     """
 
-    def __init__(self, df: DataFrame | None, bucketspec: BucketSpec | None = None, value_col: str = "v_double",
+    def __init__(self, df, bucketspec: BucketSpec | None = None, value_col: str = "v_double",
                  *, table=None, spark: SparkSession | None = None, files: tuple[str, ...] = ()):
+        # `df` is a DataFrame, a function that plans it (a FETCH frame's
+        # Spark scan), or None to build it from `table`
         self._df = df
         self.bucketspec = bucketspec
         self.value_col = value_col
-        # Arrow-backed frames: the points, the session that builds `df`,
-        # and the layout files the FETCH scanned
-        self.table = table
+        # Arrow-backed frames: the points as a pyarrow Table or a function
+        # that scans them, the session that builds `df` from them, and the
+        # layout files the FETCH selected
+        self._table = table
         self.spark = spark
         self.files = files
 
@@ -68,16 +73,25 @@ class GTSFrame:
     def df(self) -> DataFrame:
         if self._df is None:
             self._df = _gk.to_spark(self.spark, self.table)
+        elif callable(self._df):
+            self._df = self._df()
         return self._df
 
-    @classmethod
-    def local(cls, spark: SparkSession, table, files: tuple[str, ...] = (),
-              bucketspec: BucketSpec | None = None, value_col: str = "v_double") -> "GTSFrame":
-        """An Arrow-backed frame (FETCH's driver route)."""
-        return cls(None, bucketspec, value_col, table=table, spark=spark, files=files)
+    @property
+    def local(self) -> bool:
+        """Whether the points are (or can be scanned into) a Table."""
+        return self._table is not None
+
+    @property
+    def table(self):
+        """The points as a pyarrow Table (None on a Spark-only frame);
+        a FETCH frame scans them on first access."""
+        if callable(self._table):
+            self._table = self._table()
+        return self._table
 
     def _local(self, table, bucketspec: BucketSpec | None, value_col: str) -> "GTSFrame":
-        return GTSFrame.local(self.spark, table, self.files, bucketspec, value_col)
+        return GTSFrame(None, bucketspec, value_col, table=table, spark=self.spark, files=self.files)
 
     # ---- construction ----
 
@@ -208,7 +222,7 @@ class GTSFrame:
 
     def bucketize(self, bucketizer: str, span: int, lastbucket: int | None = None,
                   bucketcount: int | None = None, p: float | None = None) -> "GTSFrame":
-        if self.table is not None:
+        if self.local and _gk.covers(bucketizer, _gk.BUCKETIZERS):
             local = _gk.bucketize(self.table, bucketizer, span, lastbucket, bucketcount, self.value_col, p)
             if local is not None:
                 return self._local(*local, "v_agg")
@@ -216,7 +230,7 @@ class GTSFrame:
         return GTSFrame(out, bucketspec=spec, value_col="v_agg")
 
     def map_aggregate(self, mapper: str, pre: int = 0, post: int = 0, p: float | None = None) -> "GTSFrame":
-        if self.table is not None:
+        if self.local and _gk.covers(mapper, _gk.WINDOW_MAPPERS):
             local = _gk.map_window(self.table, mapper, pre, post, self.value_col)
             if local is not None:
                 return self._local(local, self.bucketspec, "v_mapped")
@@ -271,7 +285,7 @@ class GTSFrame:
         itself when bucketized, None otherwise — carried on the result
         frame so a following FILL can scaffold the grid."""
         spec = _merge_specs(self.bucketspec)
-        if self.table is not None and p is None:
+        if self.local and p is None and _gk.covers(reducer, _gk.REDUCERS):
             local = _gk.reduce(self.table, reducer, by, self.value_col, klass)
             if local is not None:
                 return self._local(local, spec, "v_reduced")

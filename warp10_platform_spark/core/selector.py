@@ -19,6 +19,7 @@ from __future__ import annotations
 import functools
 import re
 import urllib.parse
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column
@@ -141,29 +142,29 @@ def matches(
     parseLabelsSelectors). Clause semantics mirror the Column compiler
     above exactly; used per ingested line, never in a query plan."""
     sel = parse_selector(selector) if isinstance(selector, str) else selector
-    labels = labels or {}
-    attributes = attributes or {}
-    if not class_matches(sel, cls):
-        return False
+    return (class_matches(sel, cls) and labels_match(sel, labels or {})
+            and _clauses_match(sel.attributes, attributes or {}))
 
-    def clause_ok(src: dict[str, str], key: str, op: str, val: str) -> bool:
-        v = src.get(key)
-        if op == "=":
-            if val == "":
-                # empty exact value matches absent label too (reference)
-                return v is None or v == ""
-            return v == val
-        if val == ".*":
-            return True if key == "" else v is not None
-        return v is not None and _pattern(val).match(v) is not None
 
-    for key, op, val in sel.labels:
-        if not clause_ok(labels, key, op, val):
-            return False
-    for key, op, val in sel.attributes:
-        if not clause_ok(attributes, key, op, val):
-            return False
-    return True
+def _clause_ok(src: dict[str, str], key: str, op: str, val: str) -> bool:
+    v = src.get(key)
+    if op == "=":
+        if val == "":
+            # empty exact value matches absent label too (reference)
+            return v is None or v == ""
+        return v == val
+    if val == ".*":
+        return True if key == "" else v is not None
+    return v is not None and _pattern(val).match(v) is not None
+
+
+def _clauses_match(clauses: list[tuple[str, str, str]], src: dict[str, str]) -> bool:
+    return all(_clause_ok(src, key, op, val) for key, op, val in clauses)
+
+
+def labels_match(sel: Selector, labels: dict[str, str]) -> bool:
+    """The label clauses of `matches`."""
+    return _clauses_match(sel.labels, labels)
 
 
 def class_matches(sel: Selector, cls: str) -> bool:
@@ -173,6 +174,24 @@ def class_matches(sel: Selector, cls: str) -> bool:
     if sel.class_regex in (".*", None):
         return True
     return _pattern(sel.class_regex).match(cls) is not None
+
+
+def python_compiles(sel: Selector) -> bool:
+    """Whether Python's re reads every regex of `sel` as written.  Spark
+    compiles them as Java regexes, whose syntax Python's only partly
+    shares: `\\p{Lower}` and `(?<name>...)` do not compile, and a Java
+    class intersection `[a-z&&[^b]]` compiles to another meaning, which
+    Python flags with a FutureWarning."""
+    rx = [sel.class_regex] if sel.class_exact is None and sel.class_regex not in (".*", None) else []
+    rx += [v for _, op, v in sel.labels + sel.attributes if op == "~" and v != ".*"]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        try:
+            for r in rx:
+                _pattern(r)
+        except (re.error, FutureWarning):
+            return False
+    return True
 
 
 @functools.lru_cache(maxsize=1024)

@@ -5,8 +5,9 @@ warpscript/functions.py's _LOCAL_MAX_BYTES) is answered on the driver:
 the reference evaluates WarpScript over in-memory GTS arrays too (SURVEY
 §1.1, GeoTimeSerie's parallel primitive arrays), and for a kilobyte answer
 that beats planning Spark jobs.  These kernels give BUCKETIZE, MAP and
-REDUCE Spark's semantics over such a Table; each returns None for a case
-it does not cover, and the caller then continues in Spark (GTSFrame.df).
+REDUCE Spark's semantics over such a Table.  The caller checks `covers`
+for the op's name first; a kernel returns None for another case it does
+not cover, and the caller then continues in Spark (GTSFrame.df).
 
 Agreement with the Spark operators (tests/test_local_route.py):
 
@@ -41,6 +42,12 @@ REDUCERS = ("sum", "mean", "count", "max", "min")
 
 def _short(name: str) -> str:
     return name.split(".", 1)[1] if name.startswith(("bucketizer.", "mapper.", "reducer.")) else name
+
+
+def covers(name: str, names: tuple[str, ...]) -> bool:
+    """Whether a kernel exists for the bucketizer/mapper/reducer `name`:
+    checked before a FETCH frame scans its Table."""
+    return _short(name) in names
 
 
 def _values(table: pa.Table, col: str):
@@ -122,11 +129,9 @@ def _labels(key: str) -> MappingProxyType:
 
 def select_series(table: pa.Table, selectors) -> pa.Table:
     """Rows whose series any parsed selector (without attribute clauses)
-    matches: selector.matches decides the class part once per distinct
-    class and the label clauses once per distinct labels_key."""
-    import dataclasses
-
-    from warp10_platform_spark.core.selector import class_matches, matches
+    matches: the class part is decided once per distinct class and the
+    label clauses once per distinct labels_key."""
+    from warp10_platform_spark.core.selector import class_matches, labels_match
 
     cls = table["class"].combine_chunks().dictionary_encode()
     lk = table["labels_key"].combine_chunks().dictionary_encode()
@@ -136,8 +141,7 @@ def select_series(table: pa.Table, selectors) -> pa.Table:
     for s in selectors:
         c_ok = np.array([class_matches(s, c) for c in classes], bool)
         if c_ok.any():
-            any_class = dataclasses.replace(s, class_exact=None, class_regex=".*")
-            ok |= np.outer(c_ok, [matches(any_class, "", lab) for lab in labels])
+            ok |= np.outer(c_ok, [labels_match(s, lab) for lab in labels])
     keep = ok[cls.indices.to_numpy(zero_copy_only=False), lk.indices.to_numpy(zero_copy_only=False)]
     return table if keep.all() else table.filter(pa.array(keep))
 
@@ -147,7 +151,7 @@ def bucketize(table: pa.Table, bucketizer: str, span: int, lastbucket: int | Non
     """operators/bucketize.bucketize over a Table: (table, BucketSpec)."""
     n = _short(bucketizer)
     vals = _values(table, value_col)
-    if n not in BUCKETIZERS or vals is None or (n == "percentile" and p is None):
+    if vals is None or (n == "percentile" and p is None):
         return None
     v, ok = vals
     ts = table["ts"].to_numpy()
@@ -172,7 +176,7 @@ def map_window(table: pa.Table, mapper: str, pre: int, post: int, value_col: str
     over a Table, rows sorted by series then tick."""
     n = _short(mapper)
     vals = _values(table, value_col)
-    if n not in WINDOW_MAPPERS or vals is None or pre < 0 or post < 0:
+    if vals is None or pre < 0 or post < 0:
         return None
     sid = _series(table)[0]
     order = np.lexsort((table["ts"].to_numpy(), sid))
@@ -223,7 +227,7 @@ def reduce(table: pa.Table, reducer: str, by: list[str], value_col: str, klass: 
     equivalence class, with canonical class/labels_key/labels columns."""
     n = _short(reducer)
     vals = _values(table, value_col)
-    if n not in REDUCERS or vals is None:
+    if vals is None:
         return None
     sid, first, _ = _series(table)
     eq_of: dict[tuple, int] = {}

@@ -411,7 +411,7 @@ def _ts_param(v, now_us: int) -> int:
     return int(dt.replace(microsecond=0).timestamp()) * _tuc.UNITS_PER_S + _tuc.us(dt.microsecond)
 
 
-# FETCH answers on the driver from Arrow (GTSFrame.local) when the files
+# FETCH answers on the driver from Arrow (GTSFrame.table) when the files
 # left after class pruning take fewer bytes on disk than this, and plans
 # Spark jobs otherwise.  On 4 cores (scripts/fetch_route_crossover.py,
 # figures in CHANGES.md) Arrow answered dashboard scripts 2.4x faster at
@@ -420,24 +420,31 @@ _LOCAL_MAX_BYTES = 32 << 20
 
 
 def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -> GTSFrame | None:
-    """FETCH's driver route, or None above _LOCAL_MAX_BYTES: an Arrow
-    scan of the selected classes' files with the ts bounds applied in the
-    scan, then the label clauses applied per distinct series."""
-    from warp10_platform_spark.core.selector import parse_selector
+    """FETCH's driver route, or None where it does not apply: above
+    _LOCAL_MAX_BYTES, for attribute clauses, and for regexes Python's re
+    does not read as Spark (Java) does.  The frame scans the selected
+    classes' files with the ts bounds in the scan, then applies the label
+    clauses per distinct series, on first use of its Table; until then
+    its Spark frame is the Spark route's scan plan."""
+    from warp10_platform_spark.core.selector import parse_selector, python_compiles
     from warp10_platform_spark.operators.gts_kernels import select_series
     from warp10_platform_spark.sources.tables import points_layout
 
     if not all(t is None or isinstance(t, int) for t in (start, end)):
         return None
     sels = [parse_selector(s) for s in selectors]
-    if any(s.attributes for s in sels):  # select_series matches labels only
+    # select_series matches labels only
+    if any(s.attributes for s in sels) or not all(python_compiles(s) for s in sels):
         return None
     layout = points_layout(st.spark, st.sf_dir)
     classes = layout.classes(sels)
     if layout.size(classes) >= _LOCAL_MAX_BYTES:
         return None
-    table = select_series(layout.scan(classes, start, end), sels)
-    return GTSFrame.local(st.spark, table, layout.files(classes))
+    return GTSFrame(
+        lambda: _spark_fetch(st, selectors, start, end, None).df,
+        table=lambda: select_series(layout.scan(classes, start, end), sels),
+        spark=st.spark, files=layout.files(classes),
+    )
 
 
 def _selected_points(st, selectors: list[str]):
@@ -451,14 +458,17 @@ def _selected_points(st, selectors: list[str]):
     return canonical_points(st.spark, st.sf_dir).where(pred)
 
 
+def _spark_fetch(st, selectors: list[str], start: int | None, end: int | None, count: int | None) -> GTSFrame:
+    """FETCH's Spark route: the time bounds reach the scan's PushedFilters."""
+    return GTSFrame.fetch(_selected_points(st, selectors), None, start=start, end=end, count=count)
+
+
 def _fetch_frame(st, selectors: list[str], start: int | None, end: int | None, count: int | None) -> GTSFrame:
-    """Selector + time-range FETCH on whichever route _local_fetch picks
-    (on Spark's, the time bounds reach the scan's PushedFilters); a
-    count-based FETCH keeps the last `count` points per series in Spark."""
-    gf = _local_fetch(st, selectors, start, end)
-    if gf is None:
-        return GTSFrame.fetch(_selected_points(st, selectors), None, start=start, end=end, count=count)
-    return GTSFrame.fetch(gf.df, None, count=count) if count is not None else gf
+    """Selector + time-range FETCH on whichever route _local_fetch picks.
+    A count-based FETCH (the last `count` points per series) has no
+    kernel and stays on the Spark route."""
+    gf = _local_fetch(st, selectors, start, end) if count is None else None
+    return gf if gf is not None else _spark_fetch(st, selectors, start, end, count)
 
 
 def _fetch_map(st, params: dict):
