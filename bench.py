@@ -183,7 +183,7 @@ def main() -> None:
     # verdict #8): the driver captures a bounded tail of stdout and
     # parses the last JSON line — the pre-r9 single full line (~2.6 KB
     # with five per-query dicts) overflowed that tail and parsed as
-    # null in BENCH_r08.json. The last line stays the machine-readable
+    # null in docs/history/BENCH_r08.json. The last line stays the machine-readable
     # contract (bench_ab/bench_cores read the last parseable line) and
     # carries everything they use (value, queries, exec, build_value,
     # exec_value); the detail line keeps extended/spread/per-phase for

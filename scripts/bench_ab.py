@@ -11,7 +11,7 @@ comparable). This script:
    of biasing one side,
 3. reports per-side totals, per-query medians-of-medians, paired deltas,
    and the measured drift band (spread of same-code totals across pairs),
-4. writes the whole thing to BENCH_AB_r{ROUND}.json.
+4. writes the whole thing to docs/history/BENCH_AB_r{ROUND}.json.
 
 Usage: python scripts/bench_ab.py [--pairs 4] [--baseline <commit>]
        (SPARK_GRAFT_SF_DIR selects the fixture; default sf0.1)
@@ -147,7 +147,7 @@ def main() -> None:
         "runs": pairs,
     }
     round_no = os.environ.get("ROUND", "9")
-    path = os.path.join(REPO, f"BENCH_AB_r{round_no}.json")
+    path = os.path.join(REPO, "docs", "history", f"BENCH_AB_r{round_no}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(

@@ -15,10 +15,10 @@ relative to the 4-core run — EXEC time only, because plan build is
 driver-side and constant by construction (the decade probe quantified
 it; a core-scaling number polluted by it would understate every query).
 
-Writes BENCH_CORES_r{N}.json and prints a markdown table for SCALE.md.
+Writes docs/history/BENCH_CORES_r{N}.json and prints a markdown table for SCALE.md.
 
 Usage: python scripts/bench_cores.py [--sf-dir DIR] [--cores 4,8,16,32]
-       [--runs 3] [--out BENCH_CORES_r8.json]
+       [--runs 3] [--out docs/history/BENCH_CORES_r8.json]
 Run on an idle box (same rule as bench.py — concurrent load reads as
 fake serial fractions).
 """
@@ -79,7 +79,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.path.join(REPO, ".cache", "sf1"))
     ap.add_argument("--cores", default="4,8,16,32")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--out", default=os.path.join(REPO, "BENCH_CORES_r8.json"))
+    ap.add_argument("--out", default=os.path.join(REPO, "docs", "history", "BENCH_CORES_r8.json"))
     args = ap.parse_args()
     cores = [int(c) for c in args.cores.split(",")]
 

@@ -8,6 +8,9 @@
 
 Usage: python scripts/driver_mirror.py [--json FILE] [sf_dir] [query ...]
 Prints one line per query: PASS / NO_ORACLE / FAIL(reason) / ERR(exc).
+Ledgers are kept as docs/history/MIRROR_*_r<N>.txt (stdout) and
+docs/history/CORRECTNESS_*.json (--json); tests/test_ledgers.py reads
+the newest MIRROR_r<N>.txt there.
 --json additionally writes a CORRECTNESS-style machine-diffable record:
 {"meta": {sf_dir, mode, tz, ansi, parts, full_run, when},
  "results": {name: {"status": ..., "secs": ..., "reason": ...}}}

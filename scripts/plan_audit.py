@@ -12,7 +12,7 @@ and extracts scale-relevant counters from ``explain('formatted')``:
 - ``scans``          — parquet scans, and whether any scan reads a full
                        row (no ReadSchema pruning)
 
-The report is written to PLANAUDIT_r$ROUND.md (ROUND env, default 9)
+The report is written to docs/history/PLANAUDIT_r$ROUND.md (ROUND env, default 9)
 sorted by (cartesian desc,
 python_evals desc, exchanges desc) so offenders float to the top.
 A small allowlist documents queries whose counters are legitimately
@@ -228,7 +228,8 @@ def main() -> None:
         lines += ["", "## Errors", ""]
         for r in errors:
             lines.append(f"- {r['name']}: {r['error']}")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), f"PLANAUDIT_r{os.environ.get('ROUND', '9')}.md")
+    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "history",
+                       f"PLANAUDIT_r{os.environ.get('ROUND', '9')}.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"\nwrote {out}: {len(flagged)} flagged, {len(errors)} errors")

@@ -9,7 +9,7 @@ records wall-clock + plan shape + cap behavior. This is the axis
 `continuum/store/Directory.java` (HLL stats, streaming metadata
 iterators) exists for in the reference.
 
-Usage: python scripts/probe_directory_scale.py [--out DIRSCALE_r9.json]
+Usage: python scripts/probe_directory_scale.py [--out docs/history/DIRSCALE_r9.json]
 Prints a markdown table for SCALE.md, writes the JSON artifact.
 """
 
@@ -18,11 +18,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-FIXTURE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "series1m"
-)
+FIXTURE = os.path.join(REPO, ".cache", "series1m")
 
 
 def timed(fn, *a, **kw):
@@ -32,7 +31,7 @@ def timed(fn, *a, **kw):
 
 
 def main():
-    out_path = "DIRSCALE_r9.json"
+    out_path = os.path.join(REPO, "docs", "history", "DIRSCALE_r9.json")
     if "--out" in sys.argv:
         out_path = sys.argv[sys.argv.index("--out") + 1]
     if not os.path.exists(os.path.join(FIXTURE, "events.parquet")):

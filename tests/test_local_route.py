@@ -253,8 +253,42 @@ def test_java_only_regexes_take_the_spark_route(spark, sf_dir, sel, same_as):
     local, want = fetch({"selector": same_as, "end": end, "timespan": span})
     assert local and want
     assert fetch({"selector": sel, "end": end, "timespan": span}) == (False, want)
-    if "user" not in sel:  # the list form spells label clauses as exact values
+    if "user" not in sel:  # only a class-only selector maps to the list form here
         assert fetch([sel[:-2], {}, end - span + 1, end]) == (False, want)
+
+
+@pytest.mark.parametrize("gate", ["default", "zero"])
+def test_list_form_fetch_reads_label_regexes(spark, sf_dir, monkeypatch, gate):
+    """In list-form FETCH a `~` label value is a regex clause, as in the
+    map-form selector; a `=` prefix or a bare value is exact.  Checked on
+    the route the gate picks and on the Spark route."""
+    import json
+
+    from warp10_platform_spark.warpscript.stack import WarpScriptStack
+
+    if gate == "zero":
+        monkeypatch.setattr(WF, "_LOCAL_MAX_BYTES", 0)
+
+    def fetch(args):
+        st = WarpScriptStack(spark, sf_dir)
+        st.push(args)
+        WF.REGISTRY["FETCH"](st)
+        gf = st.pop()
+        if gf.local:
+            t = gf.table
+            rows = zip(t["class"].to_pylist(), t["labels_key"].to_pylist(), t["ts"].to_pylist())
+        else:
+            rows = map(tuple, gf.df.select("class", "labels_key", "ts").collect())
+        return gf.local, sorted(rows)
+
+    end, span = 2_000_000_000_000_000, 1_000_000_000_000_000
+    local, want = fetch({"selector": "events.click{user~1[0-9]}", "end": end, "timespan": span})
+    assert want and local == (gate == "default")
+    assert fetch(["events.click", {"user": "~1[0-9]"}, end - span + 1, end]) == (local, want)
+    user = json.loads(want[0][1])[0]["value"]
+    one = [r for r in want if r[1] == want[0][1]]
+    for value in (user, "=" + user):
+        assert fetch(["events.click", {"user": value}, end - span + 1, end]) == (local, one)
 
 
 def test_fetch_without_kernel_runs_the_spark_plan(spark, sf_dir, monkeypatch):

@@ -27,7 +27,7 @@ def test_ssss_roundtrip():
 
 
 def test_ssss_any_k_of_n():
-    from warp10_platform_spark.warpscript.functions_ext import ssss_recover, ssss_split
+    from warp10_platform_spark.warpscript.functions_codecs import ssss_recover, ssss_split
 
     secret = bytes(range(40))
     rng = random.Random(7)
@@ -210,7 +210,7 @@ def test_metaset_distributed_encode_byte_identical(spark, sf_dir, monkeypatch):
 
     from warp10_platform_spark.core import gtscodec as gc
     from warp10_platform_spark.functions import aes
-    from warp10_platform_spark.warpscript import functions_ext
+    from warp10_platform_spark.warpscript import functions_series
 
     args = ["btoken", "~.*", {}, float("nan"), float("nan"), 3600000000, 60000000]
 
@@ -229,7 +229,7 @@ def test_metaset_distributed_encode_byte_identical(spark, sf_dir, monkeypatch):
         ), ms
 
     driver_bytes, driver_ms = run()
-    monkeypatch.setattr(functions_ext, "_METASET_DISTRIBUTED_FLOOR", 0)
+    monkeypatch.setattr(functions_series, "_METASET_DISTRIBUTED_FLOOR", 0)
     dist_bytes, dist_ms = run()
     assert len(driver_ms["metadatas"]) > 1
     assert dist_ms["metadatas"] == driver_ms["metadatas"]

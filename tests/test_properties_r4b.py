@@ -179,7 +179,7 @@ def test_gts_decoder_never_crashes(blob):
 def test_ssss_split_recover_roundtrip(secret, k, extra, seed):
     import random
 
-    from warp10_platform_spark.warpscript.functions_ext import ssss_recover, ssss_split
+    from warp10_platform_spark.warpscript.functions_codecs import ssss_recover, ssss_split
 
     n = k + extra
     shares = ssss_split(secret, n, k, random.Random(seed))

@@ -39,7 +39,7 @@ def _signed(x: int) -> int:
 
 def test_siphash24_reference_vectors():
     """SipHashInlineTest.testVectors: 64 official siphash24.c vectors."""
-    from warp10_platform_spark.warpscript.functions_ext import _siphash24
+    from warp10_platform_spark.warpscript.functions_codecs import _siphash24
 
     k0 = 0x0706050403020100
     k1 = 0x0F0E0D0C0B0A0908

@@ -52,7 +52,7 @@ def test_rename_relabel_carry_construct_identity(spark, sf_dir):
 def test_geometry_serializers_parse_text_input():
     """->WKT and ->GEOJSON accept a serialized geometry as well as a
     shape: the text is parsed first, in the one registered function."""
-    from warp10_platform_spark.warpscript import functions_ext as FX
+    from warp10_platform_spark.warpscript import functions_geo as FX
 
     assert REGISTRY["->WKT"] is FX._towkt_shape
     assert REGISTRY["->GEOJSON"] is FX._togeojson_shape

@@ -105,3 +105,36 @@ def test_events_points_labels_key_matches_canonical(spark):
         | (F.col("gts_id") != F.xxhash64(F.col("class"), canonical_labels()))
     ).count()
     assert bad == 0
+
+
+def test_cores_default_to_the_machines(monkeypatch):
+    """Without SPARK_GRAFT_CPUS a session runs local[os.cpu_count()] with
+    as many shuffle partitions; the variable still wins when set."""
+    from warp10_platform_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, m):
+            self.conf["master"] = m
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.setattr(session, "SparkSession", type("SparkSession", (), {"builder": Builder()}))
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 3)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    conf = session.get_spark()
+    assert (conf["master"], conf["spark.sql.shuffle.partitions"]) == ("local[3]", "3")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    conf = session.get_spark()
+    assert (conf["master"], conf["spark.sql.shuffle.partitions"]) == ("local[5]", "5")

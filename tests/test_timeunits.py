@@ -141,7 +141,6 @@ def test_unit_suffixes_reference_semantics_subprocess():
     prog = (
         "import sys; sys.path.insert(0, '.');\n"
         "from warp10_platform_spark.warpscript.functions import REGISTRY\n"
-        "import warp10_platform_spark.warpscript.functions_ext\n"
         "class St(list):\n"
         "    push = list.append\n"
         "    def pop(self): return list.pop(self)\n"

@@ -244,6 +244,21 @@ def metamatch_predicate(
     return pred
 
 
+def selector_of(cls: str, labels: dict | None) -> str:
+    """The selector of a class and a labels map, as FETCH, FIND and
+    METASET take them (FETCH.java:101-141): a value with a `~` prefix is
+    a regex clause; one with a `=` prefix, or any other value, is exact.
+    Names and values are URL-encoded like to_selector, so a `,` or a
+    brace inside a value stays part of it; the class is kept as given."""
+    enc = functools.partial(urllib.parse.quote, safe="")
+    clauses = []
+    for k, v in (labels or {}).items():
+        v = str(v)
+        op = "~" if v.startswith("~") else "="
+        clauses.append(f"{enc(str(k))}{op}{enc(v[1:] if v[:1] in ('~', '=') else v)}")
+    return f"{cls}{{{','.join(clauses)}}}"
+
+
 def to_selector(cls: str, labels: dict[str, str] | None = None, exact: bool = True) -> str:
     """TOSELECTOR (TOSELECTOR.java:30): (class, labels) → selector string,
     URL-encoding names/values like the reference (inverse of

@@ -264,29 +264,6 @@ def _fit_filler(df: DataFrame, kind: str, value_col: str) -> DataFrame:
     return df.groupBy("gts_id").applyInPandas(run, schema=out_schema)
 
 
-def macro_filler(df: DataFrame, fn, value_col: str = "v_agg") -> DataFrame:
-    """MACROFILLER (MACROFILLER.java:40): custom Python fill model —
-    fn(x_present, y_present, x_missing) -> y_missing arrays, per series
-    via applyInPandas (the filler-side of the MACROMAPPER surface)."""
-    import numpy as np
-    import pandas as pd
-
-    out_schema = df.schema
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts").reset_index(drop=True)
-        mask = pdf[value_col].notna().to_numpy()
-        if mask.sum() < 1 or mask.all():
-            return pdf
-        x = pdf.loc[mask, "ts"].to_numpy(np.float64)
-        y = pdf.loc[mask, value_col].to_numpy(np.float64)
-        xq = pdf.loc[~mask, "ts"].to_numpy(np.float64)
-        pdf.loc[~mask, value_col] = np.asarray(fn(x, y, xq), dtype=np.float64)
-        return pdf
-
-    return df.groupBy("gts_id").applyInPandas(run, schema=out_schema)
-
-
 def fill_spline(df: DataFrame, value_col: str = "v_agg") -> DataFrame:
     """filler.spline (FillerSpline.java:29) — natural cubic spline."""
     return _fit_filler(df, "spline", value_col)

@@ -12,10 +12,8 @@ from __future__ import annotations
 
 import operator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from warp10_platform_spark.core.selector import selector_predicate
 
 
 def filter_byclass(df: DataFrame, regex: str) -> DataFrame:
@@ -30,12 +28,6 @@ def filter_bylabels(df: DataFrame, clauses: dict[str, str]) -> DataFrame:
         e = F.element_at(F.col("labels"), k)
         pred = pred & e.isNotNull() & e.rlike(regex)
     return df.where(pred)
-
-
-def filter_byselector(df: DataFrame, selector: str) -> DataFrame:
-    """filter.byselector (FilterBySelector.java:32) — shares the FETCH
-    selector compiler."""
-    return df.where(selector_predicate(selector))
 
 
 def _semi_join_series(df: DataFrame, series_pred: DataFrame) -> DataFrame:
@@ -59,33 +51,6 @@ def filter_last(df: DataFrame, cmp: str, threshold, value_col: str = "v_double")
     lastv = df.groupBy("gts_id").agg(F.max_by(value_col, "ts").alias("lv"))
     keep = _CMP[cmp](F.col("lv"), F.lit(threshold))
     return _semi_join_series(df, lastv.withColumn("keep", keep))
-
-
-def filter_any(df: DataFrame, point_pred: Column) -> DataFrame:
-    """filter.any (FilterAny.java:33): keep series where ANY point matches
-    — exists ≙ max(pred) aggregate."""
-    anyp = df.groupBy("gts_id").agg(F.max(point_pred.cast("int")).alias("a"))
-    return _semi_join_series(df, anyp.withColumn("keep", F.col("a") == 1))
-
-
-def nonempty(df: DataFrame) -> DataFrame:
-    """NONEMPTY (NONEMPTY.java) — with a points-table representation an
-    empty series has no rows, so this is the identity; kept for API parity."""
-    return df
-
-
-def filter_active_after(df: DataFrame, t: int) -> DataFrame:
-    """FETCH active.after (FETCH.java params): keep series whose LAST
-    tick is ≥ t — live series only."""
-    last = df.groupBy("gts_id").agg(F.max("ts").alias("lt"))
-    return _semi_join_series(df, last.withColumn("keep", F.col("lt") >= t))
-
-
-def filter_quiet_after(df: DataFrame, t: int) -> DataFrame:
-    """FETCH quiet.after: keep series with NO tick ≥ t — gone-quiet
-    series (the complement of active.after)."""
-    last = df.groupBy("gts_id").agg(F.max("ts").alias("lt"))
-    return _semi_join_series(df, last.withColumn("keep", F.col("lt") < t))
 
 
 def mfilter(df: DataFrame, fn, value_col: str = "v_double") -> DataFrame:

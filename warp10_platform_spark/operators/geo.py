@@ -8,8 +8,6 @@ lat/lon/elev columns; series-track math is lag windows over gts_id.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -78,15 +76,6 @@ def geo_within_bbox(df: DataFrame, lat_min: float, lat_max: float, lon_min: floa
     )
 
 
-def geo_outside_bbox(df: DataFrame, lat_min: float, lat_max: float, lon_min: float, lon_max: float) -> DataFrame:
-    """mapper.geo.outside — the complement (null locations drop, like the
-    reference which only keeps located points)."""
-    return df.where(
-        F.col("lat").isNotNull()
-        & ~(F.col("lat").between(lat_min, lat_max) & F.col("lon").between(lon_min, lon_max))
-    )
-
-
 def geo_within_polygon(df: DataFrame, polygon: list[tuple[float, float]]) -> DataFrame:
     """mapper.geo.within for an arbitrary polygon (MapperGeoWithin.java:36
     with a GeoXPShape): ray-casting point-in-polygon, unrolled into pure
@@ -146,15 +135,6 @@ def truecourse(df: DataFrame, out_col: str = "course_deg") -> DataFrame:
     x = F.cos(lat1) * F.sin(lat2) - F.sin(lat1) * F.cos(lat2) * F.cos(dlon)
     deg = F.degrees(F.atan2(y, x))
     return df.withColumn(out_col, (deg + 360.0) % 360.0)
-
-
-def latlon_extract(df: DataFrame) -> DataFrame:
-    """mapper.geo.latitude / longitude / elevation extracts
-    (MapperGeoLatitude.java:31 et al.): location components become the
-    value columns."""
-    return df.withColumn("v_lat", F.col("lat")).withColumn("v_lon", F.col("lon")).withColumn(
-        "v_elev", F.col("elev").cast("double")
-    )
 
 
 def geo_approximate(df: DataFrame, bits: int = 8) -> DataFrame:

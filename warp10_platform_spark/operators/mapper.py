@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from warp10_platform_spark.core import timeunits as tu

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def merge(*dfs: DataFrame) -> DataFrame:

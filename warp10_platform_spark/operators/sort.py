@@ -6,13 +6,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sort_ticks(df: DataFrame, reverse: bool = False) -> DataFrame:
-    """SORT/RSORT (SORT.java:27; GTSHelper.sort:139). In the DataFrame
-    model order is imposed by downstream windows; a global orderBy is only
-    needed for export — exposed for that path."""
-    return df.orderBy(F.col("ts").desc() if reverse else F.col("ts").asc())
-
-
 def valuesort(df: DataFrame, value_col: str = "v_double", reverse: bool = False) -> DataFrame:
     """VALUESORT/RVALUESORT (VALUESORT.java:27)."""
     return df.orderBy(F.col(value_col).desc() if reverse else F.col(value_col).asc())

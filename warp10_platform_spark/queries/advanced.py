@@ -12,8 +12,8 @@ from warp10_platform_spark.operators.mapper import map_scalar, npdf_mapper
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.core import timeunits as tu
 from warp10_platform_spark.queries.gts import PTS
-from warp10_platform_spark.sources.directory import build_directory, findstats
-from warp10_platform_spark.sources.tables import canonical_points, events_points
+from warp10_platform_spark.sources.directory import build_directory
+from warp10_platform_spark.sources.tables import canonical_points
 
 _B_START, _B_END = tu.us(1704844800000000), tu.us(1705708800000000)
 

@@ -29,10 +29,8 @@ from warp10_platform_spark.analytics import stats as _stats
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.core import timeunits as tu
 UPS = float(tu.UNITS_PER_S)
-from warp10_platform_spark.queries.gts import DAILY, DAY, LASTBUCKET, NDAYS, PTS, _bucketized
-from warp10_platform_spark.sources.tables import canonical_points, events_points
-
-_USER = 'get_json_object(labels_key, "$[0].value")'
+from warp10_platform_spark.queries.gts import DAILY, DAY, LASTBUCKET, NDAYS, PTS, _bucketized, _bucketized_decimal_mean
+from warp10_platform_spark.sources.tables import canonical_points
 
 
 def _user():
@@ -557,3 +555,239 @@ def interp3d_tricubic(spark, sf_dir):
         ((1 + F.expr("event_id DIV 9") % 3).cast("double") + F.lit(0.25) * (1 + F.expr("event_id DIV 11") % 3)).alias("z"),
     )
     return apply_interpolator_3d(q, xs, xs, xs, fgrid)
+
+
+# Daily event counts per class (all users folded together) — a small
+# per-class series pair for lag analysis.
+_CLASS_DAILY = (
+    'cd AS (SELECT class, ts, CAST(count(*) AS DOUBLE) AS v FROM daily GROUP BY class, ts)'
+)
+
+
+@register("correlate_sliding", (
+    f"WITH {PTS}, {DAILY}, {_CLASS_DAILY}, "
+    # counts are integral: scale-0 decimals keep the moment sums exact
+    # while their squares stay inside DuckDB's INT64 unscaled arithmetic
+    # (scale-6 squares overflow at sf1 magnitudes)
+    "a AS (SELECT ts, v::DECIMAL(18,0) AS va FROM cd WHERE class = 'events.purchase'), "
+    "b AS (SELECT ts, v::DECIMAL(18,0) AS vb FROM cd WHERE class = 'events.click'), "
+    "lags AS (SELECT unnest([-2, -1, 0, 1, 2]) AS lag), "
+    f"j AS (SELECT lag, va, vb FROM a JOIN (SELECT lag, ts + lag * {DAY} AS ts, vb FROM b, lags) s USING (ts)), "
+    "m AS (SELECT lag, count(*) AS n, "
+    "             CAST(sum(va) AS DOUBLE) AS sa, CAST(sum(vb) AS DOUBLE) AS sb, "
+    "             CAST(sum(va * va) AS DOUBLE) AS saa, CAST(sum(vb * vb) AS DOUBLE) AS sbb, "
+    "             CAST(sum(va * vb) AS DOUBLE) AS sab FROM j GROUP BY lag) "
+    "SELECT lag, n, round((sab - sa * sb / n) / sqrt((saa - sa * sa / n) * (sbb - sb * sb / n)), 6) AS corr "
+    "FROM m WHERE n >= 2 AND (saa - sa * sa / n) > 0 AND (sbb - sb * sb / n) > 0"
+))
+def correlate_sliding(spark, sf_dir):
+    """CORRELATE (continuum/gts/CORRELATE.java): sliding cross-correlation
+    of the daily purchase-count series against the click-count series at
+    lags −2..+2 days — one exploded join, exact DECIMAL moment sums."""
+    counts = _bucketized(spark, sf_dir, "bucketizer.count")
+    base = counts.df.groupBy("class", "ts").agg(
+        F.sum("v_agg").cast("double").alias("v"), F.lit("{}").alias("labels_key")
+    )
+    a = base.where(F.col("class") == "events.purchase")
+    b = base.where(F.col("class") == "events.click")
+    out = _fit.correlate_lagged(a, b, lags=[-2, -1, 0, 1, 2], step_us=DAY,
+                                value_col="v", decimal_type="decimal(18,0)")
+    return out.select("lag", "n", F.round("corr", 6).alias("corr"))
+
+
+_BRK = (-0.6745, 0.0, 0.6745)  # alphabet-4 gaussian breakpoints (SAXUtils)
+
+
+def _sax_letter_sql(z: str) -> str:
+    return (
+        f"CASE WHEN {z} < {_BRK[0]} THEN 'a' WHEN {z} < {_BRK[1]} THEN 'b' "
+        f"WHEN {z} < {_BRK[2]} THEN 'c' ELSE 'd' END"
+    )
+
+
+_PAT_WIN = (
+    "w AS (SELECT class, \"user\", ts, v, "
+    "             lead(v, 1) OVER win AS v1, lead(v, 2) OVER win AS v2, lead(v, 3) OVER win AS v3 "
+    "      FROM dm WINDOW win AS (PARTITION BY class, \"user\" ORDER BY ts)), "
+    "z AS (SELECT class, \"user\", ts, (v + v1 + v2 + v3) / 4.0 AS m, "
+    "             sqrt(((v - (v + v1 + v2 + v3) / 4.0) * (v - (v + v1 + v2 + v3) / 4.0) "
+    "                 + (v1 - (v + v1 + v2 + v3) / 4.0) * (v1 - (v + v1 + v2 + v3) / 4.0) "
+    "                 + (v2 - (v + v1 + v2 + v3) / 4.0) * (v2 - (v + v1 + v2 + v3) / 4.0) "
+    "                 + (v3 - (v + v1 + v2 + v3) / 4.0) * (v3 - (v + v1 + v2 + v3) / 4.0)) / 4.0) AS sd, "
+    "             v, v1, v2, v3 "
+    "      FROM w WHERE v3 IS NOT NULL)"
+)
+
+
+@register("patterns_match", (
+    f"WITH {PTS}, {DAILY}, "
+    'dm AS (SELECT class, "user", ts, round(CAST(sum(v::DECIMAL(28,10)) AS DOUBLE) / count(v), 6) AS v '
+    '       FROM daily GROUP BY class, "user", ts), '
+    f"{_PAT_WIN}, "
+    "words AS (SELECT class, \"user\", ts, "
+    f"   {_sax_letter_sql('CASE WHEN sd = 0 THEN 0.0 ELSE (v - m) / sd END')} || "
+    f"   {_sax_letter_sql('CASE WHEN sd = 0 THEN 0.0 ELSE (v1 - m) / sd END')} || "
+    f"   {_sax_letter_sql('CASE WHEN sd = 0 THEN 0.0 ELSE (v2 - m) / sd END')} || "
+    f"   {_sax_letter_sql('CASE WHEN sd = 0 THEN 0.0 ELSE (v3 - m) / sd END')} AS word "
+    "   FROM z) "
+    "SELECT class, \"user\" AS user, ts, word FROM words WHERE word LIKE 'a%d'"
+))
+def patterns_match(spark, sf_dir):
+    """PATTERNDETECTION (functions/PATTERNDETECTION.java:32, SAXUtils):
+    slide a 4-bucket window over each daily-mean series, z-normalize per
+    window, SAX-discretize (alphabet 4), emit ticks whose word matches
+    the rising pattern 'a..d' — all JVM exprs, letter thresholds shared
+    bit-for-bit with the oracle."""
+    dm = _bucketized_decimal_mean(spark, sf_dir)
+    w = Window.partitionBy("class", "labels_key").orderBy("ts")
+    d = dm.select("class", "labels_key", "ts", F.col("v_agg").alias("v"))
+    d = (
+        d.withColumn("v1", F.lead("v", 1).over(w))
+        .withColumn("v2", F.lead("v", 2).over(w))
+        .withColumn("v3", F.lead("v", 3).over(w))
+        .where(F.col("v3").isNotNull())
+    )
+    m = (F.col("v") + F.col("v1") + F.col("v2") + F.col("v3")) / 4.0
+    var = (
+        (F.col("v") - m) * (F.col("v") - m)
+        + (F.col("v1") - m) * (F.col("v1") - m)
+        + (F.col("v2") - m) * (F.col("v2") - m)
+        + (F.col("v3") - m) * (F.col("v3") - m)
+    ) / 4.0
+    sd = F.sqrt(var)
+
+    def letter(vc):
+        z = F.when(sd == 0, F.lit(0.0)).otherwise((vc - m) / sd)
+        return (
+            F.when(z < _BRK[0], "a").when(z < _BRK[1], "b").when(z < _BRK[2], "c").otherwise("d")
+        )
+
+    word = F.concat(letter(F.col("v")), letter(F.col("v1")), letter(F.col("v2")), letter(F.col("v3")))
+    return (
+        d.select("class", _user(), "ts", word.alias("word"))
+        .where(F.col("word").like("a%d"))
+    )
+
+
+@register("dwt_haar", (
+    f"WITH {PTS}, {DAILY}, "
+    'dm AS (SELECT class, "user", ts, round(CAST(sum(v::DECIMAL(28,10)) AS DOUBLE) / count(v), 6) AS v '
+    '       FROM daily GROUP BY class, "user", ts), '
+    'idx AS (SELECT class, "user", v, row_number() OVER (PARTITION BY class, "user" ORDER BY ts) - 1 AS i FROM dm), '
+    'pairs AS (SELECT class, "user", i // 2 AS k, '
+    "                 max(CASE WHEN i % 2 = 0 THEN v END) AS v0, "
+    "                 max(CASE WHEN i % 2 = 1 THEN v END) AS v1 "
+    '          FROM idx GROUP BY class, "user", i // 2) '
+    'SELECT class, "user" AS user, k, '
+    "       round((v0 + v1) / 1.4142135623730951, 6) AS approx, "
+    "       round((v0 - v1) / 1.4142135623730951, 6) AS detail "
+    "FROM pairs WHERE v1 IS NOT NULL"
+))
+def dwt_haar(spark, sf_dir):
+    """FDWT, one Haar level (script/fwt/): pairwise (sum, diff)/√2 over
+    each daily-mean series — identical arithmetic on both sides, so the
+    compare is bit-exact after round(6)."""
+    dm = _bucketized_decimal_mean(spark, sf_dir)
+    out = _fit.haar_dwt_level1(dm, value_col="v_agg")
+    return out.select(
+        "class", _user(), "k", F.round("approx", 6).alias("approx"), F.round("detail", 6).alias("detail")
+    )
+
+
+# ---------- oracled spectral + sketch queries ----------
+
+_FFT_CD = (
+    'cd AS (SELECT class, ts, CAST(count(*) AS DOUBLE) AS v FROM daily GROUP BY class, ts)'
+)
+
+
+@register("fft_bins", (
+    "WITH {pts}, {daily}, {cd}, "
+    "arr AS (SELECT class, list(v ORDER BY ts) AS a FROM cd GROUP BY class), "
+    "bins AS (SELECT class, a, k FROM arr, (SELECT unnest([1, 2, 3, 4]) AS k) ks), "
+    "c AS (SELECT class, k, "
+    f"  list_reduce(list_transform(a, (x, i) -> x * cos({_TWO_PI} * k * (i - 1) / len(a))), (p, q) -> p + q) AS re, "
+    f"  list_reduce(list_transform(a, (x, i) -> x * sin({_TWO_PI} * k * (i - 1) / len(a))), (p, q) -> p + q) AS im "
+    "  FROM bins) "
+    "SELECT class, k, round(sqrt(re * re + im * im), 6) AS magnitude FROM c"
+).format(pts=PTS, daily=__import__("warp10_platform_spark.queries.gts", fromlist=["DAILY"]).DAILY, cd=_FFT_CD))
+def fft_bins(spark, sf_dir):
+    """FFT at fixed bins (continuum/gts/FFT.java): DFT magnitude of each
+    class's daily-count series at frequency bins k=1..4. The sums fold a
+    ts-ordered array left-to-right on BOTH engines (Spark `aggregate`
+    with 0.0 seed == DuckDB `list_reduce` first-element seed, exact),
+    so the doubles match bit-for-bit before round(6). Unlike the numpy
+    fft_top_bins (rows-only), this shape is fully JVM-side and oracled."""
+    counts = _bucketized(spark, sf_dir, "bucketizer.count")
+    base = counts.df.groupBy("class", "ts").agg(F.sum("v_agg").cast("double").alias("v"))
+    arr = base.groupBy("class").agg(
+        F.expr("transform(sort_array(collect_list(struct(ts, v))), s -> s.v)").alias("a")
+    )
+    bins = arr.select("class", "a", F.explode(F.array(*[F.lit(i) for i in (1, 2, 3, 4)])).alias("k"))
+    k, n = F.col("k"), F.size("a")
+
+    def fold(trig):
+        terms = F.transform("a", lambda x, i: x * trig(F.lit(_TWO_PI) * k * i / n))
+        return F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)
+
+    re, im = fold(F.cos), fold(F.sin)
+    return bins.select("class", "k", F.round(F.sqrt(re * re + im * im), 6).alias("magnitude"))
+
+
+# HyperLogLog with a portable hash: both engines derive the SAME 60-bit
+# hash from md5, so registers, integer-exact 2^-M sums, and the estimate
+# agree bit-for-bit — an HLL whose oracle is the same HLL, not a
+# tolerance band.
+_HLL_SQL = (
+    f"WITH {PTS}, "
+    "h AS (SELECT class, ('0x' || substr(md5('hll:' || \"user\"), 1, 15))::BIGINT AS hv FROM pts), "
+    "r AS (SELECT class, hv >> 52 AS reg, hv & ((1::BIGINT << 52) - 1) AS w FROM h), "
+    "m AS (SELECT class, reg, max(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS mj "
+    "      FROM r GROUP BY class, reg), "
+    "s AS (SELECT class, sum(1::BIGINT << (53 - mj)) AS sum_int, count(*) AS nreg FROM m GROUP BY class), "
+    "e AS (SELECT class, "
+    "        (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 * 9007199254740992.0 "
+    "          / CAST(sum_int + (256 - nreg) * (1::BIGINT << 53) AS DOUBLE) AS e_raw, "
+    "        256 - nreg AS v0 FROM s), "
+    "x AS (SELECT class, CASE WHEN e_raw <= 640.0 AND v0 > 0 THEN 256.0 * ln(256.0 / v0) ELSE e_raw END AS est FROM e), "
+    "d AS (SELECT class, count(DISTINCT \"user\") AS n_exact FROM pts GROUP BY class) "
+    "SELECT x.class, CAST(floor(x.est) AS BIGINT) AS hll_est, d.n_exact "
+    "FROM x JOIN d ON x.class = d.class"
+)
+
+
+@register("hll_cardinality", _HLL_SQL)
+def hll_cardinality(spark, sf_dir):
+    """FINDSTATS HLL (the reference's HyperLogLogPlus,
+    script/HyperLogLogPlus.java): per-class distinct-user estimate with
+    p=8 (256 registers). The 2^-M register sum is kept as an exact
+    BIGINT in 2^-53 units, so the only float ops are one division and
+    (in the small-range branch) one ln — identical in both engines.
+    Pure streaming aggregate: no distinct, no shuffle of raw users —
+    THE sketch shape for 100 TB directory stats. Exact count joined in
+    for reference."""
+    pts = canonical_points(spark, sf_dir)
+    user = F.element_at("labels", "user")
+    h = F.expr(
+        "cast(conv(substr(md5(concat('hll:', element_at(labels, 'user'))), 1, 15), 16, 10) AS bigint)"
+    )
+    r = pts.select(
+        "class",
+        F.shiftright(h, 52).alias("reg"),
+        (h.bitwiseAND(F.expr("shiftleft(CAST(1 AS BIGINT), 52) - 1"))).alias("w"),
+        user.alias("user"),
+    )
+    rho = F.when(F.col("w") == 0, F.lit(53)).otherwise(F.lit(53) - F.length(F.expr("bin(w)")))
+    m = r.groupBy("class", "reg").agg(F.max(rho).alias("mj"))
+    s = m.groupBy("class").agg(
+        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 53 - mj)")).alias("sum_int"),
+        F.count("*").alias("nreg"),
+    )
+    alpha_m2 = (0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0 * 9007199254740992.0
+    total = (F.col("sum_int") + (F.lit(256) - F.col("nreg")) * F.expr("shiftleft(CAST(1 AS BIGINT), 53)")).cast("double")
+    e_raw = F.lit(alpha_m2) / total
+    v0 = F.lit(256) - F.col("nreg")
+    est = F.when((e_raw <= 640.0) & (v0 > 0), F.lit(256.0) * F.log(F.lit(256.0) / v0)).otherwise(e_raw)
+    x = s.select("class", F.floor(est).cast("long").alias("hll_est"))
+    d = r.groupBy("class").agg(F.count_distinct("user").alias("n_exact"))
+    return x.join(d, on="class")

@@ -20,7 +20,7 @@ from warp10_platform_spark.sources.directory import (
     findstats,
 )
 from warp10_platform_spark.core import timeunits as tu
-from warp10_platform_spark.sources.tables import canonical_points, events_points
+from warp10_platform_spark.sources.tables import canonical_points
 
 TZ = "Europe/Paris"
 

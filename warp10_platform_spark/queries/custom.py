@@ -8,15 +8,13 @@ harness against a DuckDB oracle computing the same math in SQL.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import functions as F
 
-from warp10_platform_spark.core.frame import GTSFrame
 from warp10_platform_spark.functions import macro_bucketizer, macro_mapper, macro_reducer
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.core import timeunits as tu
 from warp10_platform_spark.queries.gts import DAILY, DAY, LASTBUCKET, NDAYS, PTS, _bucketized_decimal_mean
-from warp10_platform_spark.sources.tables import canonical_points, events_points
+from warp10_platform_spark.sources.tables import canonical_points
 
 
 def _wmean(fr) -> float:

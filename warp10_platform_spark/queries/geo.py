@@ -15,7 +15,7 @@ from warp10_platform_spark.queries import register
 from warp10_platform_spark.core import timeunits as tu
 from warp10_platform_spark.queries.gts import PTS
 from warp10_platform_spark.sources import write as _write
-from warp10_platform_spark.sources.tables import canonical_points, events_points
+from warp10_platform_spark.sources.tables import canonical_points
 
 # lat/lon derived from the tick: bounded, varies per point, same formula
 # in Spark and SQL. (No geo columns in the driver testdata.)
@@ -423,4 +423,30 @@ def ws_geo_formats(spark, sf_dir):
     c = _with_coords(spark, sf_dir).withColumn("_hh", to_geoxp_col(F.col("lat"), F.col("lon")))
     return c.where(cov.contains_hh_expr(F.col("_hh"))).groupBy("class").agg(
         F.count("*").alias("n")
+    )
+
+
+_TC_SQL = (
+    "degrees(atan2(sin(radians(lon - plon)) * cos(radians(lat)), "
+    "cos(radians(plat)) * sin(radians(lat)) - sin(radians(plat)) * cos(radians(lat)) * cos(radians(lon - plon))))"
+)
+
+
+@register("geo_truecourse", (
+    f"WITH {PTS}, "
+    f'c AS (SELECT class, "user", ts, {_LAT_SQL} AS lat, {_LON_SQL} AS lon FROM pts), '
+    'l AS (SELECT class, "user", ts, lat, lon, lag(lat) OVER w AS plat, lag(lon) OVER w AS plon '
+    '      FROM c WINDOW w AS (PARTITION BY class, "user" ORDER BY ts)) '
+    f"SELECT class, \"user\", ts, round(({_TC_SQL} + 360.0) % 360.0, 3) AS course_deg "
+    "FROM l WHERE plat IS NOT NULL"
+))
+def geo_truecourse(spark, sf_dir):
+    """TRUECOURSE (aggregator/TrueCourse.java:38): per-segment initial
+    bearing along the synthetic track."""
+    out = _geo.truecourse(_with_coords(spark, sf_dir))
+    return out.where(F.col("course_deg").isNotNull()).select(
+        "class",
+        F.element_at("labels", F.lit("user")).alias("user"),
+        "ts",
+        F.round("course_deg", 3).alias("course_deg"),
     )

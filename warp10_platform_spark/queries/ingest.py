@@ -13,7 +13,7 @@ from warp10_platform_spark.queries import register
 from warp10_platform_spark.queries.gts import PTS
 from warp10_platform_spark.sources.gts_text import format_gts_lines, parse_gts_lines
 from warp10_platform_spark.core import timeunits as tu
-from warp10_platform_spark.sources.tables import canonical_points, epoch_ticks_col, events_points, load_table
+from warp10_platform_spark.sources.tables import canonical_points, epoch_ticks_col, load_table
 
 
 @register(

@@ -26,7 +26,7 @@ from warp10_platform_spark.analytics import fit as _fit
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.core import timeunits as tu
 EPOCH_TS = tu.duck_epoch('ts')
-from warp10_platform_spark.queries.analytics import _E_LAM
+from warp10_platform_spark.queries.analytics import _E_LAM, _user
 from warp10_platform_spark.queries.gts import DAILY, HOUR, LASTBUCKET, PTS, _bucketized
 from warp10_platform_spark.queries.stl_oracle import _iteration
 
@@ -127,10 +127,6 @@ SELECT b.class, b."user", b.ts, round(s.val, 6) + 0.0 AS v_smooth
 FROM base b JOIN rl{r}_out s ON {ke} AND b.x = s.x
 """
     return head + "," + ",".join(chunks) + tail
-
-
-def _user():
-    return F.get_json_object("labels_key", "$[0].value").alias("user")
 
 
 def _rlowess_frame(spark, sf_dir):

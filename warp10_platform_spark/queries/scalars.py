@@ -1,9 +1,8 @@
-"""Coverage sweep 5 — the §2.9 scalar-function surface as oracled queries:
+"""Scalar-function queries — the §2.9 surface as oracled queries:
 BigDecimal exact arithmetic, TSELEMENTS/FROMTSELEMENTS in a named tz,
 ISO8601 DURATION/ADDDURATION/HUMANDURATION, string codecs
 (TOB64/HEX/MD5/DIGEST), JSON parse (JSONTO), deterministic RAND/RANDPDF,
 and the list higher-order functions (LMAP/LFILTER/SUBLIST/SIZE).
-
 Reference registrations: WarpScriptLib.java:2985-3032 (math),
 functions/BDADD.java (BigDecimal suite), functions/TSELEMENTS.java:36,
 functions/DURATION.java:43, functions/ADDDURATION.java:35,
@@ -16,10 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from warp10_platform_spark.functions.timeutil import humanduration, parse_duration
 from warp10_platform_spark.core import timeunits as tu
+from warp10_platform_spark.functions.timeutil import humanduration, parse_duration
 from warp10_platform_spark.queries import register
-from warp10_platform_spark.sources.tables import epoch_ticks_col, epoch_us_col, load_table
+from warp10_platform_spark.sources.tables import epoch_ticks_col, load_table
 
 
 # ---------- BigDecimal suite (BD* — exact decimal arithmetic) ----------
@@ -90,7 +89,11 @@ def tselements_tz(spark, sf_dir):
 # ---------- ISO8601 durations ----------
 
 _ISO = "P1DT2H30M"
+
+
 _SHIFT_US = parse_duration(_ISO)  # oracle hardcodes the expected µs: an
+
+
 # independent check that the parser agrees with the ISO8601 spec value.
 
 

@@ -16,7 +16,7 @@ engine-ambiguous, so the QUERY restricts).
 
 from __future__ import annotations
 
-from warp10_platform_spark.queries.gts import DAILY, NDAYS, PTS
+from warp10_platform_spark.queries.gts import DAILY, PTS
 
 PERIOD = 7
 ITERATIONS = 2

@@ -16,7 +16,7 @@ from warp10_platform_spark.operators import mapper as _mapper
 from warp10_platform_spark.operators import reduce_apply as _ra
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.queries.gts import DAILY, DAY, LASTBUCKET, NDAYS, PTS
-from warp10_platform_spark.sources.tables import canonical_points, epoch_us_col, events_points, load_table
+from warp10_platform_spark.sources.tables import canonical_points, epoch_us_col, load_table
 
 
 def _daily_bool(spark, sf_dir, cls: str, min_count: int):

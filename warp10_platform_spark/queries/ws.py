@@ -320,7 +320,7 @@ def ws_exp_smoothing(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------
-# Round 4: the analytics/reshape registry tranches exercised end-to-end
+# The analytics/reshape registry families exercised end-to-end
 # from pasted scripts (VERDICT r3 item 1 — the names existed in the
 # engine but were unreachable from /exec until the 747-name registry).
 # ---------------------------------------------------------------------
@@ -794,7 +794,7 @@ def ws_pickle_roundtrip(spark, sf_dir):
     """->PICKLE / PICKLE-> (TOPICKLE.java, PICKLETO.java): a data-bearing
     map (per-class point counts) survives the pickle wire format — the
     Python-adjacent egress a Warp 10 + Python user relies on. The
-    unpickler is the restricted data-only one (functions_ext.PICKLE->)."""
+    unpickler is the restricted data-only one (functions_stack.PICKLE->)."""
     from warp10_platform_spark.warpscript.stack import WarpScriptStack
 
     hi = LASTBUCKET + DAY * 366

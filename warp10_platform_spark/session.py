@@ -11,6 +11,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Local cores when SPARK_GRAFT_CPUS is unset: the machine's own."""
+    return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "warp10-platform-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -21,8 +26,8 @@ def get_spark(app_name: str = "warp10-platform-spark", shuffle_partitions: int |
     - Arrow: every pandas-UDF operator (FILL spline, STL, DTW...) rides
       Arrow batches.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    cpus_i = int(cpus) if cpus.isdigit() else 32
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cores())
+    cpus_i = int(cpus) if cpus.isdigit() else default_cores()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

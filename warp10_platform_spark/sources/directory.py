@@ -150,14 +150,10 @@ def directory_table(spark, sf_dir: str) -> DataFrame:
     points store — asserted by tests/test_plans.py."""
     import os
 
-    from warp10_platform_spark.sources.tables import _cache_key, events_points
+    from warp10_platform_spark.sources.tables import _cache_key, cache_path, events_points
 
     key = _cache_key(sf_dir)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        f"directory_{key}",
-    )
+    path = cache_path(f"directory_{key}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         build_directory(events_points(spark, sf_dir)).write.mode("overwrite").parquet(path)
     from warp10_platform_spark.sources.tables import _read_parquet_memo

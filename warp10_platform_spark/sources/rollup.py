@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from warp10_platform_spark.core import timeunits as tu
 from warp10_platform_spark.core.schema import labels_from_key
 from warp10_platform_spark.operators.bucketize import SERIES_KEYS
-from warp10_platform_spark.sources.tables import _cache_key, canonical_points
+from warp10_platform_spark.sources.tables import _cache_key, cache_path, canonical_points
 
 # One hour in platform ticks (µs default; scales with WARP10_TIME_UNITS).
 HOUR_US = tu.us(3_600_000_000)
@@ -102,11 +102,7 @@ def rollup_points(spark: SparkSession, sf_dir: str, span_us: int = HOUR_US) -> D
     24 hour-partials (associativity again), so materializing the whole
     ladder costs one raw scan plus rollup-sized regroups."""
     key = _cache_key(sf_dir)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        f"rollup_{span_us}_{key}_v2",  # v2: +s1q/s2q moment partials
-    )
+    path = cache_path(f"rollup_{span_us}_{key}_v2")  # v2: +s1q/s2q moment partials
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         if span_us != HOUR_US and span_us % HOUR_US == 0:
             base = rollup_points(spark, sf_dir, HOUR_US)
@@ -406,11 +402,7 @@ def histogram_points(
     # Cache key carries ALL bin-geometry parameters (span, n_bins, lo, hi)
     # so a later call with different edges can never be served a stale
     # table built with different bins.
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        f"hist_{span_us}_{n_bins}_{lo:g}_{hi:g}_{key}",
-    )
+    path = cache_path(f"hist_{span_us}_{n_bins}_{lo:g}_{hi:g}_{key}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         src = histogram_partials(canonical_points(spark, sf_dir), span_us, lo, hi, n_bins)
         src.write.mode("overwrite").partitionBy("class").parquet(path)

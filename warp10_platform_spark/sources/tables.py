@@ -184,9 +184,14 @@ def canonical_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_parquet_memo(spark, path)
 
 
-def _points_path(sf_dir: str) -> str:
+def cache_path(name: str) -> str:
+    """`name` under the repo's .cache/, where materialized layouts live."""
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(root, ".cache", f"points_{_cache_key(sf_dir)}")
+    return os.path.join(root, ".cache", name)
+
+
+def _points_path(sf_dir: str) -> str:
+    return cache_path(f"points_{_cache_key(sf_dir)}")
 
 
 class PointsLayout:
@@ -252,19 +257,6 @@ def points_layout(spark: SparkSession, sf_dir: str) -> PointsLayout:
     return hit
 
 
-# DuckDB-side equivalent of events_points, for oracle SQL construction —
-# the epoch extractor flips with the session unit so both engines put the
-# SAME integers on the time axis.
-EVENTS_POINTS_SQL = f"""
-SELECT 'events.' || event_type AS class,
-       CAST(user_id AS VARCHAR) AS "user",
-       {tu.duck_epoch('ts')} AS ts,
-       value AS v_double,
-       event_id
-FROM events
-"""
-
-
 def bucketed_points(spark: SparkSession, sf_dir: str, buckets: int = 8) -> DataFrame:
     """The points table in its co-located STORAGE layout: bucketed by
     gts_id and sorted by (gts_id, ts) inside each bucket — SURVEY §1.6's
@@ -279,11 +271,7 @@ def bucketed_points(spark: SparkSession, sf_dir: str, buckets: int = 8) -> DataF
     .cache/ and re-registered into the session catalog on reuse."""
     key = _cache_key(sf_dir)
     name = f"points_bucketed_{key}"
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        name,
-    )
+    path = cache_path(name)
     return _attach_bucketed(
         spark, events_points(spark, sf_dir), name, path, "gts_id", ("gts_id", "ts"), buckets
     )
@@ -332,11 +320,7 @@ def partitioned_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer function of the platform µs tick, so deriving the partition
     predicate from a ts range is exact (no timezone, no calendar)."""
     key = _cache_key(sf_dir)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        f"points_day_{key}",
-    )
+    path = cache_path(f"points_day_{key}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             events_points(spark, sf_dir)
@@ -365,11 +349,7 @@ def bucketed_fact(spark: SparkSession, sf_dir: str, table: str, key: str, bucket
     canonical_points."""
     key_sig = _cache_key(sf_dir, table)
     name = f"{table}_by_{key}_{key_sig}"
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        name,
-    )
+    path = cache_path(name)
     return _attach_bucketed(
         spark, load_table(spark, sf_dir, table), name, path, key, (key,), buckets
     )

@@ -97,18 +97,3 @@ def export_tsv(points: DataFrame, value_col: str = "v_double") -> DataFrame:
             F.col(value_col).cast("string"),
         ).alias("value")
     )
-
-
-def export_json(points: DataFrame, value_col: str = "v_double") -> DataFrame:
-    """JSON dump: one object per point {c, l, ts, v} — the /fetch json
-    format's row shape, via to_json (JVM, schema-stable key order)."""
-    return points.select(
-        F.to_json(
-            F.struct(
-                F.col("class").alias("c"),
-                F.col("labels").alias("l"),
-                F.col("ts").alias("ts"),
-                F.col(value_col).alias("v"),
-            )
-        ).alias("value")
-    )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from warp10_platform_spark.core import timeunits as _tuc
 from warp10_platform_spark.core.frame import GTSFrame
+from warp10_platform_spark.core.selector import selector_of
 from warp10_platform_spark.sources.tables import canonical_points, events_points
 
 
@@ -282,7 +283,6 @@ REGISTRY["TOSTRING"] = lambda st: st.push(str(st.pop()))
 
 # ---------- time units & now (Constants.java:51-61 — session unit) ----------
 
-_US = _tuc.us(1)
 # Unit-suffix functions (script/unary/UNIT.java, registered at
 # WarpScriptLib.java:2268-2276): tick = Math.round(v * factor_ms *
 # TIME_UNITS_PER_MS), factor in ms per named unit — fractional for
@@ -527,8 +527,7 @@ def _fetch_map(st, params: dict):
     elif "selector" in params:
         selectors = [str(params["selector"])]
     elif "class" in params:
-        labels = params.get("labels") or {}
-        selectors = [str(params["class"]) + "{" + ",".join(f"{k}={v}" for k, v in labels.items()) + "}"]
+        selectors = [selector_of(str(params["class"]), params.get("labels"))]
     else:
         raise ValueError("FETCH missing 'selector', 'selectors', 'class' or 'metaset' parameter.")
 
@@ -601,7 +600,7 @@ def _fetch(st):
         cls, labels, a, b = args
     else:
         raise ValueError("FETCH expects [ token? class labels start end ]")
-    selector = cls + "{" + ",".join(f"{k}={v}" for k, v in (labels or {}).items()) + "}"
+    selector = selector_of(cls, labels)
     if isinstance(b, int) and b < 0:
         st.push(_fetch_frame(st, [selector], None, a, -b))
     else:
@@ -614,8 +613,7 @@ def _find(st):
 
     args = st.pop()
     cls, labels = (args[-4], args[-3]) if len(args) >= 4 else (args[0], args[1] if len(args) > 1 else {})
-    selector = cls + "{" + ",".join(f"{k}={v}" for k, v in (labels or {}).items()) + "}"
-    st.push(find(build_directory(events_points(st.spark, st.sf_dir)), selector))
+    st.push(find(build_directory(events_points(st.spark, st.sf_dir)), selector_of(cls, labels)))
 
 
 @register("BUCKETIZE")
@@ -813,7 +811,7 @@ def _map(st):
         ))
     elif isinstance(mapper, tuple) and mapper[0].startswith("mapper.") and mapper[0].count(".") == 2 and \
             mapper[0].split(".")[2] in ("tick", "lat", "lon", "elev", "hhcode"):
-        from warp10_platform_spark.warpscript.functions_ext import apply_field_mapper
+        from warp10_platform_spark.warpscript.functions_series import apply_field_mapper
 
         st.push(GTSFrame(apply_field_mapper(gf, mapper[0], mapper[1]), gf.bucketspec, gf.value_col))
     elif mapper == "mapper.geo.clear":
@@ -2654,6 +2652,19 @@ def with_gts_id_from_unwrap(df):
     )
 
 
-# ---------- extension tranches (round 4) ----------
-# imported last for its registration side effects; see functions_ext.py
-from warp10_platform_spark.warpscript import functions_ext as _ext  # noqa: E402,F401
+# ---------- the other name families ----------
+# Each module binds its names into REGISTRY when imported; they import
+# REGISTRY, register and the helpers above, so they load after them.
+from warp10_platform_spark.warpscript import (  # noqa: E402,F401
+    functions_canvas,
+    functions_codecs,
+    functions_concurrent,
+    functions_geo,
+    functions_http,
+    functions_math,
+    functions_pgp,
+    functions_secure,
+    functions_sensision,
+    functions_series,
+    functions_stack,
+)

@@ -23,7 +23,7 @@ from warp10_platform_spark.core import timeunits as _tuc
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
-from warp10_platform_spark.warpscript.functions import REGISTRY, register
+from warp10_platform_spark.warpscript.functions import register
 
 _SHM: dict[str, tuple[object, str]] = {}  # symbol -> (value, owning mutex)
 _LOCKS: dict[str, threading.RLock] = {}

@@ -13,7 +13,7 @@ from __future__ import annotations
 from warp10_platform_spark.core import timeunits as _tuc
 
 from warp10_platform_spark.functions import pgp as P
-from warp10_platform_spark.warpscript.functions import REGISTRY, register
+from warp10_platform_spark.warpscript.functions import register
 
 
 def _keyid_of(v) -> int:

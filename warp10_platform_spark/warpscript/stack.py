@@ -63,14 +63,6 @@ class ScriptStop(Exception):
     """STOP (STOP.java): end script execution without error."""
 
 
-class Mark:
-    """List-open marker (reference MARK sentinel for `[`)."""
-
-
-class MapMark(Mark):
-    """Map-open marker for `{`."""
-
-
 class WarpScriptStack:
     def __init__(self, spark, sf_dir: str, max_ops: int = 100_000, max_depth: int = 1000,
                  bootstrap: bool = True):

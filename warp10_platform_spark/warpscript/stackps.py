@@ -7,7 +7,7 @@ through the BlockingSignal mechanism — here one flag, since there is no
 bootstrap-vs-user code distinction to preserve).
 
 Registrations live here (imported by stack.py for the registry side
-effect is avoided — functions.py imports this via functions_ext)."""
+effect is avoided — functions.py imports this via functions_concurrent)."""
 
 from __future__ import annotations
 
