@@ -112,7 +112,7 @@ def test_cores_default_to_the_machines(monkeypatch):
     as many shuffle partitions; the variable still wins when set."""
     from warp10_platform_spark import session
 
-    class Builder:
+    class Recorder:
         def __init__(self):
             self.conf = {}
 
@@ -130,7 +130,7 @@ def test_cores_default_to_the_machines(monkeypatch):
         def getOrCreate(self):
             return self.conf
 
-    monkeypatch.setattr(session, "SparkSession", type("SparkSession", (), {"builder": Builder()}))
+    monkeypatch.setattr(session, "SparkSession", type("SparkSession", (), {"builder": Recorder()}))
     monkeypatch.setattr(session.os, "cpu_count", lambda: 3)
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     conf = session.get_spark()
