@@ -20,6 +20,24 @@ def test_registry_size_650_plus():
     assert len(REGISTRY) >= 650, len(REGISTRY)
 
 
+@pytest.mark.parametrize("family", ["math", "codecs", "geo", "stack", "series"])
+def test_family_module_can_be_imported_first(family):
+    """A functions_<family> module imported before functions.py, in a
+    fresh process, still ends with every name bound: the families import
+    only functions.py, so its import list never meets a half-loaded one."""
+    import os
+    import subprocess
+    import sys
+
+    prog = (f"import warp10_platform_spark.warpscript.functions_{family}\n"
+            "from warp10_platform_spark.warpscript.functions import REGISTRY\n"
+            "print(len(REGISTRY))")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", prog], cwd=repo, capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.split()[-1]) == len(REGISTRY)
+
+
 def test_registry_refuses_rebinding():
     """Each WarpScript name has one definition: binding a bound name
     again raises, through register() or a direct item write."""

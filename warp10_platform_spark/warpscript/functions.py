@@ -2026,6 +2026,9 @@ REGISTRY["~"] = lambda st: st.push(~int(st.pop()))
 REGISTRY["BITGET"] = _bitop(lambda a, b: (a >> b) & 1)
 REGISTRY["BITCOUNT"] = lambda st: st.push(bin(int(st.pop()) & 0xFFFFFFFFFFFFFFFF).count("1"))
 
+# Java long bounds (exact math and the codecs' unsigned → signed folds).
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+
 
 # ---------- string encodings / URL / UUID ----------
 

@@ -17,8 +17,7 @@ import struct as _struct
 import zlib as _zlib
 
 from warp10_platform_spark.core.frame import GTSFrame
-from warp10_platform_spark.warpscript.functions import REGISTRY, _to_bytes, register
-from warp10_platform_spark.warpscript.functions_math import _I64_MAX
+from warp10_platform_spark.warpscript.functions import _I64_MAX, REGISTRY, _to_bytes, register
 
 
 # ---- bit-level views of doubles/floats/longs ----

@@ -17,10 +17,7 @@ from decimal import ROUND_CEILING, ROUND_FLOOR, ROUND_HALF_UP, Decimal
 from pyspark.sql import functions as F
 
 from warp10_platform_spark.core.frame import GTSFrame
-from warp10_platform_spark.warpscript.functions import REGISTRY, _as_frame, register
-
-
-_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+from warp10_platform_spark.warpscript.functions import _I64_MAX, _I64_MIN, REGISTRY, _as_frame, register
 
 
 # ---- matrix / tensor tier — STACK values (commons-math RealMatrix/
