@@ -9,8 +9,10 @@ the same N seeded dashboard scripts (perfbench.gen, seed 7), rewritten to
 that selection, on both routes in one process (patching the gate), the
 order alternating per script, after 5 warm-up scripts per route.  Each
 sample is one /exec answer: WarpScriptStack.exec plus the JSON render.
-It prints one JSON line per (fixture, selection): the bytes the gate sees
-and each route's median and quartiles in ms.  Run it on an idle box.
+It prints one JSON line per (fixture, selection): the bytes the gate sees,
+the seconds a fresh build of the fixture's series directory takes (the
+one-time cost the driver route adds when a layout is first opened) and
+each route's median and quartiles in ms.  Run it on an idle box.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ def main(argv=None) -> int:
     from warp10_platform_spark.__main__ import _jsonable
     from warp10_platform_spark.core.selector import parse_selector
     from warp10_platform_spark.session import get_spark
+    from warp10_platform_spark.sources.directory import SeriesDirectory
     from warp10_platform_spark.sources.tables import points_layout
     from warp10_platform_spark.warpscript import WarpScriptStack
     from warp10_platform_spark.warpscript import functions as WF
@@ -61,6 +64,9 @@ def main(argv=None) -> int:
 
     for sf in args.sf:
         layout = points_layout(spark, sf)
+        t0 = time.perf_counter()
+        SeriesDirectory(layout.fragments)
+        build_s = time.perf_counter() - t0
         for name in args.selections:
             cls = SELECTIONS[name]
             ms = {"arrow": [], "spark": []}
@@ -75,6 +81,7 @@ def main(argv=None) -> int:
             print(json.dumps({
                 "sf": os.path.basename(sf), "selection": name,
                 "gate_bytes": layout.size(layout.classes([parse_selector(cls)])),
+                "directory_build_s": round(build_s, 3),
                 **{f"{r}_ms": {"q1": round(x[0], 1), "median": round(x[1], 1), "q3": round(x[2], 1)}
                    for r, x in q.items()},
             }), flush=True)

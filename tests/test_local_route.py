@@ -12,6 +12,7 @@ import pytest
 
 from warp10_platform_spark.core.frame import GTSFrame
 from warp10_platform_spark.warpscript import functions as WF
+from warp10_platform_spark.warpscript.stack import WarpScriptStack
 
 
 def _rows(gf):
@@ -314,3 +315,121 @@ def test_fetch_without_kernel_runs_the_spark_plan(spark, sf_dir, monkeypatch):
     for s, w in zip(scripts, want):
         gf = _fetch(spark, sf_dir, s)
         assert not gf.local and _plan(gf.df) == w, s
+
+
+@pytest.mark.parametrize("args, rows", [
+    # an exact label; `=` with an empty value, which matches an absent label only
+    ({"selector": "events.click{user=7}"}, "some"),
+    ({"selector": "events.click{user=}"}, "none"),
+    ({"selector": "events.click{other=}"}, "some"),
+    # `~.*` on a present key and on an absent one
+    ({"selector": "events.click{user~.*}"}, "some"),
+    ({"selector": "events.click{other~.*}"}, "none"),
+    # a class regex, two selectors, and the list form
+    ({"selector": r"~events\.(click|view){user~1[0-9]}"}, "some"),
+    ({"selectors": ["events.view{user~1[0-9]}", "events.click{user=7}"]}, "some"),
+    ([r"~events\.(click|view)", {"user": "~1[0-9]"}], "some"),
+    # no match
+    ({"selector": "events.click{user=nobody}"}, "none"),
+    ({"selector": "events.nothing{}"}, "none"),
+])
+def test_directory_lookup_answers_like_the_spark_route(spark, sf_dir, monkeypatch, args, rows):
+    """The series directory selects the rows and renders the JSON the
+    Spark route does (the gate patched to 0); a selector that matches no
+    series answers an empty frame without scanning."""
+    from warp10_platform_spark.__main__ import _jsonable
+    from warp10_platform_spark.sources.tables import PointsLayout
+
+    end, span = 2_000_000_000_000_000, 1_000_000_000_000_000
+
+    def fetch():
+        st = WarpScriptStack(spark, sf_dir)
+        if isinstance(args, dict):
+            st.push({**args, "end": end, "timespan": span})
+        else:
+            st.push([*args, end - span + 1, end])
+        WF.REGISTRY["FETCH"](st)
+        gf = st.pop()
+        if gf.local:
+            t = gf.table
+            got = zip(*(t[c].to_pylist() for c in ("class", "labels_key", "ts", "v_double")))
+        else:
+            got = map(tuple, gf.df.select("class", "labels_key", "ts", "v_double").collect())
+        return gf.local, sorted(got), _jsonable(gf, None, False)
+
+    with monkeypatch.context() as m:
+        m.setattr(WF, "_LOCAL_MAX_BYTES", 0)
+        remote, want, want_json = fetch()
+    if rows == "none":
+        def no_scan(*a):
+            raise AssertionError("scanned although no series matched")
+
+        monkeypatch.setattr(PointsLayout, "scan", no_scan)
+    local, got, got_json = fetch()
+    assert local and not remote
+    assert bool(want) == (rows == "some")
+    assert got == want and got_json == want_json
+
+
+def test_scan_reads_only_the_matched_series_without_maps(spark, sf_dir, monkeypatch):
+    """The scan's Table holds exactly the matched rows in the time range,
+    in the layout's schema with the maps attached, and the read never
+    asks the files for the labels or attributes maps."""
+    import pyarrow.compute as pc
+
+    from warp10_platform_spark.core.selector import matches, parse_selector
+    from warp10_platform_spark.sources.tables import PointsLayout, points_layout
+
+    layout = points_layout(spark, sf_dir)
+    read = PointsLayout._read
+    asked = []
+
+    def recording(self, classes, columns, cond):
+        asked.append((classes, columns))
+        return read(self, classes, columns, cond)
+
+    monkeypatch.setattr(PointsLayout, "_read", recording)
+    everything = layout.dataset.to_table()
+    ts = everything["ts"]
+    start, end = pc.min(ts).as_py() + 1, pc.max(ts).as_py() - 1
+    for text in (r"~events\.(click|view){user~1[0-9]}", "events.click{user=7}", "~.*{}"):
+        sel = parse_selector(text)
+        got = layout.scan(layout.directory.select([sel]), start, end)
+        keep = [start <= r["ts"] <= end and matches(sel, r["class"], dict(r["labels"]), dict(r["attributes"]))
+                for r in everything.to_pylist()]
+        want = everything.filter(pa.array(keep))
+        assert got.schema.equals(everything.schema, check_metadata=True)
+        key = [(c, "ascending") for c in ("class", "labels_key", "ts", "event_id")]
+        assert got.sort_by(key).equals(want.sort_by(key)), text
+        assert want.num_rows and set(asked[-1][0]) == set(want["class"].to_pylist())
+    assert not {"labels", "attributes"} & {c for _, cols in asked for c in cols}
+
+
+def test_a_shared_gts_id_does_not_mix_series(tmp_path):
+    """Two series of one class that share a gts_id: selecting one scans
+    both (the filter holds gts_ids), but keeps that one's rows only, with
+    its own maps."""
+    import pyarrow.parquet as pq
+
+    from warp10_platform_spark.core.selector import parse_selector
+    from warp10_platform_spark.operators.gts_kernels import labels_key
+    from warp10_platform_spark.sources.tables import PointsLayout
+
+    series = [{"h": "a"}, {"h": "b", "k": "x"}, {}]
+    pick = [0, 1, 2, 0, 1, 2]
+    mp = pa.map_(pa.string(), pa.string())
+    pq.write_to_dataset(pa.table({
+        "labels": pa.array([list(series[i].items()) for i in pick], mp),
+        "attributes": pa.array([[("n", str(i))] for i in pick], mp),
+        "ts": pa.array(range(len(pick)), pa.int64()),
+        "v_double": pa.array([float(i) for i in range(len(pick))]),
+        "labels_key": [labels_key(series[i]) for i in pick],
+        "gts_id": pa.array([1, 1, 2, 1, 1, 2], pa.int64()),
+        "class": ["c"] * len(pick),
+    }), str(tmp_path), partition_cols=["class"])
+    layout = PointsLayout(str(tmp_path))
+    for text, want in (("c{h=a}", [0, 3]), ("c{k=x}", [1, 4]), ("c{h=}", [2, 5]), ("c{h~.*}", [0, 1, 3, 4])):
+        t = layout.scan(layout.directory.select([parse_selector(text)]), None, None)
+        assert t["ts"].to_pylist() == want, text
+        assert t["labels"].to_pylist() == [list(series[pick[i]].items()) for i in want]
+        assert t["attributes"].to_pylist() == [[("n", str(pick[i]))] for i in want]

@@ -1,5 +1,5 @@
-"""Hypothesis property tests for the round-4 tiers: WKB/KML/GML codecs,
-the canvas rasterizer's coverage rule, and the JPEG codec."""
+"""Hypothesis property tests for the codecs: WKB/KML/GML geometry, the
+canvas rasterizer's coverage rule, and the JPEG codec."""
 
 import numpy as np
 from hypothesis import given, settings

@@ -5,13 +5,21 @@ The reference selects series with `class{label=v,label~regex}` selectors:
 `class{labels}{attributes}` (MetadataSelectorMatcher.java:41-55, regex
 EXPR_RE at :55; PARSESELECTOR/TOSELECTOR functions).
 
-Here a selector compiles to a pure Spark Column predicate — Catalyst can
-push the class equality into the Parquet scan and prune partitions; regex
-label clauses become rlike on element_at(labels, k).
+The reference's FETCH looks the selector up in its Directory first and
+then reads the matched series only (FETCH.java:238 →
+StandaloneDirectoryClient).  FETCH has two routes here:
 
-This replaces the reference's Directory metadata lookup (FETCH.java:238 →
-StandaloneDirectoryClient) with predicate pushdown + an optional
-directory-table pre-filter (see sources/directory.py).
+- Spark: a selector compiles to a pure Spark Column predicate — Catalyst
+  can push the class equality into the Parquet scan and prune
+  partitions; regex label clauses become rlike on element_at(labels, k).
+  A directory-table pre-filter is optional (sources/directory.py).
+- the driver (small requests): the selector is looked up in the points
+  layout's SeriesDirectory (sources/directory.py) — `class_matches` once
+  per class, `clause_test` once per distinct label value plus once for
+  an absent label — and only the matched series are scanned.
+
+`clause_test` is the one driver-side definition of a label clause; the
+Column compiler below mirrors it.
 """
 
 from __future__ import annotations
@@ -142,29 +150,27 @@ def matches(
     parseLabelsSelectors). Clause semantics mirror the Column compiler
     above exactly; used per ingested line, never in a query plan."""
     sel = parse_selector(selector) if isinstance(selector, str) else selector
-    return (class_matches(sel, cls) and labels_match(sel, labels or {})
+    return (class_matches(sel, cls) and _clauses_match(sel.labels, labels or {})
             and _clauses_match(sel.attributes, attributes or {}))
 
 
-def _clause_ok(src: dict[str, str], key: str, op: str, val: str) -> bool:
-    v = src.get(key)
+def clause_test(key: str, op: str, val: str):
+    """The test one clause applies to a key's value (None where the key
+    is absent): the one definition `matches` and the driver-side series
+    directory (sources/directory.SeriesDirectory) both use."""
     if op == "=":
         if val == "":
             # empty exact value matches absent label too (reference)
-            return v is None or v == ""
-        return v == val
+            return lambda v: v is None or v == ""
+        return lambda v: v == val
     if val == ".*":
-        return True if key == "" else v is not None
-    return v is not None and _pattern(val).match(v) is not None
+        return (lambda v: True) if key == "" else (lambda v: v is not None)
+    match = _pattern(val).match
+    return lambda v: v is not None and match(v) is not None
 
 
 def _clauses_match(clauses: list[tuple[str, str, str]], src: dict[str, str]) -> bool:
-    return all(_clause_ok(src, key, op, val) for key, op, val in clauses)
-
-
-def labels_match(sel: Selector, labels: dict[str, str]) -> bool:
-    """The label clauses of `matches`."""
-    return _clauses_match(sel.labels, labels)
+    return all(clause_test(key, op, val)(src.get(key)) for key, op, val in clauses)
 
 
 def class_matches(sel: Selector, cls: str) -> bool:

@@ -24,10 +24,7 @@ Agreement with the Spark operators (tests/test_local_route.py):
 
 from __future__ import annotations
 
-import functools
-import json
 import re
-from types import MappingProxyType
 
 import numpy as np
 import pyarrow as pa
@@ -119,31 +116,6 @@ def _aggregate(n: str, v: np.ndarray, ok: np.ndarray, g: np.ndarray, ng: int, p:
 
 def _column(values: np.ndarray, valid: np.ndarray) -> pa.Array:
     return pa.array(values, mask=~valid)
-
-
-@functools.lru_cache(maxsize=1 << 16)
-def _labels(key: str) -> MappingProxyType:
-    """The labels a labels_key encodes; read-only, as callers share it."""
-    return MappingProxyType({e["key"]: e["value"] for e in json.loads(key)})
-
-
-def select_series(table: pa.Table, selectors) -> pa.Table:
-    """Rows whose series any parsed selector (without attribute clauses)
-    matches: the class part is decided once per distinct class and the
-    label clauses once per distinct labels_key."""
-    from warp10_platform_spark.core.selector import class_matches, labels_match
-
-    cls = table["class"].combine_chunks().dictionary_encode()
-    lk = table["labels_key"].combine_chunks().dictionary_encode()
-    classes = cls.dictionary.to_pylist()
-    labels = [_labels(k) for k in lk.dictionary.to_pylist()]
-    ok = np.zeros((len(classes), len(labels)), bool)
-    for s in selectors:
-        c_ok = np.array([class_matches(s, c) for c in classes], bool)
-        if c_ok.any():
-            ok |= np.outer(c_ok, [labels_match(s, lab) for lab in labels])
-    keep = ok[cls.indices.to_numpy(zero_copy_only=False), lk.indices.to_numpy(zero_copy_only=False)]
-    return table if keep.all() else table.filter(pa.array(keep))
 
 
 def bucketize(table: pa.Table, bucketizer: str, span: int, lastbucket: int | None,

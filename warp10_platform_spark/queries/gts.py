@@ -13,10 +13,9 @@ from pyspark.sql import functions as F
 from warp10_platform_spark.core.frame import GTSFrame
 from warp10_platform_spark.core.schema import labels_from_key
 from warp10_platform_spark.operators import outliers as _outliers
-from warp10_platform_spark.operators import reshape as _reshape
 from warp10_platform_spark.operators import sort as _sort
 from warp10_platform_spark.queries import register
-from warp10_platform_spark.sources.tables import canonical_points, events_points
+from warp10_platform_spark.sources.tables import canonical_points
 
 from warp10_platform_spark.core import timeunits as tu
 

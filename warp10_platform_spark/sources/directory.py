@@ -1,26 +1,131 @@
-"""Directory table — series metadata separated from points (SURVEY §1.6).
+"""Directory — series metadata separated from points (SURVEY §1.6).
 
 The reference keeps a dedicated Directory service (class/labels →
-classId/labelsId, served from memory, backed by LevelDB/HBase;
-FETCH.java:238 → StandaloneDirectoryClient) so metadata selectors never
-touch the points store. The Spark analog is a small `directory` table:
-one row per series with identity + stats, consulted by FIND/FINDSTATS
-and used as a broadcast semi-join filter in front of FETCH.
+classId/labelsId, served from memory, backed by LevelDB/HBase) and its
+FETCH looks the selector up there first, then reads the matched series
+only (FETCH.java:238 → StandaloneDirectoryClient → GTSDecoderIterator),
+so metadata selectors never touch the points store.  There are two
+analogs here:
 
-At 100 TB the directory is maintained incrementally at ingest (the
-streaming_last view is its seed) and persisted as its own parquet —
-~1e6 series rows vs ~1e12 point rows, a 10^6× smaller scan for every
-metadata-only query. Here it is derived on demand from the points frame
-(same schema, same consumers).
+- `SeriesDirectory`, held on the driver, one entry per series of the
+  class-partitioned points layout (sources/tables.PointsLayout builds it
+  from the layout's own files).  FETCH's driver route looks the selector
+  up in it: each class once, each label clause once per distinct value
+  of its label plus once for "absent".  The pyarrow scan that follows
+  filters on the matched gts_ids and the ts bounds and decodes no map
+  column; the maps come from the directory.
+- The Spark `directory` table: one row per series with identity + stats,
+  consulted by FIND/FINDSTATS and used as a broadcast semi-join filter
+  in front of FETCH.  At 100 TB it is maintained incrementally at ingest
+  (the streaming_last view is its seed) and persisted as its own parquet
+  — ~1e6 series rows vs ~1e12 point rows, a 10^6× smaller scan for every
+  metadata-only query.  Here it is derived on demand from the points
+  frame (same schema, same consumers).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from warp10_platform_spark.core.schema import labels_from_key
-from warp10_platform_spark.core.selector import selector_predicate
+from warp10_platform_spark.core.selector import class_matches, clause_test, selector_predicate
+
+
+def _first_rows(t: pa.Table) -> pa.Table:
+    """The first row of each distinct labels_key of `t`."""
+    codes = pc.dictionary_encode(t["labels_key"].combine_chunks()).indices.to_numpy()
+    return t.take(np.unique(codes, return_index=True)[1])
+
+
+class SeriesDirectory:
+    """The series of a class-partitioned points layout, held on the
+    driver as columns and sorted by (class, labels_key).
+
+    Per series: the codes of its class and labels_key, its gts_id, and
+    the labels and attributes maps of its first row.  Per label name:
+    its distinct values and each series' code among them (-1 where the
+    series lacks the label).  No Python object exists per series."""
+
+    def __init__(self, fragments: dict[str, list]):
+        """Read the (class, labels_key) series of `fragments` (class →
+        parquet fragments), one file at a time."""
+        self.classes = sorted(fragments)
+        cols = ["labels_key", "gts_id", "labels", "attributes"]
+        parts, class_code = [], []
+        for code, cls in enumerate(self.classes):
+            part = pa.concat_tables([_first_rows(f.to_table(columns=cols)) for f in fragments[cls]])
+            parts.append(_first_rows(part))
+            class_code.append(np.full(parts[-1].num_rows, code, np.int64))
+        series = pa.concat_tables(parts)
+        keys = pc.dictionary_encode(series["labels_key"].combine_chunks())
+        class_code = np.concatenate(class_code)
+        key_code = keys.indices.to_numpy().astype(np.int64)
+        order = np.lexsort((key_code, class_code))
+        series = series.take(order)
+        self.keys = keys.dictionary
+        self.class_code = class_code[order]
+        self.key_code = key_code[order]
+        # ascending, so searchsorted finds the series of a (class, labels_key)
+        self._pair = self.class_code * len(self.keys) + self.key_code
+        self.gts_id = series["gts_id"].to_numpy()
+        self.labels = series["labels"].combine_chunks()
+        self.attributes = series["attributes"].combine_chunks()
+        offsets = self.labels.offsets.to_numpy()
+        first, used = int(offsets[0]), int(offsets[-1] - offsets[0])
+        names, values = self.labels.keys.slice(first, used), self.labels.items.slice(first, used)
+        parent = np.repeat(np.arange(len(self.labels)), np.diff(offsets))
+        self.values: dict[str, list[str]] = {}
+        self.codes: dict[str, np.ndarray] = {}
+        for name in pc.unique(names).to_pylist():
+            at = pc.equal(names, name)
+            enc = pc.dictionary_encode(values.filter(at))
+            codes = np.full(len(self.gts_id), -1, np.int64)
+            # a null value reads as an absent label, as element_at does
+            codes[parent[at.to_numpy(zero_copy_only=False)]] = enc.indices.fill_null(-1).to_numpy()
+            self.values[name] = enc.dictionary.to_pylist()
+            self.codes[name] = codes
+
+    def select(self, selectors) -> np.ndarray:
+        """The series any parsed selector (without attribute clauses)
+        matches, as ascending indices: the class part is decided once per
+        class, and each label clause once per distinct value of its label
+        plus once for a series without it."""
+        hit = np.zeros(len(self.gts_id), bool)
+        for s in selectors:
+            ok = np.array([class_matches(s, c) for c in self.classes], bool)[self.class_code]
+            for key, op, val in s.labels:
+                if not ok.any():
+                    break
+                test = clause_test(key, op, val)
+                # the last entry answers for "absent", which code -1 indexes
+                answer = np.array([test(v) for v in self.values.get(key, ())] + [test(None)], bool)
+                ok &= answer[self.codes[key]] if key in self.codes else answer[-1]
+            hit |= ok
+        return np.flatnonzero(hit)
+
+    def class_names(self, series: np.ndarray) -> list[str]:
+        """The classes of `series`, in order."""
+        return [self.classes[c] for c in np.unique(self.class_code[series])]
+
+    def rows(self, t: pa.Table, series: np.ndarray) -> np.ndarray:
+        """The series of each row of `t` (its class and labels_key), or
+        -1 where that is not one of `series`."""
+        cls = pc.dictionary_encode(t["class"].combine_chunks())
+        row_class = pc.index_in(cls.dictionary, value_set=pa.array(self.classes)).to_numpy(
+            zero_copy_only=False).astype(np.int64)[cls.indices.to_numpy()]
+        lk = pc.dictionary_encode(t["labels_key"].combine_chunks())
+        wanted = np.unique(self.key_code[series])
+        pos = pc.index_in(lk.dictionary, value_set=self.keys.take(wanted)).fill_null(-1).to_numpy()
+        row_key = np.where(pos >= 0, wanted[pos], -1)[lk.indices.to_numpy()]
+        pair = row_class * len(self.keys) + row_key
+        at = np.minimum(np.searchsorted(self._pair, pair), len(self._pair) - 1)
+        chosen = np.zeros(len(self.gts_id), bool)
+        chosen[series] = True
+        return np.where((row_key >= 0) & (self._pair[at] == pair) & chosen[at], at, -1)
 
 
 def build_directory(points: DataFrame) -> DataFrame:

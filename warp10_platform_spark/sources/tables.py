@@ -194,9 +194,14 @@ def _points_path(sf_dir: str) -> str:
     return cache_path(f"points_{_cache_key(sf_dir)}")
 
 
+# the map columns FETCH's driver route takes from the series directory
+_MAPS = ("labels", "attributes")
+
+
 class PointsLayout:
     """The canonical_points files seen from the driver, through pyarrow:
-    the files that hold each class and their bytes on disk.
+    the files that hold each class, their bytes on disk, and the
+    directory of the series they hold (sources/directory.SeriesDirectory).
 
     Catalyst's size estimate of a path-based partitioned read is the whole
     layout whatever the class predicate (plans.plan_bytes), so the bytes a
@@ -206,12 +211,15 @@ class PointsLayout:
     def __init__(self, path: str):
         import pyarrow.dataset as ds
 
+        from warp10_platform_spark.sources.directory import SeriesDirectory
+
         self.dataset = ds.dataset(path, format="parquet", partitioning="hive")
         self.fragments: dict[str, list] = {}
         for frag in self.dataset.get_fragments():
             cls = ds.get_partition_keys(frag.partition_expression)["class"]
             self.fragments.setdefault(cls, []).append(frag)
         self._bytes = {c: sum(os.path.getsize(f.path) for f in fs) for c, fs in self.fragments.items()}
+        self.directory = SeriesDirectory(self.fragments)
 
     def classes(self, selectors) -> list[str]:
         """The classes any of the parsed `selectors` can match."""
@@ -226,20 +234,38 @@ class PointsLayout:
     def files(self, classes: list[str]) -> tuple[str, ...]:
         return tuple(f.path for c in classes for f in self.fragments[c])
 
-    def scan(self, classes: list[str], start: int | None, end: int | None):
-        """Rows of `classes` with start <= ts <= end, as a pyarrow Table,
-        read from those classes' files only; the ts bounds reach the row
-        groups."""
+    def scan(self, series, start: int | None, end: int | None):
+        """Rows of the directory's `series` (a non-empty index array) with
+        start <= ts <= end, as a pyarrow Table of the layout's schema.
+        Only those series' classes' files are read, their gts_ids and the
+        ts bounds are the filter, and the labels and attributes maps come
+        from the directory instead of the files.  A row is kept only if
+        its (class, labels_key) is one of `series`, so two series sharing
+        a gts_id cannot mix."""
+        import pyarrow as pa
         import pyarrow.dataset as ds
 
-        d = self.dataset
-        cond = ds.scalar(True)
+        d = self.directory
+        cond = ds.field("gts_id").isin(pa.array(d.gts_id[series]))
         if start is not None:
             cond &= ds.field("ts") >= start
         if end is not None:
             cond &= ds.field("ts") <= end
+        schema = self.dataset.schema
+        t = self._read(d.class_names(series), [c for c in schema.names if c not in _MAPS], cond)
+        rows = d.rows(t, series)
+        if (rows < 0).any():
+            t, rows = t.filter(pa.array(rows >= 0)), rows[rows >= 0]
+        maps = {"labels": d.labels.take(rows), "attributes": d.attributes.take(rows)}
+        return pa.Table.from_arrays([maps[c] if c in maps else t[c] for c in schema.names], schema=schema)
+
+    def _read(self, classes: list[str], columns: list[str], cond):
+        """`columns` of the rows of `classes`' files where `cond` holds."""
+        import pyarrow.dataset as ds
+
+        d = self.dataset
         frags = [f for c in classes for f in self.fragments[c]]
-        return ds.FileSystemDataset(frags, d.schema, d.format, d.filesystem).to_table(filter=cond)
+        return ds.FileSystemDataset(frags, d.schema, d.format, d.filesystem).to_table(columns=columns, filter=cond)
 
 
 # path -> PointsLayout; the layout is write-once, like _SCANS' entries

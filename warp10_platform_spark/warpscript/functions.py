@@ -422,28 +422,32 @@ _LOCAL_MAX_BYTES = 32 << 20
 def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -> GTSFrame | None:
     """FETCH's driver route, or None where it does not apply: above
     _LOCAL_MAX_BYTES, for attribute clauses, and for regexes Python's re
-    does not read as Spark (Java) does.  The frame scans the selected
-    classes' files with the ts bounds in the scan, then applies the label
-    clauses per distinct series, on first use of its Table; until then
-    its Spark frame is the Spark route's scan plan."""
+    does not read as Spark (Java) does.  On first use of its Table the
+    frame looks the selectors up in the layout's series directory, then
+    scans only the matched series, with their gts_ids and the ts bounds
+    in the scan; when no series matches it scans nothing.  Until then its
+    Spark frame is the Spark route's scan plan."""
     from warp10_platform_spark.core.selector import parse_selector, python_compiles
-    from warp10_platform_spark.operators.gts_kernels import select_series
     from warp10_platform_spark.sources.tables import points_layout
 
     if not all(t is None or isinstance(t, int) for t in (start, end)):
         return None
     sels = [parse_selector(s) for s in selectors]
-    # select_series matches labels only
+    # the series directory holds labels only
     if any(s.attributes for s in sels) or not all(python_compiles(s) for s in sels):
         return None
     layout = points_layout(st.spark, st.sf_dir)
     classes = layout.classes(sels)
     if layout.size(classes) >= _LOCAL_MAX_BYTES:
         return None
+
+    def table():
+        series = layout.directory.select(sels)
+        return layout.scan(series, start, end) if len(series) else layout.dataset.schema.empty_table()
+
     return GTSFrame(
         lambda: _spark_fetch(st, selectors, start, end, None).df,
-        table=lambda: select_series(layout.scan(classes, start, end), sels),
-        spark=st.spark, files=layout.files(classes),
+        table=table, spark=st.spark, files=layout.files(classes),
     )
 
 
