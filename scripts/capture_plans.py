@@ -1,9 +1,11 @@
-"""Capture .explain('formatted') for bench queries into plans/r<ROUND>/.
+"""Capture .explain('formatted') for bench queries into
+docs/history/plans/r<ROUND>/.
 
 Usage: python scripts/capture_plans.py <suffix> [query ...]
 
-Writes plans/r09/<query>_<suffix>.txt for each query (default: the full
-bench set, headline + extended). Plan capture is build-only — the query
+Writes docs/history/plans/r<ROUND>/<query>_<suffix>.txt (ROUND defaults
+to 09) for each query (default: the full bench set, headline +
+extended). Plan capture is build-only — the query
 is compiled, never executed — so it is cheap and safe to run alongside
 other work. SPARK_GRAFT_SF_DIR selects the fixture (default sf0.1 so the
 captured plans match the benched configuration byte-for-byte).
@@ -35,7 +37,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                          "plans", f"r{ROUND}")
+                          "docs", "history", "plans", f"r{ROUND}")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         fn = QUERIES.get(name)

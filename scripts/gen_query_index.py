@@ -1,8 +1,7 @@
-"""Generate QUERIES.md (one row per registered query — name, module,
-first docstring line, oracle presence) AND the lazy-registration index
-warp10_platform_spark/queries/_index.py (name → module, what lets
-``QUERIES[name]`` import a single module instead of all 25). Regenerate
-after adding queries: python scripts/gen_query_index.py
+"""Generate QUERIES.md: one row per registered query with its name,
+module and first docstring line, under a count of the queries and their
+oracles. Rerun after adding or moving a query:
+python scripts/gen_query_index.py
 """
 
 import os
@@ -36,23 +35,6 @@ def main() -> None:
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}: {len(q)} queries")
-
-    idx = [
-        '"""Static query-name → module index (generated — do not edit by hand).',
-        "",
-        "Regenerate with scripts/gen_query_index.py after adding queries; the",
-        "drift guard in tests/test_ledgers.py fails when this file is stale.",
-        '"""',
-        "",
-        "QUERY_MODULE: dict[str, str] = {",
-    ]
-    for name in sorted(q):
-        idx.append(f'    "{name}": "{q[name].__module__.rsplit(".", 1)[-1]}",')
-    idx.append("}")
-    ipath = os.path.join(repo, "warp10_platform_spark", "queries", "_index.py")
-    with open(ipath, "w") as f:
-        f.write("\n".join(idx) + "\n")
-    print(f"wrote {ipath}: {len(q)} entries")
 
 
 if __name__ == "__main__":

@@ -70,74 +70,3 @@ def test_mirror_ledger_all_pass():
     text = open(path).read()
     assert not re.search(r"^(FAIL|ERR)\s", text, re.M), f"{path} has failures"
 
-
-def test_lazy_index_matches_full_load():
-    """The static lazy-registration index (queries/_index.py) must match
-    a full filesystem-discovered load exactly — name set AND owning
-    module — or single-query lazy access would silently miss/misroute.
-    Also guards that lazy iteration (no imports) sees the same names."""
-    from warp10_platform_spark import queries as Q
-    from warp10_platform_spark.queries._index import QUERY_MODULE
-
-    lazy_names = set(Q.QUERIES)  # index-driven, pre-load
-    Q.load_all()
-    real = {n: fn.__module__.rsplit(".", 1)[-1] for n, fn in Q._Q.items()}
-    assert QUERY_MODULE == real, (
-        "queries/_index.py stale — regenerate with scripts/gen_query_index.py"
-    )
-    assert lazy_names == set(real)
-
-
-def test_lazy_single_access_imports_one_module():
-    """QUERIES['tpch_q1'] in a fresh interpreter must import only the
-    owning query module (entry-point-style laziness, r6 verdict ask #7)."""
-    import subprocess
-    import sys
-
-    code = (
-        "import sys; sys.path.insert(0, '/root/repo');\n"
-        "from warp10_platform_spark.queries import QUERIES\n"
-        "fn = QUERIES['tpch_q1']\n"
-        "loaded = [m for m in sys.modules if m.startswith('warp10_platform_spark.queries.')]\n"
-        "bad = [m for m in loaded if m.rsplit('.',1)[-1] not in ('_index', 'tpch')]\n"
-        "assert fn is not None and not bad, bad\n"
-        "print('OK', len(loaded))\n"
-    )
-    r = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True)
-    assert r.returncode == 0 and r.stdout.startswith("OK"), r.stderr[-2000:]
-
-
-def test_lazy_registry_miss_self_heals_with_one_full_load():
-    """A registry miss for a name the INDEX knows (e.g. an ORACLES
-    .get() on a query that moved modules while _index.py was stale, or
-    one registered without an oracle) imports the owning module first,
-    then self-heals with ONE load_all() before raising (the r8 ADVICE
-    fix: the pre-r8 behavior raised immediately for moved queries, a
-    resilience regression vs the eager registry). The full load fires at
-    most once per process (_LOADED_ALL latch), so lazy registration
-    survives for every subsequent access; a hit for a correctly-indexed
-    name still imports only its module (previous test). Simulated by
-    injecting a fake index entry pointing at a real module that never
-    registers the name."""
-    import subprocess
-    import sys
-
-    code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
-        "from warp10_platform_spark import queries as Q\n"
-        "from warp10_platform_spark.queries import ORACLES, QUERIES\n"
-        "from warp10_platform_spark.queries._index import QUERY_MODULE\n"
-        "QUERY_MODULE['__fake_no_oracle__'] = 'tpch'\n"
-        "assert ORACLES.get('__fake_no_oracle__') is None\n"
-        "# The miss tried the owning module, then self-healed via ONE\n"
-        "# full load before raising — the latch must now be set so the\n"
-        "# next miss is a plain dict lookup, not a re-import storm.\n"
-        "assert Q._LOADED_ALL\n"
-        "assert ORACLES.get('__fake_no_oracle__') is None\n"
-        "assert '__fake_no_oracle__' not in ORACLES\n"
-        "assert 'name_absent_from_index' not in QUERIES  # stale-index net\n"
-        "assert 'tpch_q1' in QUERIES  # full surface present post-heal\n"
-        "print('OK')\n"
-    )
-    r = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True)
-    assert r.returncode == 0 and r.stdout.startswith("OK"), r.stderr[-2000:]

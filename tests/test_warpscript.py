@@ -135,6 +135,18 @@ def test_labels_map_in_fetch(spark, sf_dir):
     assert users and all(u["user"] == "1" for u in users)
 
 
+def test_findstats_counts_only_matched_series(spark, sf_dir):
+    # sf0.001 holds 5 classes of 15 users each; the selector matches one class
+    (row,) = run(r"'~events\.p.*{}' FINDSTATS", spark, sf_dir).peek().collect()
+    assert row.asDict() == {"n_classes": 1, "n_series": 15}
+
+
+def test_findsets_reads_only_matched_series(spark, sf_dir):
+    # every class holds all 15 users, so only the label clause can narrow the set
+    rows = run("'events.purchase{user~1[0-9]}' FINDSETS", spark, sf_dir).peek().collect()
+    assert {r.k: sorted(r.values) for r in rows} == {"user": ["10", "11", "12", "13", "14"]}
+
+
 # ---------- extended stack / control flow / scalars ----------
 
 def test_dupn_dropn_roll_rolld():

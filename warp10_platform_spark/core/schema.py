@@ -30,11 +30,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Timestamps are LONG microseconds since epoch — the reference's default
+# `ts` is LONG microseconds since epoch — the reference's default
 # platform time unit (Constants.java:51-56, configurable ms/us/ns; we keep
 # LONG rather than TimestampType to honor that configurability).
-TS_COL = "ts"
-
 POINTS_SCHEMA = StructType(
     [
         StructField("class", StringType(), False),
@@ -51,9 +49,6 @@ POINTS_SCHEMA = StructType(
         StructField("gts_id", LongType(), False),
     ]
 )
-
-VALUE_COLS = ("v_long", "v_double", "v_bool", "v_string")
-
 
 def canonical_labels(labels: Column = None) -> Column:
     """Canonical string form of a labels map: JSON of entries sorted by key.

@@ -5,119 +5,31 @@ A query callable takes (spark, sf_dir) and returns a DataFrame; its
 oracle is ANSI SQL DuckDB runs on the same parquet tables. Column names
 and float rounding are kept identical on both sides (driver hash gate).
 
-Registration is LAZY, entry-point style (r6 verdict ask #7): the static
-name→module index (_index.py, regenerated by scripts/gen_query_index.py
-and drift-guarded by tests/test_ledgers.py) lets ``QUERIES["tpch_q1"]``
-import only queries.tpch — a bench/CLI session touching a handful of
-queries no longer pays the full 25-module import chain, and names/len
-are known without importing anything. Full-surface consumers
-(driver gate, plan audit) iterate items() and get the old eager load.
+Registration is eager: the import pass at the bottom of this module
+imports every public submodule it finds on disk, so QUERIES and ORACLES
+are plain dicts holding the whole surface as soon as the package is
+imported. A new query module needs no index or list entry.
 """
 
 from __future__ import annotations
 
 import importlib
-from collections.abc import Mapping
+import pkgutil
 
-from warp10_platform_spark.queries._index import QUERY_MODULE
-
-_Q: dict = {}
-_O: dict = {}
-_LOADED_ALL = False
+QUERIES: dict = {}
+ORACLES: dict = {}
 
 
 def register(name: str, oracle: str | None = None):
     def deco(fn):
-        _Q[name] = fn
+        QUERIES[name] = fn
         if oracle is not None:
-            _O[name] = oracle
+            ORACLES[name] = oracle
         return fn
 
     return deco
 
 
-def load_all() -> None:
-    """Import every query module (the eager pre-r7 behavior). Discovery
-    is filesystem-based (pkgutil), NOT index-based, so a brand-new module
-    is picked up even before scripts/gen_query_index.py reruns."""
-    global _LOADED_ALL
-    if _LOADED_ALL:
-        return
-    import pkgutil
-
-    for m in pkgutil.iter_modules(__path__):
-        if not m.name.startswith("_"):
-            importlib.import_module(f"warp10_platform_spark.queries.{m.name}")
-    # Flag flips only AFTER every module imported: a failing import must
-    # not poison the flag and leave later callers a silently-partial
-    # registry (re-imports of the already-loaded modules are free).
-    _LOADED_ALL = True
-
-
-class _LazyRegistry(Mapping):
-    """Read-only mapping over the lazily-populated backing dict: keys
-    come from the static index (no imports); a value access imports just
-    the owning module. A name missing from the index (fresh module not
-    yet reindexed) falls back to a full load before failing."""
-
-    def __init__(self, backing: dict):
-        self._backing = backing
-
-    def __getitem__(self, name: str):
-        if name not in self._backing:
-            mod = QUERY_MODULE.get(name)
-            if mod is not None:
-                # The index knows this name: import ONLY the owning
-                # module. If it's still absent afterwards the miss is
-                # structural (e.g. an ORACLES lookup for a query
-                # registered without an oracle) — raise instead of
-                # falling back to load_all(), which would eagerly import
-                # all query modules on every .get()/`in` miss and
-                # silently defeat lazy registration for the process.
-                importlib.import_module(f"warp10_platform_spark.queries.{mod}")
-                if name not in self._backing:
-                    # Stale index pointing at the WRONG module (query
-                    # moved since the last gen_query_index run): self-
-                    # heal with one full load — this path fires at most
-                    # once per process for a genuinely-moved query, so
-                    # lazy registration survives for every other access;
-                    # raise only if the name is absent from the full
-                    # surface too (registered without an oracle, for
-                    # ORACLES lookups).
-                    load_all()
-                    if name not in self._backing:
-                        raise KeyError(
-                            f"{name!r}: queries/_index.py maps it to module {mod!r}, which no "
-                            "longer registers it (query moved, or registered without an "
-                            "oracle for ORACLES lookups) — rerun scripts/gen_query_index.py"
-                        )
-            else:
-                load_all()  # stale index safety net — test_ledgers guards this
-        return self._backing[name]
-
-    def __iter__(self):
-        # Iteration = the full surface: ALWAYS load everything. Iterating
-        # the static index instead would silently drop queries whose
-        # module postdates the last index regen (found the hard way in
-        # r7: gen_query_index itself iterated, so a stale index could
-        # never pick up a new query). Only single-key access is lazy.
-        load_all()
-        return iter(self._backing)
-
-    def __len__(self):
-        load_all()
-        return len(self._backing)
-
-
-QUERIES = _LazyRegistry(_Q)
-ORACLES = _LazyRegistry(_O)
-
-# Modules kept importable by name for callers that did
-# `from warp10_platform_spark.queries import tpch` — now lazy too (PEP 562).
-_SUBMODULES = sorted(set(QUERY_MODULE.values())) + ["stl_oracle"]
-
-
-def __getattr__(name: str):
-    if name in _SUBMODULES:
-        return importlib.import_module(f"warp10_platform_spark.queries.{name}")
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+for _m in pkgutil.iter_modules(__path__):
+    if not _m.name.startswith("_"):
+        importlib.import_module(f"{__name__}.{_m.name}")

@@ -559,27 +559,31 @@ REGISTRY["FETCHBOOLEAN"] = _mk_fetch_typed("v_bool")
 REGISTRY["FETCHSTRING"] = _mk_fetch_typed("v_string")
 
 
-@register("FINDSETS")
-def _findsets(st):
-    """selector FINDSETS (FINDSETS.java): per-label value sets."""
-    from warp10_platform_spark.sources.directory import build_directory
+def _found(st):
+    """The directory rows the selector on top of the stack matches."""
+    from warp10_platform_spark.sources.directory import build_directory, find
     from warp10_platform_spark.sources.tables import events_points
 
     args = st.pop()
-    _selector = args[0] if isinstance(args, list) else args
-    d = build_directory(events_points(st.spark, st.sf_dir))
-    ex = d.select(F.explode("labels").alias("k", "v"))
+    selector = args[0] if isinstance(args, list) else args
+    return find(build_directory(events_points(st.spark, st.sf_dir)), selector)
+
+
+@register("FINDSETS")
+def _findsets(st):
+    """selector FINDSETS (FINDSETS.java): per-label value sets of the
+    matched series."""
+    ex = _found(st).select(F.explode("labels").alias("k", "v"))
     st.push(ex.groupBy("k").agg(F.collect_set("v").alias("values")))
 
 
 @register("FINDSTATS")
 def _findstats(st):
-    from warp10_platform_spark.sources.directory import build_directory, findstats
-    from warp10_platform_spark.sources.tables import events_points
+    """selector FINDSTATS (FINDSTATS.java): exact class and series counts
+    of the matched series."""
+    from warp10_platform_spark.sources.directory import findstats
 
-    args = st.pop()
-    selector = args[0] if isinstance(args, list) else args
-    st.push(findstats(build_directory(events_points(st.spark, st.sf_dir)), selector))
+    st.push(findstats(_found(st)))
 
 
 @register("UPDATE")
