@@ -11,8 +11,10 @@ order alternating per script, after 5 warm-up scripts per route.  Each
 sample is one /exec answer: WarpScriptStack.exec plus the JSON render.
 It prints one JSON line per (fixture, selection): the bytes the gate sees,
 the seconds a fresh build of the fixture's series directory takes (the
-one-time cost the driver route adds when a layout is first opened) and
-each route's median and quartiles in ms.  Run it on an idle box.
+one-time cost the driver route adds when a layout is first opened), the
+median row groups and rows the driver route's scan decodes (over every
+script of the selection, warm-up included) and each route's median and
+quartiles in ms.  Run it on an idle box.
 """
 
 from __future__ import annotations
@@ -45,10 +47,18 @@ def main(argv=None) -> int:
     from warp10_platform_spark.core.selector import parse_selector
     from warp10_platform_spark.session import get_spark
     from warp10_platform_spark.sources.directory import SeriesDirectory
-    from warp10_platform_spark.sources.tables import points_layout
+    from warp10_platform_spark.sources.tables import PointsLayout, points_layout
     from warp10_platform_spark.warpscript import WarpScriptStack
     from warp10_platform_spark.warpscript import functions as WF
 
+    read, decoded = PointsLayout._read, []
+
+    def counting(self, groups, columns):
+        t = read(self, groups, columns)
+        decoded.append((sum(len(g) for g in groups.values()), t.num_rows))
+        return t
+
+    PointsLayout._read = counting
     spark = get_spark("fetch-route-crossover")
     spark.sparkContext.setLogLevel("ERROR")
     stream = gen.script_stream(7, 0)
@@ -70,6 +80,7 @@ def main(argv=None) -> int:
         for name in args.selections:
             cls = SELECTIONS[name]
             ms = {"arrow": [], "spark": []}
+            decoded.clear()
             for i, script in enumerate(scripts):
                 script = dataclasses.replace(script, cls=cls)
                 routes = [("arrow", 1 << 62), ("spark", 0)]
@@ -82,6 +93,8 @@ def main(argv=None) -> int:
                 "sf": os.path.basename(sf), "selection": name,
                 "gate_bytes": layout.size(layout.classes([parse_selector(cls)])),
                 "directory_build_s": round(build_s, 3),
+                "row_groups_per_scan": statistics.median(g for g, _ in decoded),
+                "rows_per_scan": statistics.median(n for _, n in decoded),
                 **{f"{r}_ms": {"q1": round(x[0], 1), "median": round(x[1], 1), "q3": round(x[2], 1)}
                    for r, x in q.items()},
             }), flush=True)

@@ -384,9 +384,10 @@ def test_scan_reads_only_the_matched_series_without_maps(spark, sf_dir, monkeypa
     read = PointsLayout._read
     asked = []
 
-    def recording(self, classes, columns, cond):
-        asked.append((classes, columns))
-        return read(self, classes, columns, cond)
+    def recording(self, groups, columns):
+        d = self.directory
+        asked.append(([d.classes[d.file_class[f]] for f in groups], columns))
+        return read(self, groups, columns)
 
     monkeypatch.setattr(PointsLayout, "_read", recording)
     everything = layout.dataset.to_table()
@@ -406,9 +407,9 @@ def test_scan_reads_only_the_matched_series_without_maps(spark, sf_dir, monkeypa
 
 
 def test_a_shared_gts_id_does_not_mix_series(tmp_path):
-    """Two series of one class that share a gts_id: selecting one scans
-    both (the filter holds gts_ids), but keeps that one's rows only, with
-    its own maps."""
+    """Two series of one class that share a gts_id, interleaved in one
+    row group: selecting one reads the rows of both (their spans
+    overlap), but keeps that one's rows only, with its own maps."""
     import pyarrow.parquet as pq
 
     from warp10_platform_spark.core.selector import parse_selector
@@ -433,3 +434,151 @@ def test_a_shared_gts_id_does_not_mix_series(tmp_path):
         assert t["ts"].to_pylist() == want, text
         assert t["labels"].to_pylist() == [list(series[pick[i]].items()) for i in want]
         assert t["attributes"].to_pylist() == [[("n", str(pick[i]))] for i in want]
+
+
+@pytest.fixture(scope="module")
+def clustered(spark, tmp_path_factory):
+    """The points layout of sf0.01, written by canonical_points' writer."""
+    from warp10_platform_spark.sources import tables
+
+    path = str(tmp_path_factory.mktemp("points"))
+    tables._write_points(tables.events_points(spark, "/root/testdata/sf0.01"), path)
+    return path
+
+
+def test_points_files_hold_each_series_contiguously(clustered):
+    """Each class file holds each series' rows in one run, in ascending
+    ts, over more than one row group."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(clustered, "class=*", "*.parquet"))
+    assert len(files) == 5
+    for f in files:
+        pf = pq.ParquetFile(f)
+        assert pf.num_row_groups > 1
+        t = pf.read(columns=["labels_key", "ts"])
+        key, ts = np.array(t["labels_key"].to_pylist()), t["ts"].to_numpy()
+        starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        assert len(starts) == len(set(key))
+        assert (np.diff(ts)[key[1:] == key[:-1]] >= 0).all()
+
+
+def test_a_one_user_selection_reads_only_its_row_groups(clustered, monkeypatch):
+    """The scan of one user in every class asks each file for the row
+    groups that hold that user's first to last row and no other, fewer
+    than the file has, and answers like a filter of the whole layout."""
+    import pyarrow.compute as pc
+
+    from warp10_platform_spark.core.selector import parse_selector
+    from warp10_platform_spark.sources.tables import PointsLayout
+
+    layout = PointsLayout(clustered)
+    read = PointsLayout._read
+    asked = []
+
+    def recording(self, groups, columns):
+        asked.append(groups)
+        return read(self, groups, columns)
+
+    monkeypatch.setattr(PointsLayout, "_read", recording)
+    everything = layout.dataset.to_table()
+    user = everything["labels_key"][len(everything) // 2].as_py()
+    sel = parse_selector("~events\\..*{user=%s}" % user.split('"')[-2])
+    got = layout.scan(layout.directory.select([sel]), None, None)
+    want = everything.filter(pc.equal(everything["labels_key"], user))
+    key = [(c, "ascending") for c in ("class", "ts", "event_id")]
+    assert got.num_rows and got.sort_by(key).equals(want.sort_by(key))
+    (groups,) = asked
+    d = layout.directory
+    assert len(groups) == 5
+    for f, rgs in groups.items():
+        pf = d.files[f]
+        rows = np.flatnonzero(pc.equal(pf.read(columns=["labels_key"])["labels_key"], user).to_numpy(
+            zero_copy_only=False))
+        ends = np.cumsum([pf.metadata.row_group(i).num_rows for i in range(pf.num_row_groups)])
+        lo, hi = np.searchsorted(ends, [rows[0], rows[-1]], "right")
+        assert rgs.tolist() == list(range(lo, hi + 1))
+        assert len(rgs) < pf.num_row_groups
+
+
+def _write_layout(root, files: dict[str, list], row_group_size: int):
+    """Hand-written points layout: class → one table per file."""
+    import pyarrow.parquet as pq
+
+    for cls, tables in files.items():
+        os.makedirs(os.path.join(root, f"class={cls}"))
+        for i, t in enumerate(tables):
+            pq.write_table(t, os.path.join(root, f"class={cls}", f"part-{i}.parquet"), row_group_size=row_group_size)
+
+
+def _series_table(series: list[dict], pick, ts, gts_id=None):
+    from warp10_platform_spark.operators.gts_kernels import labels_key
+
+    mp = pa.map_(pa.string(), pa.string())
+    return pa.table({
+        "labels": pa.array([list(series[i].items()) for i in pick], mp),
+        "attributes": pa.array([[("n", str(i))] for i in pick], mp),
+        "ts": pa.array(ts, pa.int64()),
+        "v_double": pa.array([float(t) for t in ts]),
+        "labels_key": [labels_key(series[i]) for i in pick],
+        "gts_id": pa.array(gts_id if gts_id is not None else [i % 3 for i in pick], pa.int64()),
+    })
+
+
+def test_an_interleaved_layout_answers_like_a_filter(tmp_path):
+    """Series interleaved over many row groups and two files of a class
+    (a layout not sorted by series, where spans overlap), with gts_ids
+    shared between series: every scan equals the brute-force
+    `selector.matches` filter of the whole layout."""
+    from warp10_platform_spark.core.selector import matches, parse_selector
+    from warp10_platform_spark.sources.tables import PointsLayout
+
+    rng = np.random.default_rng(5)
+    series = [{"h": str(i), **({"k": "x"} if i % 2 else {})} for i in range(9)] + [{}]
+
+    def part(n):
+        return _series_table(series, rng.integers(0, len(series), n), rng.permutation(10 * n)[:n])
+
+    _write_layout(str(tmp_path), {"a": [part(150), part(90)], "b": [part(120)]}, row_group_size=16)
+    layout = PointsLayout(str(tmp_path))
+    everything = layout.dataset.to_table()
+    key = [(c, "ascending") for c in ("class", "labels_key", "ts")]
+    for text in ("a{h=3}", "~.*{h~[2-5]}", "b{k=x}", "a{h=}", "~.*{}", "~[ab]{h~1.*}"):
+        sel = parse_selector(text)
+        for start, end in ((None, None), (100, 700), (None, 400), (300, None)):
+            got = layout.scan(layout.directory.select([sel]), start, end)
+            keep = [(start is None or r["ts"] >= start) and (end is None or r["ts"] <= end)
+                    and matches(sel, r["class"], dict(r["labels"])) for r in everything.to_pylist()]
+            want = everything.filter(pa.array(keep))
+            assert want.num_rows, (text, start, end)
+            assert got.sort_by(key).equals(want.sort_by(key)), (text, start, end)
+
+
+@pytest.mark.parametrize("regex", ["12[0-9]", "1[0-9][0-9]", "12?3", "a|b", "(?i:ab)", "^12.*", ".*", "[0-9]2", "x"])
+def test_label_lookup_by_prefix_matches_the_per_value_loop(tmp_path, regex):
+    """The directory tests a regex only on the label values in its
+    literal prefix's range, and selects what testing every value does."""
+    from warp10_platform_spark.core.selector import clause_test, literal_prefix, parse_selector
+    from warp10_platform_spark.sources.tables import PointsLayout
+
+    values = ["1", "12", "120", "1200", "123", "129", "13", "133", "1299", "199", "2", "22", "a", "b", "ab",
+              "AB", "Ab", "aB", "c", "x", "x12", "", "12\n"]
+    series = [{"user": v} for v in values] + [{}, {"other": "12"}]
+    _write_layout(str(tmp_path), {"c": [_series_table(series, range(len(series)), range(len(series)))]}, 8)
+    d = PointsLayout(str(tmp_path)).directory
+    test = clause_test("user", "~", regex)
+    users = [dict(m).get("user") for m in d.labels.to_pylist()]
+    want = [i for i, u in enumerate(users) if test(u)]
+    assert d.select([parse_selector("c{user~%s}" % regex)]).tolist() == want
+    assert all(u.startswith(literal_prefix("~", regex)) for u in (users[i] for i in want))
+
+
+def test_literal_prefix_stops_at_the_first_non_literal():
+    from warp10_platform_spark.core.selector import literal_prefix
+
+    cases = {"12[0-9]": "12", "1[0-9][0-9]": "1", "12?3": "1", "a|b": "", "ab|ac": "a", "(?i)ab": "",
+             "(?i:ab)": "", "^12.*": "", ".*": "", "[0-9]2": "", r"\.x": ".x"}
+    assert {r: literal_prefix("~", r) for r in cases} == cases
+    assert literal_prefix("=", "12") == "12"

@@ -1,5 +1,7 @@
-"""r5 odds and ends: restricted PICKLE-> unpickler, CALL/REXEC raising
-stubs, GEOCOVER maxcells cap."""
+"""Guards on what a script may do: the restricted PICKLE-> unpickler,
+the CALL/REXEC and out-of-scope names that raise a named error, the
+GEOCOVER cell cap, TIMEBOX's budget in platform ticks, and epoch_us_col's
+independence of the session timezone."""
 
 import pickle
 

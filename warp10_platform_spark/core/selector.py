@@ -15,8 +15,9 @@ StandaloneDirectoryClient).  FETCH has two routes here:
   A directory-table pre-filter is optional (sources/directory.py).
 - the driver (small requests): the selector is looked up in the points
   layout's SeriesDirectory (sources/directory.py) — `class_matches` once
-  per class, `clause_test` once per distinct label value plus once for
-  an absent label — and only the matched series are scanned.
+  per class, `clause_test` once per distinct label value that starts
+  with the clause's `literal_prefix` plus once for an absent label — and
+  only the row groups that hold the matched series are scanned.
 
 `clause_test` is the one driver-side definition of a label clause; the
 Column compiler below mirrors it.
@@ -167,6 +168,24 @@ def clause_test(key: str, op: str, val: str):
         return (lambda v: True) if key == "" else (lambda v: v is not None)
     match = _pattern(val).match
     return lambda v: v is not None and match(v) is not None
+
+
+def literal_prefix(op: str, val: str) -> str:
+    """A prefix of every value `clause_test(key, op, val)` accepts: the
+    value of an exact clause, and the leading literals of a regex.  A
+    regex that ignores case or opens with anything but a literal (an
+    anchor, a class, a branch, a repeat) has the empty prefix."""
+    if op == "=":
+        return val
+    parsed = re._parser.parse(val)
+    if parsed.state.flags & re.IGNORECASE:
+        return ""
+    out = []
+    for code, arg in parsed:
+        if code is not re._constants.LITERAL:
+            break
+        out.append(chr(arg))
+    return "".join(out)
 
 
 def _clauses_match(clauses: list[tuple[str, str, str]], src: dict[str, str]) -> bool:

@@ -11,9 +11,13 @@ analogs here:
   class-partitioned points layout (sources/tables.PointsLayout builds it
   from the layout's own files).  FETCH's driver route looks the selector
   up in it: each class once, each label clause once per distinct value
-  of its label plus once for "absent".  The pyarrow scan that follows
-  filters on the matched gts_ids and the ts bounds and decodes no map
-  column; the maps come from the directory.
+  of its label that starts with the clause's literal prefix, plus once
+  for "absent".  It also holds each file's parquet handle, the row
+  count of its row groups and, per series, the first and last row that
+  series has in each file.  The layout writes each class file sorted by
+  series (the reference's (classId, labelsId) key order), so those row
+  spans name the few row groups the pyarrow scan that follows reads;
+  it decodes no map column, and the maps come from the directory.
 - The Spark `directory` table: one row per series with identity + stats,
   consulted by FIND/FINDSTATS and used as a broadcast semi-join filter
   in front of FETCH.  At 100 TB it is maintained incrementally at ingest
@@ -25,20 +29,24 @@ analogs here:
 
 from __future__ import annotations
 
+import bisect
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from warp10_platform_spark.core.schema import labels_from_key
-from warp10_platform_spark.core.selector import class_matches, clause_test, selector_predicate
+from warp10_platform_spark.core.selector import class_matches, clause_test, literal_prefix, selector_predicate
 
 
-def _first_rows(t: pa.Table) -> pa.Table:
-    """The first row of each distinct labels_key of `t`."""
+def _spans(t: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """The first and the last row of each distinct labels_key of `t`."""
     codes = pc.dictionary_encode(t["labels_key"].combine_chunks()).indices.to_numpy()
-    return t.take(np.unique(codes, return_index=True)[1])
+    first = np.unique(codes, return_index=True)[1]
+    return first, len(codes) - 1 - np.unique(codes[::-1], return_index=True)[1]
 
 
 class SeriesDirectory:
@@ -47,30 +55,53 @@ class SeriesDirectory:
 
     Per series: the codes of its class and labels_key, its gts_id, and
     the labels and attributes maps of its first row.  Per label name:
-    its distinct values and each series' code among them (-1 where the
-    series lacks the label).  No Python object exists per series."""
+    its distinct values in ascending order and each series' code among
+    them (-1 where the series lacks the label).  Per file: its
+    `pyarrow.parquet.ParquetFile`, its class code (`class_names` holds
+    the classes as an Arrow array) and its first row group.  Per row
+    group: its file, its row count and the cumulative row count.  Per
+    (series, file) holding it: a span, the series' first and last row
+    in that file, ordered by first row.  Rows and row groups are
+    numbered across the files, in file order.  No Python object exists
+    per series."""
 
     def __init__(self, fragments: dict[str, list]):
         """Read the (class, labels_key) series of `fragments` (class →
         parquet fragments), one file at a time."""
         self.classes = sorted(fragments)
+        self.class_names = pa.array(self.classes, pa.string())
         cols = ["labels_key", "gts_id", "labels", "attributes"]
-        parts, class_code = [], []
+        self.files, file_class, group_rows, group_file, heads, first, last = [], [], [], [], [], [], []
         for code, cls in enumerate(self.classes):
-            part = pa.concat_tables([_first_rows(f.to_table(columns=cols)) for f in fragments[cls]])
-            parts.append(_first_rows(part))
-            class_code.append(np.full(parts[-1].num_rows, code, np.int64))
-        series = pa.concat_tables(parts)
-        keys = pc.dictionary_encode(series["labels_key"].combine_chunks())
-        class_code = np.concatenate(class_code)
-        key_code = keys.indices.to_numpy().astype(np.int64)
-        order = np.lexsort((key_code, class_code))
-        series = series.take(order)
+            for frag in fragments[cls]:
+                pf = pq.ParquetFile(frag.path)
+                t = pf.read(columns=cols)
+                lo, hi = _spans(t)
+                heads.append(t.take(lo))
+                base = sum(group_rows)
+                first.append(lo + base)
+                last.append(hi + base)
+                group_rows += [pf.metadata.row_group(i).num_rows for i in range(pf.num_row_groups)]
+                group_file += [len(self.files)] * pf.num_row_groups
+                file_class.append(code)
+                self.files.append(pf)
+        self.file_class = np.array(file_class, np.int64)
+        self.group_rows = np.array(group_rows, np.int64)
+        self.group_ends = np.cumsum(self.group_rows)
+        self.group_file = np.array(group_file, np.int64)
+        self.file_groups = np.searchsorted(self.group_file, np.arange(len(self.files)))
+        heads = pa.concat_tables(heads)
+        keys = pc.dictionary_encode(heads["labels_key"].combine_chunks())
         self.keys = keys.dictionary
-        self.class_code = class_code[order]
-        self.key_code = key_code[order]
+        head_file = np.repeat(np.arange(len(self.files)), [len(f) for f in first])
+        pair = self.file_class[head_file] * len(self.keys) + keys.indices.to_numpy().astype(np.int64)
         # ascending, so searchsorted finds the series of a (class, labels_key)
-        self._pair = self.class_code * len(self.keys) + self.key_code
+        self._pair, at, span_series = np.unique(pair, return_index=True, return_inverse=True)
+        first, last = np.concatenate(first), np.concatenate(last)
+        order = np.argsort(first, kind="stable")
+        self.span_first, self.span_last, self.span_series = first[order], last[order], span_series[order]
+        self.class_code, self.key_code = np.divmod(self._pair, len(self.keys))
+        series = heads.take(at)
         self.gts_id = series["gts_id"].to_numpy()
         self.labels = series["labels"].combine_chunks()
         self.attributes = series["attributes"].combine_chunks()
@@ -83,41 +114,68 @@ class SeriesDirectory:
         for name in pc.unique(names).to_pylist():
             at = pc.equal(names, name)
             enc = pc.dictionary_encode(values.filter(at))
+            order = pc.array_sort_indices(enc.dictionary).to_numpy()
+            rank = np.empty(len(order) + 1, np.int64)
+            rank[order], rank[-1] = np.arange(len(order)), -1
             codes = np.full(len(self.gts_id), -1, np.int64)
             # a null value reads as an absent label, as element_at does
-            codes[parent[at.to_numpy(zero_copy_only=False)]] = enc.indices.fill_null(-1).to_numpy()
-            self.values[name] = enc.dictionary.to_pylist()
+            codes[parent[at.to_numpy(zero_copy_only=False)]] = rank[enc.indices.fill_null(-1).to_numpy()]
+            self.values[name] = enc.dictionary.take(order).to_pylist()
             self.codes[name] = codes
 
     def select(self, selectors) -> np.ndarray:
         """The series any parsed selector (without attribute clauses)
         matches, as ascending indices: the class part is decided once per
         class, and each label clause once per distinct value of its label
-        plus once for a series without it."""
+        that starts with the clause's literal prefix (a range of the
+        sorted values) plus once for a series without it."""
         hit = np.zeros(len(self.gts_id), bool)
         for s in selectors:
             ok = np.array([class_matches(s, c) for c in self.classes], bool)[self.class_code]
             for key, op, val in s.labels:
                 if not ok.any():
                     break
-                test = clause_test(key, op, val)
+                test, values = clause_test(key, op, val), self.values.get(key, [])
+                prefix = literal_prefix(op, val)
+                n = len(prefix)
+                lo = bisect.bisect_left(values, prefix, key=lambda v: v[:n])
+                hi = bisect.bisect_right(values, prefix, lo, key=lambda v: v[:n])
                 # the last entry answers for "absent", which code -1 indexes
-                answer = np.array([test(v) for v in self.values.get(key, ())] + [test(None)], bool)
+                answer = np.zeros(len(values) + 1, bool)
+                answer[lo:hi] = [test(v) for v in values[lo:hi]]
+                answer[-1] = test(None)
                 ok &= answer[self.codes[key]] if key in self.codes else answer[-1]
             hit |= ok
         return np.flatnonzero(hit)
 
-    def class_names(self, series: np.ndarray) -> list[str]:
-        """The classes of `series`, in order."""
-        return [self.classes[c] for c in np.unique(self.class_code[series])]
+    def row_groups(self, series: np.ndarray) -> tuple[dict[int, np.ndarray], np.ndarray, np.ndarray]:
+        """Where the rows of `series` are: file → the ascending row groups
+        of that file that overlap one of their spans; the indices, into
+        the rows of all those row groups read in that order, of the rows
+        that lie in such a span; and the class code of each of those
+        rows.  In a file sorted by series a span holds its series' rows
+        only; in an unsorted one it covers most of the file, and so do
+        the row groups."""
+        chosen = np.zeros(len(self.gts_id), bool)
+        chosen[series] = True
+        at = chosen[self.span_series]
+        first, last, ends = self.span_first[at], self.span_last[at], self.group_ends
+        touched = np.bincount(np.searchsorted(ends, first, "right"), minlength=len(ends) + 1)
+        touched -= np.bincount(np.searchsorted(ends, last, "right") + 1, minlength=len(ends) + 1)
+        g = np.flatnonzero(np.cumsum(touched)[:-1])
+        n = self.group_rows[g]
+        # the row of each row read, then whether a span reaches it
+        pos = np.arange(n.sum()) + np.repeat(ends[g] - np.cumsum(n), n)
+        i = np.searchsorted(first, pos, "right") - 1
+        inside = np.flatnonzero((i >= 0) & (np.maximum.accumulate(last)[np.maximum(i, 0)] >= pos))
+        files = self.group_file[g]
+        groups = {int(f): g[files == f] - self.file_groups[f] for f in np.unique(files)}
+        return groups, inside, self.file_class[np.repeat(files, n)[inside]]
 
-    def rows(self, t: pa.Table, series: np.ndarray) -> np.ndarray:
-        """The series of each row of `t` (its class and labels_key), or
-        -1 where that is not one of `series`."""
-        cls = pc.dictionary_encode(t["class"].combine_chunks())
-        row_class = pc.index_in(cls.dictionary, value_set=pa.array(self.classes)).to_numpy(
-            zero_copy_only=False).astype(np.int64)[cls.indices.to_numpy()]
-        lk = pc.dictionary_encode(t["labels_key"].combine_chunks())
+    def rows(self, row_class: np.ndarray, labels_key: pa.ChunkedArray, series: np.ndarray) -> np.ndarray:
+        """The series of each row (its class code and labels_key), or -1
+        where that is not one of `series`."""
+        lk = pc.dictionary_encode(labels_key.combine_chunks())
         wanted = np.unique(self.key_code[series])
         pos = pc.index_in(lk.dictionary, value_set=self.keys.take(wanted)).fill_null(-1).to_numpy()
         row_key = np.where(pos >= 0, wanted[pos], -1)[lk.indices.to_numpy()]

@@ -168,20 +168,43 @@ def _cache_key(sf_dir: str, table: str = "events") -> str:
     return hashlib.md5(sig.encode()).hexdigest()[:10]
 
 
+# the parquet row-group size of the points layout: about 1,500 rows (some
+# 115 series at sf0.1), so a FETCH of a few series reads a row group or two
+_ROW_GROUP_BYTES = 128 << 10
+
+
 def canonical_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The points table in its canonical STORAGE layout: µs LONG ts as a
     physical column, partitioned by class — what the 100 TB lake looks
     like (SURVEY §1.6: partition by class/day, bucket by gts_id), instead
     of the on-the-fly events projection whose derived ts/class defeat
-    parquet predicate pushdown.
+    parquet predicate pushdown.  Each class file is sorted by
+    (labels_key, ts), the reference's (classId, labelsId, ts) key order,
+    in row groups of _ROW_GROUP_BYTES: a series' rows are contiguous, so
+    FETCH's driver route reads only the row groups that hold the series
+    it matched (PointsLayout.scan).  labels_key, not the gts_id hash, so
+    that a label regex's matches are neighbours too.
 
     Materialized once per sf_dir under the repo's .cache/ and reused;
     FETCH range + class predicates then land in PushedFilters /
     partition pruning for real."""
     path = _points_path(sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        events_points(spark, sf_dir).write.mode("overwrite").partitionBy("class").parquet(path)
+        _write_points(events_points(spark, sf_dir), path)
     return _read_parquet_memo(spark, path)
+
+
+def _write_points(points: DataFrame, path: str) -> None:
+    """Write `points` in canonical_points' layout.  The sort leads with
+    the partition column, so it is also the order the partitioned writer
+    needs, and the writer adds no sort of its own."""
+    (
+        points.sortWithinPartitions("class", "labels_key", "ts")
+        .write.mode("overwrite")
+        .option("parquet.block.size", _ROW_GROUP_BYTES)
+        .partitionBy("class")
+        .parquet(path)
+    )
 
 
 def cache_path(name: str) -> str:
@@ -201,7 +224,8 @@ _MAPS = ("labels", "attributes")
 class PointsLayout:
     """The canonical_points files seen from the driver, through pyarrow:
     the files that hold each class, their bytes on disk, and the
-    directory of the series they hold (sources/directory.SeriesDirectory).
+    directory of the series they hold and of the rows each series spans
+    (sources/directory.SeriesDirectory).
 
     Catalyst's size estimate of a path-based partitioned read is the whole
     layout whatever the class predicate (plans.plan_bytes), so the bytes a
@@ -236,36 +260,50 @@ class PointsLayout:
 
     def scan(self, series, start: int | None, end: int | None):
         """Rows of the directory's `series` (a non-empty index array) with
-        start <= ts <= end, as a pyarrow Table of the layout's schema.
-        Only those series' classes' files are read, their gts_ids and the
-        ts bounds are the filter, and the labels and attributes maps come
-        from the directory instead of the files.  A row is kept only if
-        its (class, labels_key) is one of `series`, so two series sharing
-        a gts_id cannot mix."""
+        start <= ts <= end, as a pyarrow Table of the layout's schema,
+        grouped by file in file order.  Only the row groups that overlap
+        those series' row spans are read, and the labels and attributes
+        maps come from the directory instead of the files.  A row is kept
+        only if its (class, labels_key) is one of `series`, so two series
+        sharing a gts_id cannot mix, and a file not sorted by series
+        (a span covering most of it) answers alike, only slower."""
+        import numpy as np
         import pyarrow as pa
-        import pyarrow.dataset as ds
 
         d = self.directory
-        cond = ds.field("gts_id").isin(pa.array(d.gts_id[series]))
-        if start is not None:
-            cond &= ds.field("ts") >= start
-        if end is not None:
-            cond &= ds.field("ts") <= end
         schema = self.dataset.schema
-        t = self._read(d.class_names(series), [c for c in schema.names if c not in _MAPS], cond)
-        rows = d.rows(t, series)
-        if (rows < 0).any():
-            t, rows = t.filter(pa.array(rows >= 0)), rows[rows >= 0]
-        maps = {"labels": d.labels.take(rows), "attributes": d.attributes.take(rows)}
-        return pa.Table.from_arrays([maps[c] if c in maps else t[c] for c in schema.names], schema=schema)
+        groups, inside, row_class = d.row_groups(series)
+        t = self._read(groups, [c for c in schema.names if c not in _MAPS and c != "class"]).take(inside)
+        rows = d.rows(row_class, t["labels_key"], series)
+        keep = rows >= 0
+        if start is not None or end is not None:
+            ts = t["ts"]
+            if ts.null_count:
+                # a null ts is outside any bound, as in a parquet filter
+                keep &= ts.is_valid().to_numpy()
+                ts = ts.fill_null(0)
+            ts = ts.to_numpy()
+            if start is not None:
+                keep &= ts >= start
+            if end is not None:
+                keep &= ts <= end
+        idx = np.flatnonzero(keep)
+        rows = rows[idx]
+        if len(idx) < t.num_rows:
+            t = t.take(idx)
+        cols = {"labels": d.labels.take(rows), "attributes": d.attributes.take(rows),
+                "class": d.class_names.take(row_class[idx])}
+        return pa.Table.from_arrays([cols[c] if c in cols else t[c] for c in schema.names], schema=schema)
 
-    def _read(self, classes: list[str], columns: list[str], cond):
-        """`columns` of the rows of `classes`' files where `cond` holds."""
-        import pyarrow.dataset as ds
+    def _read(self, groups: dict, columns: list[str]):
+        """`columns` of the row groups `groups` (file → row groups of that
+        file), file by file."""
+        import pyarrow as pa
 
-        d = self.dataset
-        frags = [f for c in classes for f in self.fragments[c]]
-        return ds.FileSystemDataset(frags, d.schema, d.format, d.filesystem).to_table(columns=columns, filter=cond)
+        # a few row groups decode faster on this thread than on the pool
+        files = self.directory.files
+        return pa.concat_tables(
+            [files[f].read_row_groups(rgs, columns=columns, use_threads=False) for f, rgs in groups.items()])
 
 
 # path -> PointsLayout; the layout is write-once, like _SCANS' entries

@@ -424,9 +424,10 @@ def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -
     _LOCAL_MAX_BYTES, for attribute clauses, and for regexes Python's re
     does not read as Spark (Java) does.  On first use of its Table the
     frame looks the selectors up in the layout's series directory, then
-    scans only the matched series, with their gts_ids and the ts bounds
-    in the scan; when no series matches it scans nothing.  Until then its
-    Spark frame is the Spark route's scan plan."""
+    reads only the row groups that hold the matched series and keeps
+    their rows in the ts bounds; when no series matches it scans
+    nothing.  Until then its Spark frame is the Spark route's scan
+    plan."""
     from warp10_platform_spark.core.selector import parse_selector, python_compiles
     from warp10_platform_spark.sources.tables import points_layout
 
