@@ -175,9 +175,13 @@ def test_series_json_sorts_on_driver_like_spark(spark, monkeypatch):
 
 def test_series_json_limit_takes_first_points_in_order(spark, monkeypatch):
     from warp10_platform_spark.__main__ import _series_json
+    from warp10_platform_spark.core.frame import GTSFrame
 
     gf = _unsorted_gts(spark)
     plans = _record_plans(monkeypatch, gf)
     got = _series_json(gf, 4)
     assert got == [RENDERED[0], RENDERED[1], {**RENDERED[2], "v": [[1, 0.5]]}]
     assert any("TakeOrderedAndProject" in p for p in plans)
+    # the Arrow-backed twin takes the same first points
+    twin = GTSFrame(None, None, "v_double", table=gf.df.toArrow(), spark=spark)
+    assert _series_json(twin, 4) == got

@@ -1,4 +1,4 @@
-"""Round-5 registry tranche: filter.any/all families, attribute filters,
+"""WarpScript function families: filter.any/all, attribute filters,
 parameterized mappers (dotproduct/npdf/regexp/geo), welford aliases,
 filler.value, RANDPDF/SRANDPDF, REF, filter.latencies."""
 

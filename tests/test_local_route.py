@@ -317,6 +317,42 @@ def test_fetch_without_kernel_runs_the_spark_plan(spark, sf_dir, monkeypatch):
         assert not gf.local and _plan(gf.df) == w, s
 
 
+_WEEK = "'start' 1704844800000000 'end' 1705449600000000"
+_GRID = "1705449600000000 21600000000 28"
+
+
+@pytest.mark.parametrize("ops", [
+    f"[ SWAP bucketizer.max {_GRID} ] BUCKETIZE [ SWAP mapper.delta 1 0 0 ] MAP",
+    "[ SWAP [ 'user' ] reducer.max ] REDUCE [ SWAP mapper.delta 1 0 0 ] MAP",
+    f"[ SWAP mapper.max 1 1 0 ] MAP [ SWAP bucketizer.last {_GRID} ] BUCKETIZE",
+])
+def test_a_kernel_output_hands_off_to_spark(spark, sf_dir, monkeypatch, ops):
+    """An op without a kernel after a kernel continues in Spark from the
+    kernel's output (one createDataFrame) and renders the /exec JSON the
+    Spark route does.  Run on the sf0.01 fixture next to the test one."""
+    from warp10_platform_spark.__main__ import _jsonable
+    from warp10_platform_spark.operators import gts_kernels
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.exists(os.path.join(sf, "events.parquet")):
+        pytest.skip("sf0.01 testdata not present")
+    to_spark, handed = gts_kernels.to_spark, []
+
+    def counting(spark, table):
+        handed.append(table.num_rows)
+        return to_spark(spark, table)
+
+    monkeypatch.setattr(gts_kernels, "to_spark", counting)
+    script = f"{{ 'selector' '~events\\.(click|view){{user~[0-9]?[0-9]}}' {_WEEK} }} FETCH {ops}"
+    want = _jsonable(_fetch(spark, sf, script), None, False)
+    assert len(handed) == 1 and handed[0]
+    with monkeypatch.context() as m:
+        m.setattr(WF, "_LOCAL_MAX_BYTES", 0)
+        got = _jsonable(_fetch(spark, sf, script), None, False)
+    assert len(handed) == 1
+    assert sum(len(s["v"]) for s in want) > 200 and got == want
+
+
 @pytest.mark.parametrize("args, rows", [
     # an exact label; `=` with an empty value, which matches an absent label only
     ({"selector": "events.click{user=7}"}, "some"),
@@ -395,7 +431,7 @@ def test_scan_reads_only_the_matched_series_without_maps(spark, sf_dir, monkeypa
     start, end = pc.min(ts).as_py() + 1, pc.max(ts).as_py() - 1
     for text in (r"~events\.(click|view){user~1[0-9]}", "events.click{user=7}", "~.*{}"):
         sel = parse_selector(text)
-        got = layout.scan(layout.directory.select([sel]), start, end)
+        got = layout.scan(layout.directory.select([sel]), start, end).table
         keep = [start <= r["ts"] <= end and matches(sel, r["class"], dict(r["labels"]), dict(r["attributes"]))
                 for r in everything.to_pylist()]
         want = everything.filter(pa.array(keep))
@@ -430,10 +466,37 @@ def test_a_shared_gts_id_does_not_mix_series(tmp_path):
     }), str(tmp_path), partition_cols=["class"])
     layout = PointsLayout(str(tmp_path))
     for text, want in (("c{h=a}", [0, 3]), ("c{k=x}", [1, 4]), ("c{h=}", [2, 5]), ("c{h~.*}", [0, 1, 3, 4])):
-        t = layout.scan(layout.directory.select([parse_selector(text)]), None, None)
+        t = layout.scan(layout.directory.select([parse_selector(text)]), None, None).table
         assert t["ts"].to_pylist() == want, text
         assert t["labels"].to_pylist() == [list(series[pick[i]].items()) for i in want]
         assert t["attributes"].to_pylist() == [[("n", str(pick[i]))] for i in want]
+
+
+def test_a_layout_without_its_marker_is_written_again(spark, sf_dir, tmp_path, monkeypatch):
+    """canonical_points writes again a layout that has _SUCCESS but not
+    the marker of its current format (one written before the files were
+    sorted by series), and reuses a marked one."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from warp10_platform_spark.sources import tables
+
+    def keys_sorted(path):
+        keys = [pq.read_table(f, columns=["labels_key"])["labels_key"].to_pylist()
+                for f in glob.glob(os.path.join(path, "class=*", "*.parquet"))]
+        return all(k == sorted(k) for k in keys)
+
+    path = str(tmp_path / "points")
+    tables.events_points(spark, sf_dir).write.partitionBy("class").parquet(path)
+    assert os.path.exists(os.path.join(path, "_SUCCESS")) and not keys_sorted(path)
+    monkeypatch.setattr(tables, "_points_path", lambda sf: path)
+    tables.canonical_points(spark, sf_dir)
+    marker = os.path.join(path, tables._LAYOUT_MARKER)
+    assert os.path.exists(marker) and os.path.exists(os.path.join(path, "_SUCCESS")) and keys_sorted(path)
+    written = os.stat(marker).st_mtime_ns
+    tables.canonical_points(spark, sf_dir)
+    assert os.stat(marker).st_mtime_ns == written
 
 
 @pytest.fixture(scope="module")
@@ -486,7 +549,7 @@ def test_a_one_user_selection_reads_only_its_row_groups(clustered, monkeypatch):
     everything = layout.dataset.to_table()
     user = everything["labels_key"][len(everything) // 2].as_py()
     sel = parse_selector("~events\\..*{user=%s}" % user.split('"')[-2])
-    got = layout.scan(layout.directory.select([sel]), None, None)
+    got = layout.scan(layout.directory.select([sel]), None, None).table
     want = everything.filter(pc.equal(everything["labels_key"], user))
     key = [(c, "ascending") for c in ("class", "ts", "event_id")]
     assert got.num_rows and got.sort_by(key).equals(want.sort_by(key))
@@ -548,7 +611,7 @@ def test_an_interleaved_layout_answers_like_a_filter(tmp_path):
     for text in ("a{h=3}", "~.*{h~[2-5]}", "b{k=x}", "a{h=}", "~.*{}", "~[ab]{h~1.*}"):
         sel = parse_selector(text)
         for start, end in ((None, None), (100, 700), (None, 400), (300, None)):
-            got = layout.scan(layout.directory.select([sel]), start, end)
+            got = layout.scan(layout.directory.select([sel]), start, end).table
             keep = [(start is None or r["ts"] >= start) and (end is None or r["ts"] <= end)
                     and matches(sel, r["class"], dict(r["labels"])) for r in everything.to_pylist()]
             want = everything.filter(pa.array(keep))

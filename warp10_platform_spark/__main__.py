@@ -29,33 +29,12 @@ def _order_key(row) -> tuple:
     return tuple((row[c] is not None, row[c]) for c in _ORDER)
 
 
-def _arrow_rows(gf, limit: int | None) -> list[dict]:
-    """The rows _series_json renders, from an Arrow-backed frame: the
-    same columns, order and value typing as the Spark projection."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    t = gf.table
-    vc = gf.value_col or "v_double"
-    if vc != "v_double" and vc in t.column_names:
-        vnum = pc.cast(t[vc], pa.float64())
-    else:
-        typed = [c for c in ("v_double", "v_long", "v_bool") if c in t.column_names]
-        vnum = pc.coalesce(*(pc.cast(t[c], pa.float64()) for c in typed)) if typed else pa.nulls(len(t), pa.float64())
-    cols = {c: t[c] for c in ("class", "labels", "attributes", "ts", "lat", "lon", "elev") if c in t.column_names}
-    cols["_vnum"] = vnum
-    if "v_string" in t.column_names:
-        cols["_vstr"] = t["v_string"]
-    order = pc.sort_indices(t, sort_keys=[(c, "ascending") for c in _ORDER], null_placement="at_start")
-    return pa.table(cols).take(order[:limit] if limit else order).to_pylist()
-
-
 def _series_json(gf, limit: int | None):
     """GTSFrame → reference /exec GTS JSON: one object per series,
     {"c", "l", "a", "v": [[tick, (lat, lon,) (elev,) value], ...]},
     ticks ascending (GTSHelper JSON serialization order)."""
     if gf.local:
-        return _render(_arrow_rows(gf, limit))
+        return _render_arrow(gf.arrow, gf.value_col, limit)
     from pyspark.sql import functions as F
 
     df = gf.df
@@ -94,8 +73,7 @@ def _series_json(gf, limit: int | None):
 
 
 def _render(rows: list[dict]) -> list[dict]:
-    """Rows in (class, labels_key, ts) order → one object per series.
-    Maps arrive as dicts from Spark and as (key, value) lists from Arrow."""
+    """Spark rows in (class, labels_key, ts) order → one object per series."""
     out: dict[tuple, dict] = {}
     for d in rows:
         labels = dict(d.get("labels") or ())
@@ -114,6 +92,44 @@ def _render(rows: list[dict]) -> list[dict]:
     return list(out.values())
 
 
+def _render_arrow(points, value_col: str | None, limit: int | None) -> list[dict]:
+    """_render of an Arrow-backed frame's points: the same objects, one
+    series at a time from slices of its rows in (series, ts) order, with
+    each series' maps converted once."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    points = points.ordered()
+    rows, sid, names = points.rows, points.sid, points.schema.names
+    if limit:
+        rows, sid = rows.slice(0, limit), sid[:limit]
+    vc = value_col or "v_double"
+    if vc != "v_double" and vc in names:
+        vnum = pc.cast(rows[vc], pa.float64())
+    else:
+        typed = [pc.cast(rows[c], pa.float64()) for c in ("v_double", "v_long", "v_bool") if c in names]
+        vnum = pc.coalesce(*typed) if typed else pa.nulls(len(rows), pa.float64())
+    none = [None] * len(rows)
+    lat, lon, elev, vstr = (rows[c].to_pylist() if c in names and rows[c].null_count < len(rows) else none
+                            for c in ("lat", "lon", "elev", "v_string"))
+    pts = []
+    for t, la, lo, e, s, x in zip(rows["ts"].to_pylist(), lat, lon, elev, vstr, vnum.to_pylist()):
+        point = [t, la, lo] if la is not None and lo is not None else [t]
+        if e is not None:
+            point.append(e)
+        point.append(s if s is not None else x)
+        pts.append(point)
+    series = points.series
+    n = np.bincount(sid, minlength=series.num_rows)
+    ends = np.cumsum(n)
+    cls = series["class"].to_pylist()
+    labels, attributes = (series[c].to_pylist() if c in names else [None] * series.num_rows
+                          for c in ("labels", "attributes"))
+    return [{"c": cls[i], "l": dict(labels[i] or ()), "a": dict(attributes[i] or ()), "v": pts[ends[i] - n[i]:ends[i]]}
+            for i in np.flatnonzero(n)]
+
+
 def _jsonable(v, limit: int | None, explain: bool):
     from pyspark.sql import DataFrame
 
@@ -122,7 +138,7 @@ def _jsonable(v, limit: int | None, explain: bool):
     if isinstance(v, GTSFrame):
         if explain and v.local:
             # answered on the driver: no Spark plan exists to show
-            return {"gts_route": "arrow", "files": list(v.files), "rows": v.table.num_rows}
+            return {"gts_route": "arrow", "files": list(v.files), "rows": v.arrow.num_rows}
         if explain:
             return {"gts_plan": v.df._jdf.queryExecution().executedPlan().toString()}
         return _series_json(v, limit)

@@ -17,13 +17,16 @@ Every method is lazy — it appends DataFrame transformations; Catalyst
 parses/optimizes/plans at action time, which is the reference's missing
 query optimizer (SURVEY §4.1) obtained for free.
 
-A frame can instead hold its points in driver memory as a pyarrow Table
-(`table`), when FETCH answers a small request on the driver.  BUCKETIZE,
-MAP and REDUCE then run as numpy kernels (operators/gts_kernels.py) where
-one covers the case; any other op reads `df` and continues in Spark.  A
-FETCH frame holds both routes lazily: its `df` is the Spark scan plan
-and its `table` the Arrow scan, so an op without a kernel runs the plan
-the Spark route would, and reads nothing on the driver.
+A frame can instead hold its points in driver memory as Arrow (`arrow`,
+an operators/gts_kernels.ArrowGTS), when FETCH answers a small request on
+the driver: each series' class, labels_key and maps once, the other
+columns once per point, and the series of each point.  BUCKETIZE, MAP and
+REDUCE then run as numpy kernels (operators/gts_kernels.py) where one
+covers the case, each handing the series on; any other op reads `df` and
+continues in Spark, from the points as one Table (`table`).  A FETCH
+frame holds both routes lazily: its `df` is the Spark scan plan and its
+`arrow` the Arrow scan, so an op without a kernel runs the plan the Spark
+route would, and reads nothing on the driver.
 """
 
 from __future__ import annotations
@@ -62,9 +65,9 @@ class GTSFrame:
         self._df = df
         self.bucketspec = bucketspec
         self.value_col = value_col
-        # Arrow-backed frames: the points as a pyarrow Table or a function
-        # that scans them, the session that builds `df` from them, and the
-        # layout files the FETCH selected
+        # Arrow-backed frames: the points as an ArrowGTS, a pyarrow Table
+        # or a function that scans them, the session that builds `df` from
+        # them, and the layout files the FETCH selected
         self._table = table
         self.spark = spark
         self.files = files
@@ -79,19 +82,27 @@ class GTSFrame:
 
     @property
     def local(self) -> bool:
-        """Whether the points are (or can be scanned into) a Table."""
+        """Whether the points are (or can be scanned into) Arrow."""
         return self._table is not None
 
     @property
-    def table(self):
-        """The points as a pyarrow Table (None on a Spark-only frame);
-        a FETCH frame scans them on first access."""
+    def arrow(self) -> _gk.ArrowGTS | None:
+        """The points as an ArrowGTS (None on a Spark-only frame); a FETCH
+        frame scans them on first access, and a frame given a Table works
+        out its series then."""
         if callable(self._table):
             self._table = self._table()
+        if self._table is not None and not isinstance(self._table, _gk.ArrowGTS):
+            self._table = _gk.ArrowGTS.from_table(self._table)
         return self._table
 
-    def _local(self, table, bucketspec: BucketSpec | None, value_col: str) -> "GTSFrame":
-        return GTSFrame(None, bucketspec, value_col, table=table, spark=self.spark, files=self.files)
+    @property
+    def table(self):
+        """The points as one pyarrow Table (None on a Spark-only frame)."""
+        return None if self.arrow is None else self.arrow.table
+
+    def _local(self, points, bucketspec: BucketSpec | None, value_col: str) -> "GTSFrame":
+        return GTSFrame(None, bucketspec, value_col, table=points, spark=self.spark, files=self.files)
 
     # ---- construction ----
 
@@ -223,7 +234,7 @@ class GTSFrame:
     def bucketize(self, bucketizer: str, span: int, lastbucket: int | None = None,
                   bucketcount: int | None = None, p: float | None = None) -> "GTSFrame":
         if self.local and _gk.covers(bucketizer, _gk.BUCKETIZERS):
-            local = _gk.bucketize(self.table, bucketizer, span, lastbucket, bucketcount, self.value_col, p)
+            local = _gk.bucketize(self.arrow, bucketizer, span, lastbucket, bucketcount, self.value_col, p)
             if local is not None:
                 return self._local(*local, "v_agg")
         out, spec = _bucketize(self.df, bucketizer, span, lastbucket, bucketcount, value_col=self.value_col, p=p)
@@ -231,7 +242,7 @@ class GTSFrame:
 
     def map_aggregate(self, mapper: str, pre: int = 0, post: int = 0, p: float | None = None) -> "GTSFrame":
         if self.local and _gk.covers(mapper, _gk.WINDOW_MAPPERS):
-            local = _gk.map_window(self.table, mapper, pre, post, self.value_col)
+            local = _gk.map_window(self.arrow, mapper, pre, post, self.value_col)
             if local is not None:
                 return self._local(local, self.bucketspec, "v_mapped")
         out = _mapper.map_aggregate(self.df, mapper, pre, post, value_col=self.value_col, p=p)
@@ -286,7 +297,7 @@ class GTSFrame:
         frame so a following FILL can scaffold the grid."""
         spec = _merge_specs(self.bucketspec)
         if self.local and p is None and _gk.covers(reducer, _gk.REDUCERS):
-            local = _gk.reduce(self.table, reducer, by, self.value_col, klass)
+            local = _gk.reduce(self.arrow, reducer, by, self.value_col, klass)
             if local is not None:
                 return self._local(local, spec, "v_reduced")
         out = _ra.reduce_gts(self.df, reducer, by, value_col=self.value_col, p=p)

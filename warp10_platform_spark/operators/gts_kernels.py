@@ -1,13 +1,17 @@
-"""numpy kernels for GTS frames held in driver memory as pyarrow Tables.
+"""numpy kernels for GTS frames held in driver memory as Arrow.
 
 A small /exec request (a FETCH whose class-pruned files fall under
 warpscript/functions.py's _LOCAL_MAX_BYTES) is answered on the driver:
 the reference evaluates WarpScript over in-memory GTS arrays too (SURVEY
 §1.1, GeoTimeSerie's parallel primitive arrays), and for a kilobyte answer
-that beats planning Spark jobs.  These kernels give BUCKETIZE, MAP and
-REDUCE Spark's semantics over such a Table.  The caller checks `covers`
-for the op's name first; a kernel returns None for another case it does
-not cover, and the caller then continues in Spark (GTSFrame.df).
+that beats planning Spark jobs.  Such a frame is an ArrowGTS: its class,
+labels_key and maps once per series, the other columns once per point,
+and the series of each point, which FETCH's scan already knows and each
+kernel hands on, so no kernel works out again which rows form a series.
+These kernels give BUCKETIZE, MAP and REDUCE Spark's semantics over it.
+The caller checks `covers` for the op's name first; a kernel returns
+None for another case it does not cover, and the caller then continues in
+Spark (GTSFrame.df).
 
 Agreement with the Spark operators (tests/test_local_route.py):
 
@@ -32,6 +36,71 @@ import pyarrow.compute as pc
 
 from warp10_platform_spark.operators.bucketize import BucketSpec
 
+# the columns of a point that are the same for every point of its series
+SERIES_COLUMNS = ("class", "labels_key", "labels", "attributes")
+
+
+class ArrowGTS:
+    """Points held on the driver, as Arrow, with the series of each.
+
+    `series` has one row per series, in Spark's ascending (class,
+    labels_key) order, nulls first, and the SERIES_COLUMNS the points
+    have; `rows` has one row per point and the other columns; `sid[i]` is
+    the series of point i.  `schema` orders the columns of `table`, the
+    points as one Table (what GTSFrame.df hands to Spark)."""
+
+    def __init__(self, series: pa.Table, sid: np.ndarray, rows: pa.Table, schema: pa.Schema):
+        self.series, self.sid, self.rows, self.schema = series, sid, rows, schema
+        self._table = None
+
+    @classmethod
+    def from_table(cls, t: pa.Table) -> "ArrowGTS":
+        """The series of a Table's rows, worked out once.  A series'
+        maps are those of its first row in ts order."""
+        order = pc.sort_indices(t, sort_keys=[(c, "ascending") for c in ("class", "labels_key", "ts")],
+                                null_placement="at_start").to_numpy()
+        same = np.ones(max(len(order) - 1, 0), bool)
+        for c in ("class", "labels_key"):
+            code = pc.dictionary_encode(t[c].combine_chunks(), null_encoding="encode").indices.to_numpy(
+                zero_copy_only=False)[order]
+            same &= code[1:] == code[:-1]
+        new = np.ones(len(order), bool)
+        new[1:] = ~same
+        sid = np.empty(len(order), np.int64)
+        sid[order] = np.cumsum(new) - 1
+        kept = [c for c in SERIES_COLUMNS if c in t.column_names]
+        return cls(t.select(kept).take(order[new]), sid, t.drop_columns(kept), t.schema)
+
+    @property
+    def num_rows(self) -> int:
+        return len(self.sid)
+
+    @property
+    def table(self) -> pa.Table:
+        """The points as one Table, built on first use."""
+        if self._table is None:
+            self._table = pa.Table.from_arrays(
+                [self.series[c].take(self.sid) if c in SERIES_COLUMNS else self.rows[c] for c in self.schema.names],
+                schema=self.schema)
+        return self._table
+
+    def ordered(self) -> "ArrowGTS":
+        """These points in (series, ts) order, null ticks first and ties
+        in row order."""
+        ts = self.rows["ts"]
+        order = np.lexsort((_numpy(ts), ts.is_valid().to_numpy(zero_copy_only=False), self.sid))
+        if (np.diff(order) > 0).all():
+            return self
+        return ArrowGTS(self.series, self.sid[order], self.rows.take(order), self.schema)
+
+    def derive(self, sid: np.ndarray, rows: pa.Table, names, series: pa.Table | None = None) -> "ArrowGTS":
+        """A kernel's output: `rows` of the series `sid` of `series` (by
+        default these points' series), with the columns `names`; a column
+        not in `rows` keeps its type here."""
+        fields = [rows.schema.field(c) if c in rows.column_names else self.schema.field(c) for c in names]
+        return ArrowGTS(self.series if series is None else series, sid, rows, pa.schema(fields))
+
+
 BUCKETIZERS = ("sum", "mean", "count", "max", "min", "percentile")
 WINDOW_MAPPERS = ("sum", "mean", "count", "max", "min")
 REDUCERS = ("sum", "mean", "count", "max", "min")
@@ -54,13 +123,12 @@ def _values(table: pa.Table, col: str):
     c = table[col]
     if not (pa.types.is_int64(c.type) or pa.types.is_float64(c.type)):
         return None
-    return c.fill_null(0).to_numpy(), pc.is_valid(c).to_numpy(zero_copy_only=False)
+    return _numpy(c), pc.is_valid(c).to_numpy(zero_copy_only=False)
 
 
-def _codes(col) -> np.ndarray:
-    """Integer code of each row's value (null is a value of its own)."""
-    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    return pc.dictionary_encode(arr, null_encoding="encode").indices.to_numpy(zero_copy_only=False)
+def _numpy(col) -> np.ndarray:
+    """A long or double column as numpy, nulls as 0."""
+    return (col.fill_null(0) if col.null_count else col).to_numpy()
 
 
 def _group(*keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
@@ -74,11 +142,6 @@ def _group(*keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
     g = np.empty(len(order), np.int64)
     g[order] = np.cumsum(new) - 1
     return g, order[new], int(new.sum())
-
-
-def _series(table: pa.Table) -> tuple[np.ndarray, np.ndarray, int]:
-    """_group by series: (class, labels_key)."""
-    return _group(_codes(table["class"]), _codes(table["labels_key"]))
 
 
 def _aggregate(n: str, v: np.ndarray, ok: np.ndarray, g: np.ndarray, ng: int, p: float | None = None):
@@ -118,41 +181,42 @@ def _column(values: np.ndarray, valid: np.ndarray) -> pa.Array:
     return pa.array(values, mask=~valid)
 
 
-def bucketize(table: pa.Table, bucketizer: str, span: int, lastbucket: int | None,
+def bucketize(points: ArrowGTS, bucketizer: str, span: int, lastbucket: int | None,
               bucketcount: int | None, value_col: str, p: float | None = None):
-    """operators/bucketize.bucketize over a Table: (table, BucketSpec)."""
+    """operators/bucketize.bucketize over points: (points, BucketSpec)."""
     n = _short(bucketizer)
-    vals = _values(table, value_col)
+    vals = _values(points.rows, value_col)
     if vals is None or (n == "percentile" and p is None):
         return None
     v, ok = vals
-    ts = table["ts"].to_numpy()
+    ts = points.rows["ts"].to_numpy()
     if (lastbucket is None or bucketcount is None) and len(ts):
         lastbucket = int(ts.max()) if lastbucket is None else lastbucket
         bucketcount = int((lastbucket - int(ts.min())) // span) + 1 if bucketcount is None else bucketcount
     spec = BucketSpec(int(lastbucket or 0), int(span), int(bucketcount or 0))
     rows = np.flatnonzero((ts <= spec.lastbucket) & (ts > spec.lastbucket - spec.bucketspan * spec.bucketcount))
-    sid = _series(table)[0][rows]
     back = (spec.lastbucket - ts[rows]) // spec.bucketspan
-    g, first, ng = _group(sid, back)
+    # buckets numbered in (series, ts) order
+    g, first, ng = _group(points.sid[rows], -back)
     agg = _aggregate(n, v[rows], ok[rows], g, ng, p)
     src = rows[first]
-    out = table.select([c for c in ("gts_id", "class", "labels_key") if c in table.column_names]).take(src)
-    out = out.append_column("ts", pa.array(spec.lastbucket - back[first] * spec.bucketspan))
-    out = out.append_column("v_agg", _column(*agg))
-    return out.append_column("labels", table["labels"].take(src)), spec
+    out = {"gts_id": points.rows["gts_id"].take(src)} if "gts_id" in points.rows.column_names else {}
+    out["ts"] = pa.array(spec.lastbucket - back[first] * spec.bucketspan)
+    out["v_agg"] = _column(*agg)
+    names = [c for c in ("gts_id", "class", "labels_key", "ts", "v_agg", "labels")
+             if c in out or c in points.schema.names]
+    return points.derive(points.sid[src], pa.table(out), names), spec
 
 
-def map_window(table: pa.Table, mapper: str, pre: int, post: int, value_col: str):
+def map_window(points: ArrowGTS, mapper: str, pre: int, post: int, value_col: str):
     """operators/mapper.map_aggregate for a rows frame (pre, post >= 0)
-    over a Table, rows sorted by series then tick."""
+    over points, which come out in (series, ts) order."""
     n = _short(mapper)
-    vals = _values(table, value_col)
+    points = points.ordered()
+    vals = _values(points.rows, value_col)
     if vals is None or pre < 0 or post < 0:
         return None
-    sid = _series(table)[0]
-    order = np.lexsort((table["ts"].to_numpy(), sid))
-    s, v, ok = sid[order], vals[0][order], vals[1][order]
+    s, (v, ok) = points.sid, vals
     m = len(s)
     acc = np.zeros(m, np.float64 if n == "mean" else v.dtype)
     cnt = np.zeros(m, np.int64)
@@ -171,10 +235,13 @@ def map_window(table: pa.Table, mapper: str, pre: int, post: int, value_col: str
         mapped = _column(cnt, np.ones(m, bool))
     else:
         mapped = _column(acc / np.maximum(cnt, 1) if n == "mean" else acc, cnt > 0)
-    out = table.take(pa.array(order))
-    if "v_mapped" in out.column_names:
-        return out.set_column(out.column_names.index("v_mapped"), "v_mapped", mapped)
-    return out.append_column("v_mapped", mapped)
+    rows = points.rows
+    if "v_mapped" in rows.column_names:
+        rows = rows.set_column(rows.column_names.index("v_mapped"), "v_mapped", mapped)
+        names = points.schema.names
+    else:
+        rows, names = rows.append_column("v_mapped", mapped), points.schema.names + ["v_mapped"]
+    return points.derive(s, rows, names)
 
 
 _JSON_ESCAPES = {'"': '\\"', "\\": "\\\\", "\b": "\\b", "\f": "\\f", "\n": "\\n", "\r": "\\r", "\t": "\\t"}
@@ -194,30 +261,36 @@ def labels_key(labels: dict[str, str]) -> str:
     ) + "]"
 
 
-def reduce(table: pa.Table, reducer: str, by: list[str], value_col: str, klass: str = ""):
-    """GTSFrame.reduce_frame over a Table: one series per by-label
+def reduce(points: ArrowGTS, reducer: str, by: list[str], value_col: str, klass: str = ""):
+    """GTSFrame.reduce_frame over points: one series per by-label
     equivalence class, with canonical class/labels_key/labels columns."""
     n = _short(reducer)
-    vals = _values(table, value_col)
+    vals = _values(points.rows, value_col)
     if vals is None:
         return None
-    sid, first, _ = _series(table)
-    eq_of: dict[tuple, int] = {}
-    per_series = [eq_of.setdefault(tuple(dict(lab).get(k) for k in by), len(eq_of))
-                  for lab in table["labels"].take(first).to_pylist()]
-    eq = np.array(per_series, np.int64)[sid]
-    ts = table["ts"].to_numpy()
-    g, gfirst, ng = _group(eq, ts)
+    # each series' by-label values (null where absent), then its class
+    labels = points.series["labels"].combine_chunks()
+    values = [pc.map_lookup(labels, k, "last") for k in by]
+    codes = [pc.dictionary_encode(x, null_encoding="encode").indices.to_numpy(zero_copy_only=False) for x in values]
+    eq, first, ne = _group(*(codes or [np.zeros(len(labels), np.int64)]))
+    classes = [{k: x for k, x in zip(by, key) if x is not None}
+               for key in zip(*(x.take(first).to_pylist() for x in values))] if by else [{}] * ne
+    keys = [labels_key(lab) for lab in classes]
+    # classes numbered in labels_key order, as the series of the output
+    order = sorted(range(ne), key=keys.__getitem__)
+    rank = np.empty(ne, np.int64)
+    rank[order] = np.arange(ne)
+    sid = rank[eq][points.sid]
+    ts = points.rows["ts"].to_numpy()
+    g, gfirst, ng = _group(sid, ts)
     agg = _aggregate(n, vals[0], vals[1], g, ng)
-    classes = [{k: x for k, x in zip(by, key) if x is not None} for key in eq_of]
-    labels = [classes[e] for e in eq[gfirst]]
-    return pa.table({
-        "class": pa.array([klass] * ng, pa.string()),
-        "labels_key": pa.array([labels_key(lab) for lab in labels], pa.string()),
-        "labels": pa.array([list(lab.items()) for lab in labels], pa.map_(pa.string(), pa.string())),
-        "ts": pa.array(ts[gfirst], pa.int64()),
-        "v_reduced": _column(*agg),
+    series = pa.table({
+        "class": pa.array([klass] * ne, pa.string()),
+        "labels_key": pa.array([keys[i] for i in order], pa.string()),
+        "labels": pa.array([list(classes[i].items()) for i in order], pa.map_(pa.string(), pa.string())),
     })
+    rows = pa.table({"ts": pa.array(ts[gfirst], pa.int64()), "v_reduced": _column(*agg)})
+    return points.derive(sid[gfirst], rows, ["class", "labels_key", "labels", "ts", "v_reduced"], series)
 
 
 def to_spark(spark, table: pa.Table):

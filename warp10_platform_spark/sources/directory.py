@@ -17,7 +17,9 @@ analogs here:
   series has in each file.  The layout writes each class file sorted by
   series (the reference's (classId, labelsId) key order), so those row
   spans name the few row groups the pyarrow scan that follows reads;
-  it decodes no map column, and the maps come from the directory.
+  it decodes no map column nor the class, and hands on the series it
+  matched each row to, with their class, labels_key and maps from the
+  directory, once per series (operators/gts_kernels.ArrowGTS).
 - The Spark `directory` table: one row per series with identity + stats,
   consulted by FIND/FINDSTATS and used as a broadcast semi-join filter
   in front of FETCH.  At 100 TB it is maintained incrementally at ingest
@@ -51,7 +53,8 @@ def _spans(t: pa.Table) -> tuple[np.ndarray, np.ndarray]:
 
 class SeriesDirectory:
     """The series of a class-partitioned points layout, held on the
-    driver as columns and sorted by (class, labels_key).
+    driver as columns and numbered in Spark's ascending (class,
+    labels_key) order, so ascending series indices are in that order.
 
     Per series: the codes of its class and labels_key, its gts_id, and
     the labels and attributes maps of its first row.  Per label name:
@@ -92,9 +95,14 @@ class SeriesDirectory:
         self.file_groups = np.searchsorted(self.group_file, np.arange(len(self.files)))
         heads = pa.concat_tables(heads)
         keys = pc.dictionary_encode(heads["labels_key"].combine_chunks())
-        self.keys = keys.dictionary
+        # the keys in ascending order, so the series are in Spark's
+        # (class, labels_key) order
+        order = pc.array_sort_indices(keys.dictionary).to_numpy()
+        rank = np.empty(len(order), np.int64)
+        rank[order] = np.arange(len(order))
+        self.keys = keys.dictionary.take(order)
         head_file = np.repeat(np.arange(len(self.files)), [len(f) for f in first])
-        pair = self.file_class[head_file] * len(self.keys) + keys.indices.to_numpy().astype(np.int64)
+        pair = self.file_class[head_file] * len(self.keys) + rank[keys.indices.to_numpy()]
         # ascending, so searchsorted finds the series of a (class, labels_key)
         self._pair, at, span_series = np.unique(pair, return_index=True, return_inverse=True)
         first, last = np.concatenate(first), np.concatenate(last)
@@ -171,6 +179,12 @@ class SeriesDirectory:
         files = self.group_file[g]
         groups = {int(f): g[files == f] - self.file_groups[f] for f in np.unique(files)}
         return groups, inside, self.file_class[np.repeat(files, n)[inside]]
+
+    def series(self, series: np.ndarray) -> pa.Table:
+        """The class, labels_key, labels and attributes of `series`."""
+        return pa.table({"class": self.class_names.take(self.class_code[series]),
+                         "labels_key": self.keys.take(self.key_code[series]),
+                         "labels": self.labels.take(series), "attributes": self.attributes.take(series)})
 
     def rows(self, row_class: np.ndarray, labels_key: pa.ChunkedArray, series: np.ndarray) -> np.ndarray:
         """The series of each row (its class code and labels_key), or -1

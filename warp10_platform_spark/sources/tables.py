@@ -187,17 +187,23 @@ def canonical_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Materialized once per sf_dir under the repo's .cache/ and reused;
     FETCH range + class predicates then land in PushedFilters /
-    partition pruning for real."""
+    partition pruning for real.  A layout without _LAYOUT_MARKER was
+    written in an older format (unsorted, say) and is written again."""
     path = _points_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not os.path.exists(os.path.join(path, _LAYOUT_MARKER)):
         _write_points(events_points(spark, sf_dir), path)
     return _read_parquet_memo(spark, path)
 
 
+# written beside _SUCCESS once a layout of canonical_points' format is
+# complete; a new format takes a new name.  Readers skip "_" files.
+_LAYOUT_MARKER = "_SORTED_BY_SERIES"
+
+
 def _write_points(points: DataFrame, path: str) -> None:
-    """Write `points` in canonical_points' layout.  The sort leads with
-    the partition column, so it is also the order the partitioned writer
-    needs, and the writer adds no sort of its own."""
+    """Write `points` in canonical_points' layout, then its marker.  The
+    sort leads with the partition column, so it is also the order the
+    partitioned writer needs, and the writer adds no sort of its own."""
     (
         points.sortWithinPartitions("class", "labels_key", "ts")
         .write.mode("overwrite")
@@ -205,6 +211,8 @@ def _write_points(points: DataFrame, path: str) -> None:
         .partitionBy("class")
         .parquet(path)
     )
+    with open(os.path.join(path, _LAYOUT_MARKER), "w") as f:
+        f.write(f"sorted by class, labels_key, ts; row groups of {_ROW_GROUP_BYTES} bytes\n")
 
 
 def cache_path(name: str) -> str:
@@ -215,10 +223,6 @@ def cache_path(name: str) -> str:
 
 def _points_path(sf_dir: str) -> str:
     return cache_path(f"points_{_cache_key(sf_dir)}")
-
-
-# the map columns FETCH's driver route takes from the series directory
-_MAPS = ("labels", "attributes")
 
 
 class PointsLayout:
@@ -259,21 +263,24 @@ class PointsLayout:
         return tuple(f.path for c in classes for f in self.fragments[c])
 
     def scan(self, series, start: int | None, end: int | None):
-        """Rows of the directory's `series` (a non-empty index array) with
-        start <= ts <= end, as a pyarrow Table of the layout's schema,
-        grouped by file in file order.  Only the row groups that overlap
-        those series' row spans are read, and the labels and attributes
-        maps come from the directory instead of the files.  A row is kept
-        only if its (class, labels_key) is one of `series`, so two series
-        sharing a gts_id cannot mix, and a file not sorted by series
-        (a span covering most of it) answers alike, only slower."""
+        """Rows of the directory's `series` (a non-empty ascending index
+        array) with start <= ts <= end, as an ArrowGTS of the layout's
+        schema, grouped by file in file order.  Only the row groups that
+        overlap those series' row spans are read.  The class, labels_key
+        and maps of each series come from the directory, once per series,
+        and each row's series from its match there: a row is kept only if
+        its (class, labels_key) is one of `series`, so two series sharing
+        a gts_id cannot mix, and a file not sorted by series (a span
+        covering most of it) answers alike, only slower."""
         import numpy as np
-        import pyarrow as pa
+
+        from warp10_platform_spark.operators.gts_kernels import SERIES_COLUMNS, ArrowGTS
 
         d = self.directory
         schema = self.dataset.schema
         groups, inside, row_class = d.row_groups(series)
-        t = self._read(groups, [c for c in schema.names if c not in _MAPS and c != "class"]).take(inside)
+        t = self._read(groups, [c for c in schema.names if c == "labels_key" or c not in SERIES_COLUMNS])
+        t = t.take(inside)
         rows = d.rows(row_class, t["labels_key"], series)
         keep = rows >= 0
         if start is not None or end is not None:
@@ -288,12 +295,10 @@ class PointsLayout:
             if end is not None:
                 keep &= ts <= end
         idx = np.flatnonzero(keep)
-        rows = rows[idx]
+        t = t.drop_columns(["labels_key"])
         if len(idx) < t.num_rows:
             t = t.take(idx)
-        cols = {"labels": d.labels.take(rows), "attributes": d.attributes.take(rows),
-                "class": d.class_names.take(row_class[idx])}
-        return pa.Table.from_arrays([cols[c] if c in cols else t[c] for c in schema.names], schema=schema)
+        return ArrowGTS(d.series(series), np.searchsorted(series, rows[idx]), t, schema)
 
     def _read(self, groups: dict, columns: list[str]):
         """`columns` of the row groups `groups` (file → row groups of that

@@ -422,7 +422,7 @@ _LOCAL_MAX_BYTES = 32 << 20
 def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -> GTSFrame | None:
     """FETCH's driver route, or None where it does not apply: above
     _LOCAL_MAX_BYTES, for attribute clauses, and for regexes Python's re
-    does not read as Spark (Java) does.  On first use of its Table the
+    does not read as Spark (Java) does.  On first use of its points the
     frame looks the selectors up in the layout's series directory, then
     reads only the row groups that hold the matched series and keeps
     their rows in the ts bounds; when no series matches it scans
