@@ -39,11 +39,12 @@ def _assert_same(got: dict, want: dict, rel: float):
 
 @pytest.fixture(scope="module")
 def points():
-    """Three series (one without labels) in two classes, long and double
-    values with nulls, ticks in no order."""
+    """Four series (one without labels) in two classes, long and double
+    values with nulls, ticks in no order; by `h`, the class order differs
+    from the order in which the series first show each value."""
     rng = np.random.default_rng(11)
     n = 600
-    series = [("a.cls", {"h": "1"}), ("a.cls", {}), ("b.cls", {"h": "2", "k": "x"})]
+    series = [("a.cls", {"h": "1"}), ("a.cls", {}), ("b.cls", {"h": "2", "k": "x"}), ("a.cls", {"h": "3", "k": "y"})]
     pick = rng.integers(0, len(series), n)
     ts = rng.permutation(40_000)[:n] * 1000 + 7
     vd = np.round(rng.normal(50, 30, n), 2)
@@ -117,6 +118,11 @@ def test_reduce_kernel_matches_spark(spark, points, name, by):
     assert _types(a.df) == _types(b.df)
     key = ["gts_id", "class", "labels_key", "ts"]
     assert sorted(map(tuple, a.df.select(*key).collect())) == sorted(map(tuple, b.df.select(*key).collect()))
+
+    def maps(f):
+        return sorted({(r["labels_key"], tuple(r["labels"].items())) for r in f.df.select("labels_key", "labels").collect()})
+
+    assert maps(a) == maps(b)
     _assert_same(_rows(a), _rows(b), 1e-12 if name in ("sum", "mean") else 0)
 
 
