@@ -33,8 +33,10 @@ sys.path.insert(0, ROOT)
 
 
 def main(argv=None) -> int:
+    from bench import SF_DIR
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf", default=SF_DIR, help="data directory (default: bench.py's, $SPARK_GRAFT_SF_DIR)")
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--requests", type=int, default=300)
     ap.add_argument("--threads", type=int, nargs="+", default=[1, 2])
