@@ -112,8 +112,11 @@ def test_cli_interactive_with_script(spark, capsys, monkeypatch, tmp_path):
 
 
 def _unsorted_gts(spark):
-    """Two classes, five series, rows in no particular order; one series
-    has empty labels and a null labels_key, like a `REDUCE [ ]` output."""
+    """Three classes, six series, rows in no particular order; one series
+    has empty labels and a null labels_key, like a `REDUCE [ ]` output,
+    and another null maps.  Some rows carry what the kernels never
+    produce: a string, a boolean, a long above 2^53, a located point with
+    an elevation, an elevation alone and a null tick."""
     from warp10_platform_spark.core.frame import GTSFrame
 
     def key(v):
@@ -124,34 +127,47 @@ def _unsorted_gts(spark):
         ("a.cls", None, 5, 9.0), ("a.cls", "z", 7, 2.0), ("a.cls", "é", 1, 0.5),
         ("a.cls", None, 2, 8.0), ("b.cls", "1", 40, 4.0),
     ]
+    rows = [(c, {} if h is None else {"h": h}, {}, key(h), ts, None, None, None, v, None, None, None)
+            for c, h, ts, v in rows]
+    # class, labels, attributes, labels_key, ts, lat, lon, elev, v_double, v_long, v_bool, v_string
+    rows[3:3] = [
+        ("b.cls", {"h": "2"}, {}, key("2"), 50, None, None, -4, None, 2**53 + 1, None, None),
+        ("c.cls", None, None, None, 3, None, None, None, 6.0, None, None, None),
+        ("b.cls", {"h": "1"}, {}, key("1"), None, None, None, None, None, None, None, "s"),
+        ("b.cls", {"h": "2"}, {}, key("2"), 20, 48.5, 2.25, 35, None, None, True, None),
+    ]
     df = spark.createDataFrame(
-        [(c, {} if h is None else {"h": h}, {}, key(h), ts, v) for c, h, ts, v in rows],
+        rows,
         "class string, labels map<string,string>, attributes map<string,string>, "
-        "labels_key string, ts bigint, v_double double",
+        "labels_key string, ts bigint, lat double, lon double, elev bigint, v_double double, "
+        "v_long bigint, v_bool boolean, v_string string",
     )
     return GTSFrame(df, None, "v_double")
 
 
-# (class, labels_key, ts) order: null key first, then 'z' < 'é' in UTF-8
+# (class, labels_key, ts) order: null key first, then 'z' < 'é' in UTF-8;
+# a null tick first
 RENDERED = [
     {"c": "a.cls", "l": {}, "a": {}, "v": [[2, 8.0], [5, 9.0]]},
     {"c": "a.cls", "l": {"h": "z"}, "a": {}, "v": [[7, 2.0]]},
     {"c": "a.cls", "l": {"h": "é"}, "a": {}, "v": [[1, 0.5], [20, 1.5]]},
-    {"c": "b.cls", "l": {"h": "1"}, "a": {}, "v": [[40, 4.0]]},
-    {"c": "b.cls", "l": {"h": "2"}, "a": {}, "v": [[10, 1.0], [30, 3.0]]},
+    {"c": "b.cls", "l": {"h": "1"}, "a": {}, "v": [[None, "s"], [40, 4.0]]},
+    {"c": "b.cls", "l": {"h": "2"}, "a": {},
+     "v": [[10, 1.0], [20, 48.5, 2.25, 35, 1.0], [30, 3.0], [50, -4, 9007199254740992.0]]},
+    {"c": "c.cls", "l": {}, "a": {}, "v": [[3, 6.0]]},
 ]
 
 
 def _record_plans(monkeypatch, gf) -> list:
-    """Physical plans of every DataFrame collected from here on."""
+    """Physical plans of every DataFrame collected as Arrow from here on."""
     cls = type(gf.df)
-    plans, collect = [], cls.collect
+    plans, to_arrow = [], cls.toArrow
 
     def recording(self):
         plans.append(self._jdf.queryExecution().executedPlan().toString())
-        return collect(self)
+        return to_arrow(self)
 
-    monkeypatch.setattr(cls, "collect", recording)
+    monkeypatch.setattr(cls, "toArrow", recording)
     return plans
 
 
@@ -165,11 +181,11 @@ def test_series_json_sorts_on_driver_like_spark(spark, monkeypatch):
     assert got == RENDERED
     assert plans and not any("rangepartitioning" in p for p in plans)
     # a limit as large as the frame takes Spark's own sort: same render
-    assert _series_json(gf, 8) == got
+    assert _series_json(gf, 12) == got
     # the Arrow-backed twin renders on the driver without a Spark job
     twin = GTSFrame(None, None, "v_double", table=gf.df.toArrow(), spark=spark)
     n = len(plans)
-    assert _series_json(twin, None) == RENDERED and _series_json(twin, 8) == RENDERED
+    assert _series_json(twin, None) == RENDERED and _series_json(twin, 12) == RENDERED
     assert len(plans) == n
 
 

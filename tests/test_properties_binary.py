@@ -1,5 +1,8 @@
-"""Hypothesis property tests for the round-4 late tiers: digests, AES /
-RFC 3394, the secure-script envelope, GIF LZW, and GOLDWRAP canonicity."""
+"""Hypothesis property tests for the binary formats: digests, AES /
+RFC 3394, the secure-script envelope, GIF LZW, GOLDWRAP canonicity,
+encrypted GTS streams, the PGP and GTS decoders, Shamir secret sharing,
+the metaset codec, vector quantizer codes and histogram binning, plus a
+tokenizer fuzz."""
 
 import hashlib
 

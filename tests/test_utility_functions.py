@@ -1,6 +1,8 @@
-"""Round-4 registry tranches: quaternions, stack state, JSON forms,
-counters, bounds, conversions, field mappers, macro aggregators from
-WarpScript macros, geo coverage utilities, hulls, accessors.
+"""Utility functions of the WarpScript surface: quaternions, stack
+state, JSON forms, counters, bounds, conversions, field mappers, macro
+aggregators from WarpScript macros, geo coverage utilities, hulls,
+accessors, PACK/UNPACK, vector and matrix literals, BigDecimal, RNG and
+primes, WRAP variants and geo serializers.
 """
 
 import math

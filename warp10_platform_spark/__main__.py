@@ -10,6 +10,9 @@ response shape of /exec. GTS stack values (lazy DataFrames) are only
 materialized HERE, at the response boundary, mirroring how the reference
 streams the stack after the script completes; `--explain` prints their
 physical plans instead of collecting (the scale-friendly dry run).
+Every GTS renders through one function, `_render_arrow`: an Arrow-backed
+frame from its points, a Spark frame from its render columns collected
+with `toArrow()`.
 """
 
 from __future__ import annotations
@@ -19,83 +22,33 @@ import json
 import sys
 
 
-_ORDER = ("class", "labels_key", "ts")
-
-
-def _order_key(row) -> tuple:
-    """Spark's ascending (class, labels_key, ts) order, nulls first.
-    Python compares str by code point, which is the UTF-8 byte order
-    Spark compares strings in."""
-    return tuple((row[c] is not None, row[c]) for c in _ORDER)
-
-
 def _series_json(gf, limit: int | None):
-    """GTSFrame → reference /exec GTS JSON: one object per series,
-    {"c", "l", "a", "v": [[tick, (lat, lon,) (elev,) value], ...]},
-    ticks ascending (GTSHelper JSON serialization order)."""
+    """GTSFrame → reference /exec GTS JSON (_render_arrow), from its Arrow
+    points or from the Spark frame's render columns collected as Arrow."""
     if gf.local:
         return _render_arrow(gf.arrow, gf.value_col, limit)
-    from pyspark.sql import functions as F
+    from warp10_platform_spark.operators.gts_kernels import ArrowGTS
 
     df = gf.df
-    vc = getattr(gf, "value_col", None) or "v_double"
-    if vc != "v_double" and vc in df.columns:
-        # derived frames (bucketize/map output) carry their value in
-        # value_col; typed columns below may not exist on them
-        value = F.col(vc).cast("double")
-    else:
-        typed = [c for c in ("v_double", "v_long", "v_bool") if c in df.columns]
-        value = F.coalesce(*(F.col(c).cast("double") for c in typed)) if typed else F.lit(None).cast("double")
-    cols = [
-        "class",
-        "labels_key",
-        "labels",
-        "attributes",
-        "ts",
-        "lat",
-        "lon",
-        "elev",
-        value.alias("_vnum"),
-        (F.col("v_string") if "v_string" in df.columns else F.lit(None).cast("string")).alias("_vstr"),
-    ]
-    have = set(df.columns)
-    sel = [c for c in cols if not isinstance(c, str) or c in have]
-    # maps are unorderable in Spark — sort series by the canonical key
-    rows = df.select(*sel)
+    vc = gf.value_col or "v_double"
+    values = (vc,) if vc != "v_double" and vc in df.columns else ("v_double", "v_long", "v_bool")
+    cols = ("class", "labels_key", "labels", "attributes", "ts", "lat", "lon", "elev", "v_string", *values)
+    df = df.select(*(c for c in cols if c in df.columns))
     if limit:
         # orderBy + limit plans as a one-stage top-N
-        rows = rows.orderBy(*_ORDER).limit(limit).collect()
-    else:
-        # every row reaches the driver anyway: sorting it there saves the
-        # range exchange (and its sampling job) a global orderBy plans
-        rows = sorted(rows.collect(), key=_order_key)
-    return _render([r.asDict() for r in rows])
-
-
-def _render(rows: list[dict]) -> list[dict]:
-    """Spark rows in (class, labels_key, ts) order → one object per series."""
-    out: dict[tuple, dict] = {}
-    for d in rows:
-        labels = dict(d.get("labels") or ())
-        series = out.setdefault(
-            (d["class"], tuple(sorted(labels.items()))),
-            {"c": d["class"], "l": labels, "a": dict(d.get("attributes") or ()), "v": []},
-        )
-        v = d["_vstr"] if d.get("_vstr") is not None else d.get("_vnum")
-        point = [d["ts"]]
-        if d.get("lat") is not None and d.get("lon") is not None:
-            point += [d["lat"], d["lon"]]
-        if d.get("elev") is not None:
-            point.append(d["elev"])
-        point.append(v)
-        series["v"].append(point)
-    return list(out.values())
+        df = df.orderBy("class", "labels_key", "ts").limit(limit)
+    # without a limit every row reaches the driver anyway: sorting it there
+    # saves the range exchange (and its sampling job) a global orderBy plans
+    return _render_arrow(ArrowGTS.from_table(df.toArrow()), vc, limit)
 
 
 def _render_arrow(points, value_col: str | None, limit: int | None) -> list[dict]:
-    """_render of an Arrow-backed frame's points: the same objects, one
-    series at a time from slices of its rows in (series, ts) order, with
-    each series' maps converted once."""
+    """An ArrowGTS's first `limit` points in (series, ts) order as one
+    object per series, {"c", "l", "a", "v": [[tick, (lat, lon,) (elev,)
+    value], ...]} (GTSHelper JSON serialization order), rendered one
+    series at a time from slices of its rows, each series' maps converted
+    once.  A string value wins, else the value column (by default the
+    first non-null of v_double, v_long, v_bool) as a double."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -105,10 +58,11 @@ def _render_arrow(points, value_col: str | None, limit: int | None) -> list[dict
     if limit:
         rows, sid = rows.slice(0, limit), sid[:limit]
     vc = value_col or "v_double"
+    # unsafe casts: a long above 2^53 rounds, as Spark's cast does, not raises
     if vc != "v_double" and vc in names:
-        vnum = pc.cast(rows[vc], pa.float64())
+        vnum = pc.cast(rows[vc], pa.float64(), safe=False)
     else:
-        typed = [pc.cast(rows[c], pa.float64()) for c in ("v_double", "v_long", "v_bool") if c in names]
+        typed = [pc.cast(rows[c], pa.float64(), safe=False) for c in ("v_double", "v_long", "v_bool") if c in names]
         vnum = pc.coalesce(*typed) if typed else pa.nulls(len(rows), pa.float64())
     none = [None] * len(rows)
     lat, lon, elev, vstr = (rows[c].to_pylist() if c in names and rows[c].null_count < len(rows) else none

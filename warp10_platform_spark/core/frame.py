@@ -26,7 +26,9 @@ covers the case, each handing the series on; any other op reads `df` and
 continues in Spark, from the points as one Table (`table`).  A FETCH
 frame holds both routes lazily: its `df` is the Spark scan plan and its
 `arrow` the Arrow scan, so an op without a kernel runs the plan the Spark
-route would, and reads nothing on the driver.
+route would, and reads nothing on the driver.  The /exec response renders
+every frame from an ArrowGTS (`__main__._render_arrow`): `arrow` here, or
+a Spark frame's points collected with `toArrow()`.
 """
 
 from __future__ import annotations
