@@ -112,12 +112,14 @@ def test_cli_interactive_with_script(spark, capsys, monkeypatch, tmp_path):
 
 
 def _unsorted_gts(spark):
-    """Three classes, six series, rows in no particular order; one series
+    """Four classes, eight series, rows in no particular order; one series
     has empty labels and a null labels_key, like a `REDUCE [ ]` output,
     and another null maps.  Some rows carry what the kernels never
     produce: a string, a boolean, a long above 2^53, a located point with
-    an elevation, an elevation alone and a null tick."""
+    an elevation, an elevation alone and a null tick.  A fourth class is
+    one series cut by TIMEMODULO into two, each with its own labels."""
     from warp10_platform_spark.core.frame import GTSFrame
+    from warp10_platform_spark.operators.reshape import timemodulo
 
     def key(v):
         return None if v is None else '[{"key":"h","value":"%s"}]' % v
@@ -126,6 +128,7 @@ def _unsorted_gts(spark):
         ("b.cls", "2", 30, 3.0), ("a.cls", "é", 20, 1.5), ("b.cls", "2", 10, 1.0),
         ("a.cls", None, 5, 9.0), ("a.cls", "z", 7, 2.0), ("a.cls", "é", 1, 0.5),
         ("a.cls", None, 2, 8.0), ("b.cls", "1", 40, 4.0),
+        ("d.cls", "t", 17, 7.0), ("d.cls", "t", 5, 5.0), ("d.cls", "t", 12, 2.0),
     ]
     rows = [(c, {} if h is None else {"h": h}, {}, key(h), ts, None, None, None, v, None, None, None)
             for c, h, ts, v in rows]
@@ -142,7 +145,8 @@ def _unsorted_gts(spark):
         "labels_key string, ts bigint, lat double, lon double, elev bigint, v_double double, "
         "v_long bigint, v_bool boolean, v_string string",
     )
-    return GTSFrame(df, None, "v_double")
+    folded = timemodulo(df.where("class = 'd.cls'"), 10, "q").drop("gts_id")
+    return GTSFrame(df.where("class != 'd.cls'").unionByName(folded), None, "v_double")
 
 
 # (class, labels_key, ts) order: null key first, then 'z' < 'é' in UTF-8;
@@ -155,6 +159,8 @@ RENDERED = [
     {"c": "b.cls", "l": {"h": "2"}, "a": {},
      "v": [[10, 1.0], [20, 48.5, 2.25, 35, 1.0], [30, 3.0], [50, -4, 9007199254740992.0]]},
     {"c": "c.cls", "l": {}, "a": {}, "v": [[3, 6.0]]},
+    {"c": "d.cls", "l": {"h": "t", "q": "0"}, "a": {}, "v": [[5, 5.0]]},
+    {"c": "d.cls", "l": {"h": "t", "q": "1"}, "a": {}, "v": [[2, 2.0], [7, 7.0]]},
 ]
 
 
@@ -181,11 +187,11 @@ def test_series_json_sorts_on_driver_like_spark(spark, monkeypatch):
     assert got == RENDERED
     assert plans and not any("rangepartitioning" in p for p in plans)
     # a limit as large as the frame takes Spark's own sort: same render
-    assert _series_json(gf, 12) == got
+    assert _series_json(gf, 15) == got
     # the Arrow-backed twin renders on the driver without a Spark job
     twin = GTSFrame(None, None, "v_double", table=gf.df.toArrow(), spark=spark)
     n = len(plans)
-    assert _series_json(twin, None) == RENDERED and _series_json(twin, 12) == RENDERED
+    assert _series_json(twin, None) == RENDERED and _series_json(twin, 15) == RENDERED
     assert len(plans) == n
 
 

@@ -285,6 +285,36 @@ def test_gts_bindings_lazy(spark, sf_dir):
     assert all(isinstance(v, GTSFrame) for v in st.stack)
 
 
+def test_split_ops_give_each_piece_its_own_identity(spark, sf_dir):
+    """TIMEMODULO, CHUNK, TIMESPLIT, VALUESPLIT and MOTIONSPLIT label each
+    piece; its labels_key and gts_id follow the new labels, so grouping by
+    series and the /exec render see one series per piece."""
+    from pyspark.sql import functions as F
+
+    from warp10_platform_spark.core.schema import canonical_labels
+
+    st = run(
+        """
+        [ 'events.purchase' { } 0 2000000000000000 ] FETCH 'g' STORE
+        $g
+        $g 86400000000 'q' TIMEMODULO
+        $g 604800000000 CHUNK
+        $g 3600000000 TIMESPLIT
+        $g 'v' VALUESPLIT
+        $g 1000.0 'm' MOTIONSPLIT
+        """,
+        spark, sf_dir,
+    )
+    fetched, *pieces = st.stack
+    n = fetched.df.select("gts_id").distinct().count()
+    for i, gf in enumerate(pieces):
+        df = gf.df
+        stale = (F.col("labels_key") != canonical_labels()) | (F.col("gts_id") != F.xxhash64("class", "labels_key"))
+        assert df.where(stale).count() == 0, i
+        # the events carry no locations: MOTIONSPLIT keeps one piece per series
+        assert df.select("gts_id").distinct().count() > n or i == 4, i
+
+
 def test_gts_scalar_accessors(spark, sf_dir):
     st = WarpScriptStack(spark, sf_dir)
     st.exec(

@@ -30,16 +30,24 @@ def _series_json(gf, limit: int | None):
     from warp10_platform_spark.operators.gts_kernels import ArrowGTS
 
     df = gf.df
-    vc = gf.value_col or "v_double"
-    values = (vc,) if vc != "v_double" and vc in df.columns else ("v_double", "v_long", "v_bool")
-    cols = ("class", "labels_key", "labels", "attributes", "ts", "lat", "lon", "elev", "v_string", *values)
-    df = df.select(*(c for c in cols if c in df.columns))
+    cols = ("class", "labels_key", "labels", "attributes", "ts", "lat", "lon", "elev", "v_string",
+            *_value_columns(df.columns, gf.value_col))
+    df = df.select(*(c for c in dict.fromkeys(cols) if c in df.columns))
     if limit:
         # orderBy + limit plans as a one-stage top-N
         df = df.orderBy("class", "labels_key", "ts").limit(limit)
     # without a limit every row reaches the driver anyway: sorting it there
     # saves the range exchange (and its sampling job) a global orderBy plans
-    return _render_arrow(ArrowGTS.from_table(df.toArrow()), vc, limit)
+    return _render_arrow(ArrowGTS.from_table(df.toArrow()), gf.value_col, limit)
+
+
+def _value_columns(names, value_col: str | None) -> tuple:
+    """The columns of `names` a point's number comes from, the first
+    non-null winning: the value column, or by default v_double, v_long,
+    v_bool."""
+    if value_col not in (None, "v_double") and value_col in names:
+        return (value_col,)
+    return tuple(c for c in ("v_double", "v_long", "v_bool") if c in names)
 
 
 def _render_arrow(points, value_col: str | None, limit: int | None) -> list[dict]:
@@ -47,8 +55,8 @@ def _render_arrow(points, value_col: str | None, limit: int | None) -> list[dict
     object per series, {"c", "l", "a", "v": [[tick, (lat, lon,) (elev,)
     value], ...]} (GTSHelper JSON serialization order), rendered one
     series at a time from slices of its rows, each series' maps converted
-    once.  A string value wins, else the value column (by default the
-    first non-null of v_double, v_long, v_bool) as a double."""
+    once.  A string value wins, else the _value_columns' number as a
+    double."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -57,13 +65,9 @@ def _render_arrow(points, value_col: str | None, limit: int | None) -> list[dict
     rows, sid, names = points.rows, points.sid, points.schema.names
     if limit:
         rows, sid = rows.slice(0, limit), sid[:limit]
-    vc = value_col or "v_double"
     # unsafe casts: a long above 2^53 rounds, as Spark's cast does, not raises
-    if vc != "v_double" and vc in names:
-        vnum = pc.cast(rows[vc], pa.float64(), safe=False)
-    else:
-        typed = [pc.cast(rows[c], pa.float64(), safe=False) for c in ("v_double", "v_long", "v_bool") if c in names]
-        vnum = pc.coalesce(*typed) if typed else pa.nulls(len(rows), pa.float64())
+    typed = [pc.cast(rows[c], pa.float64(), safe=False) for c in _value_columns(names, value_col)]
+    vnum = pc.coalesce(*typed) if typed else pa.nulls(len(rows), pa.float64())
     none = [None] * len(rows)
     lat, lon, elev, vstr = (rows[c].to_pylist() if c in names and rows[c].null_count < len(rows) else none
                             for c in ("lat", "lon", "elev", "v_string"))

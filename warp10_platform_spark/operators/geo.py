@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from warp10_platform_spark.core import timeunits as tu
+from warp10_platform_spark.operators.reshape import with_label
 
 EARTH_RADIUS_M = 6_371_000.0
 
@@ -156,6 +157,4 @@ def motionsplit(df: DataFrame, max_gap_m: float, label: str = "motionsplit") -> 
     segs = segment_dist(df)
     brk = F.when(F.col("seg_m") > max_gap_m, 1).otherwise(0)
     sid = F.sum(brk).over(_w().rowsBetween(Window.unboundedPreceding, 0))
-    return segs.withColumn(
-        "labels", F.map_concat(F.col("labels"), F.create_map(F.lit(label), sid.cast("string")))
-    ).drop("seg_m")
+    return with_label(segs, label, sid).drop("seg_m")

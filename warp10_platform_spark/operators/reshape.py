@@ -5,7 +5,7 @@ All pure Column/Window expressions (whole-stage codegen; no UDFs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from warp10_platform_spark.core import timeunits as tu
@@ -52,11 +52,8 @@ def timemodulo(df: DataFrame, period: int, label: str = "quotient") -> DataFrame
     become the remainder."""
     # integer division (ts DIV period): float division + cast can round up
     # across an integer boundary for µs-scale ticks, `div` cannot.
-    quot = F.expr(f"ts div {int(period)}").cast("string")
-    return (
-        df.withColumn("labels", F.map_concat(F.col("labels"), F.create_map(F.lit(label), quot)))
-        .withColumn("ts", F.col("ts") % F.lit(period))
-    )
+    quot = F.expr(f"ts div {int(period)}")
+    return with_label(df, label, quot).withColumn("ts", F.col("ts") % F.lit(period))
 
 
 def chunk(df: DataFrame, width: int, lastchunk: int | None = None, label: str = "chunkid") -> DataFrame:
@@ -69,19 +66,23 @@ def chunk(df: DataFrame, width: int, lastchunk: int | None = None, label: str = 
     else:
         anchor = F.lit(lastchunk)
     cid = F.floor((anchor - F.col("ts")) / F.lit(width)).cast("long")
-    return df.withColumn("labels", F.map_concat(F.col("labels"), F.create_map(F.lit(label), cid.cast("string"))))
+    return with_label(df, label, cid)
+
+
+def session_ids(quiet_us: int) -> Column:
+    """Each point's session within its series: the number of gaps between
+    consecutive ticks above `quiet_us` up to it — the batch
+    sessionization pattern (lag + cumsum)."""
+    gap = F.col("ts") - F.lag("ts", 1).over(_w())
+    brk = F.when(gap > quiet_us, 1).otherwise(0)
+    return F.sum(brk).over(Window.partitionBy("gts_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, 0))
 
 
 def timesplit(df: DataFrame, quiet_us: int, label: str = "timesplit") -> DataFrame:
     """TIMESPLIT (TIMESPLIT.java:34): split a series when the gap between
-    consecutive ticks exceeds `quiet_us`. Session id = cumulative count of
-    gap-breaks — the batch sessionization pattern (lag + cumsum)."""
-    gap = F.col("ts") - F.lag("ts", 1).over(_w())
-    brk = F.when(gap > quiet_us, 1).otherwise(0)
-    sid = F.sum(brk).over(Window.partitionBy("gts_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, 0))
-    return df.withColumn(
-        "labels", F.map_concat(F.col("labels"), F.create_map(F.lit(label), sid.cast("string")))
-    ).withColumn("session_id", sid)
+    consecutive ticks exceeds `quiet_us`; the session id (also kept as
+    `session_id`) becomes the new label."""
+    return with_label(df.withColumn("session_id", session_ids(quiet_us)), label, F.col("session_id"))
 
 
 def dedup(df: DataFrame, value_col: str = "v_double") -> DataFrame:
@@ -213,6 +214,15 @@ def _regen_identity(df: DataFrame) -> DataFrame:
     from warp10_platform_spark.core.schema import with_gts_id
 
     return with_gts_id(df.drop("labels_key", "gts_id"))
+
+
+def with_label(df: DataFrame, label: str, value: Column) -> DataFrame:
+    """A split's sub-series (TIMEMODULO, CHUNK, TIMESPLIT, MOTIONSPLIT,
+    VALUESPLIT): `label` set to `value` as a string, replacing a label of
+    that name, and the series identity recomputed as RELABEL does."""
+    labels = F.map_filter("labels", lambda k, _: k != label)
+    labels = F.map_concat(labels, F.create_map(F.lit(label), value.cast("string")))
+    return _regen_identity(df.withColumn("labels", labels))
 
 
 def rename(df: DataFrame, name: str) -> DataFrame:

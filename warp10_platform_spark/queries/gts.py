@@ -443,16 +443,20 @@ def fill_previous(spark, sf_dir):
     'FROM s GROUP BY class, "user", session_id'
 ))
 def sessionize(spark, sf_dir):
-    """TIMESPLIT (TIMESPLIT.java:34): gap>1h sessionization, then a
-    per-session summary."""
-    gf = GTSFrame.fetch(canonical_points(spark, sf_dir)).timesplit(HOUR)
+    """TIMESPLIT's sessions (TIMESPLIT.java:34): gap>1h sessionization,
+    then a per-session summary."""
+    from warp10_platform_spark.operators.reshape import session_ids
+
+    gf = GTSFrame.fetch(canonical_points(spark, sf_dir))
     # gts_id leads the grouping keys: it functionally determines
     # (class, user), and because the sessionizing windows already hash-
     # partitioned by gts_id, the grouping distribution is satisfied and
     # the per-session summary runs with NO second shuffle (one exchange
-    # total — asserted in tests/test_plans.py).
+    # total — asserted in tests/test_plans.py).  TIMESPLIT itself would
+    # give each session a new gts_id, so the summary reads the session
+    # numbers rather than the split series.
     return (
-        gf.df.groupBy(
+        gf.df.withColumn("session_id", session_ids(HOUR)).groupBy(
             "gts_id", "class", F.element_at(F.col("labels"), "user").alias("user"), "session_id"
         )
         .agg(F.count("*").alias("n"), (F.max("ts") - F.min("ts")).alias("duration_us"))

@@ -344,14 +344,11 @@ def _pivot(st):
 def _mvsplit(st):
     """gts 'label' VALUESPLIT (VALUESPLIT.java): one series per distinct
     value; the value lands in the given label."""
+    from warp10_platform_spark.operators.reshape import with_label
+
     label = st.pop()
     gf = _as_frame(st.pop())
-    vc = gf.value_col
-    df = gf.df.withColumn(
-        "labels_key",
-        F.concat(F.col("labels_key"), F.lit(f',{{"{label}":"'), F.col(vc).cast("string"), F.lit('"}')),
-    )
-    st.push(GTSFrame(df, gf.bucketspec, vc))
+    st.push(GTSFrame(with_label(gf.df, label, F.col(gf.value_col)), gf.bucketspec, gf.value_col))
 
 
 @register("MOTIONSPLIT")
