@@ -8,7 +8,8 @@ in this process, each as the server answers one: WarpScriptStack.exec,
 then the JSON render of the stack.  It prints one JSON line per thread
 count with the requests per second when that many threads share the
 scripts, then one line with the mean ms per request spent in FETCH's
-driver scan (PointsLayout.scan), in the numpy kernels (gts_kernels
+driver lookup and scan (SeriesDirectory.pick, which FETCH runs to choose
+its route, and PointsLayout.scan), in the numpy kernels (gts_kernels
 bucketize, map_window and reduce), in the render (__main__._jsonable
 plus json.dumps) and in all (one thread, each layer timed by wrapping
 it).  With --profile N it also prints the N functions of most own time
@@ -48,6 +49,7 @@ def main(argv=None) -> int:
     from warp10_platform_spark import __main__ as cli
     from warp10_platform_spark.operators import gts_kernels
     from warp10_platform_spark.session import get_spark
+    from warp10_platform_spark.sources.directory import SeriesDirectory
     from warp10_platform_spark.sources.tables import PointsLayout, points_layout
     from warp10_platform_spark.warpscript import WarpScriptStack
 
@@ -101,7 +103,7 @@ def main(argv=None) -> int:
                 spent[layer] += time.perf_counter() - t0
         return wrapper
 
-    patches = [(PointsLayout, "scan", "scan"), (cli, "_jsonable", "render"),
+    patches = [(SeriesDirectory, "pick", "scan"), (PointsLayout, "scan", "scan"), (cli, "_jsonable", "render"),
                *((gts_kernels, k, "kernels") for k in ("bucketize", "map_window", "reduce"))]
     saved = [(owner, name, getattr(owner, name)) for owner, name, _ in patches]
     for owner, name, layer in patches:

@@ -9,12 +9,14 @@ the same N seeded dashboard scripts (perfbench.gen, seed 7), rewritten to
 that selection, on both routes in one process (patching the gate), the
 order alternating per script, after 5 warm-up scripts per route.  Each
 sample is one /exec answer: WarpScriptStack.exec plus the JSON render.
-It prints one JSON line per (fixture, selection): the bytes the gate sees,
-the seconds a fresh build of the fixture's series directory takes (the
-one-time cost the driver route adds when a layout is first opened), the
-median row groups and rows the driver route's scan decodes (over every
-script of the selection, warm-up included) and each route's median and
-quartiles in ms.  Run it on an idle box.
+It prints one JSON line per (fixture, selection): the median compressed
+bytes of the row groups the series directory picks, which the gate
+compares with _LOCAL_MAX_BYTES, the seconds a fresh build of the
+fixture's series directory takes (the one-time cost the driver route adds
+when a layout is first opened), the median row groups and rows the driver
+route's scan decodes (medians over every script of the selection,
+warm-up included) and each route's median and quartiles in ms.  Run it on
+an idle box.
 """
 
 from __future__ import annotations
@@ -44,7 +46,6 @@ def main(argv=None) -> int:
     from perfbench import gen
 
     from warp10_platform_spark.__main__ import _jsonable
-    from warp10_platform_spark.core.selector import parse_selector
     from warp10_platform_spark.session import get_spark
     from warp10_platform_spark.sources.directory import SeriesDirectory
     from warp10_platform_spark.sources.tables import PointsLayout, points_layout
@@ -52,13 +53,20 @@ def main(argv=None) -> int:
     from warp10_platform_spark.warpscript import functions as WF
 
     read, decoded = PointsLayout._read, []
+    pick, picked = SeriesDirectory.pick, []
 
     def counting(self, groups, columns):
         t = read(self, groups, columns)
         decoded.append((sum(len(g) for g in groups.values()), t.num_rows))
         return t
 
+    def weighing(self, selectors):
+        p = pick(self, selectors)
+        picked.append(p.nbytes)
+        return p
+
     PointsLayout._read = counting
+    SeriesDirectory.pick = weighing
     spark = get_spark("fetch-route-crossover")
     spark.sparkContext.setLogLevel("ERROR")
     stream = gen.script_stream(7, 0)
@@ -81,6 +89,7 @@ def main(argv=None) -> int:
             cls = SELECTIONS[name]
             ms = {"arrow": [], "spark": []}
             decoded.clear()
+            picked.clear()
             for i, script in enumerate(scripts):
                 script = dataclasses.replace(script, cls=cls)
                 routes = [("arrow", 1 << 62), ("spark", 0)]
@@ -91,7 +100,7 @@ def main(argv=None) -> int:
             q = {r: statistics.quantiles(v, n=4) for r, v in ms.items()}
             print(json.dumps({
                 "sf": os.path.basename(sf), "selection": name,
-                "gate_bytes": layout.size(layout.classes([parse_selector(cls)])),
+                "picked_bytes": statistics.median(picked),
                 "directory_build_s": round(build_s, 3),
                 "row_groups_per_scan": statistics.median(g for g, _ in decoded),
                 "rows_per_scan": statistics.median(n for _, n in decoded),

@@ -139,35 +139,116 @@ def test_labels_key_escapes_like_spark(spark):
     assert df.select(F.to_json(F.array(F.lit("x")))).first()[0] == '["x"]'
 
 
-def test_gate_counts_the_pruned_files_bytes(spark, sf_dir, monkeypatch):
-    """The gate reads the on-disk bytes of the selected classes' files:
-    one class reports its own files, `~.*` the whole layout; a FETCH of
-    exactly the gate's size plans Spark jobs, one byte less answers from
-    Arrow."""
-    from warp10_platform_spark.core.selector import parse_selector
+def _compressed_bytes(pf, i: int) -> int:
+    """The compressed bytes of row group `i` in the footer of `pf`."""
+    rg = pf.metadata.row_group(i)
+    return sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
+
+
+def _row_group_bytes(path: str, cls: str, user: str | None = None) -> dict:
+    """(file, row group) → compressed bytes of the row groups of `cls`'s
+    files in the layout at `path` that hold a row of `user` (every row
+    group without one)."""
+    import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in sorted(glob.glob(os.path.join(path, f"class={cls}", "*.parquet"))):
+        pf = pq.ParquetFile(f)
+        for i in range(pf.num_row_groups):
+            if user is not None:
+                users = pc.map_lookup(pf.read_row_group(i, columns=["labels"])["labels"], "user", "first")
+                if not pc.any(pc.equal(users, user)).as_py():
+                    continue
+            out[f, i] = _compressed_bytes(pf, i)
+    return out
+
+
+def _gate_fetch(spark, sf, selector):
+    st = WarpScriptStack(spark, sf)
+    st.exec("{ 'selector' '%s' 'end' 2000000000000000 'timespan' 1000000000000000 } FETCH" % selector)
+    return st.pop()
+
+
+def test_gate_counts_the_picked_row_groups_bytes(spark, sf_dir, monkeypatch):
+    """The gate reads the compressed bytes of the row groups the lookup
+    picks, from the files' footers: a FETCH of the whole class picks its
+    every row group; with the gate exactly at those bytes it plans Spark
+    jobs, one byte over them it answers from Arrow."""
+    from warp10_platform_spark.sources.tables import _points_path
+
+    picked = sum(_row_group_bytes(_points_path(sf_dir), "events.click").values())
+    monkeypatch.setattr(WF, "_LOCAL_MAX_BYTES", picked)
+    assert not _gate_fetch(spark, sf_dir, "events.click{}").local
+    monkeypatch.setattr(WF, "_LOCAL_MAX_BYTES", picked + 1)
+    gf = _gate_fetch(spark, sf_dir, "events.click{}")
+    assert gf.local and gf.table.num_rows
+
+
+def test_gate_counts_only_the_row_groups_of_the_matched_series(spark, sf_dir, monkeypatch):
+    """A one-user FETCH whose class files are larger than the gate but
+    whose picked row groups are smaller answers from Arrow, with the rows
+    the Spark route gives.  Run on the sf0.01 fixture next to the test
+    one, whose class files hold several row groups."""
+    import glob
+
     from warp10_platform_spark.sources.tables import _points_path, points_layout
-    from warp10_platform_spark.warpscript.stack import WarpScriptStack
 
-    layout = points_layout(spark, sf_dir)
-    on_disk: dict[str, int] = {}
-    for root, _, files in os.walk(_points_path(sf_dir)):
-        for f in files:
-            if not f.startswith((".", "_")):
-                cls = os.path.basename(root).split("=", 1)[1]
-                on_disk[cls] = on_disk.get(cls, 0) + os.path.getsize(os.path.join(root, f))
-    click = layout.classes([parse_selector("events.click{}")])
-    assert click == ["events.click"] and layout.size(click) == on_disk["events.click"]
-    assert layout.size(layout.classes([parse_selector("~.*{}")])) == sum(on_disk.values())
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.exists(os.path.join(sf, "events.parquet")):
+        pytest.skip("sf0.01 testdata not present")
+    points_layout(spark, sf)
+    path = _points_path(sf)
+    on_disk = sum(os.path.getsize(f) for f in glob.glob(os.path.join(path, "class=events.click", "*.parquet")))
+    groups = _row_group_bytes(path, "events.click", "7")
+    assert 0 < len(groups) < len(_row_group_bytes(path, "events.click"))
+    picked = sum(groups.values())
+    assert picked + 1 < on_disk
+    with monkeypatch.context() as m:
+        m.setattr(WF, "_LOCAL_MAX_BYTES", 0)
+        want = sorted(map(tuple, _gate_fetch(spark, sf, "events.click{user=7}").df.select(
+            "class", "labels_key", "ts", "v_double").collect()))
+    monkeypatch.setattr(WF, "_LOCAL_MAX_BYTES", picked + 1)
+    gf = _gate_fetch(spark, sf, "events.click{user=7}")
+    assert gf.local
+    t = gf.table
+    assert want and sorted(zip(*(t[c].to_pylist() for c in ("class", "labels_key", "ts", "v_double")))) == want
 
-    def fetch():
-        st = WarpScriptStack(spark, sf_dir)
-        st.exec("{ 'selector' 'events.click{}' 'end' 2000000000000000 'timespan' 1000000000000000 } FETCH")
-        return st.pop()
 
-    monkeypatch.setattr(WF, "_LOCAL_MAX_BYTES", on_disk["events.click"])
-    assert fetch().table is None
-    monkeypatch.setattr(WF, "_LOCAL_MAX_BYTES", on_disk["events.click"] + 1)
-    assert fetch().table is not None
+def test_the_scan_reads_the_row_groups_the_gate_counted(spark, sf_dir, monkeypatch):
+    """Each driver-route FETCH reads exactly the row groups its pick
+    holds, and the pick's bytes are those row groups' compressed bytes in
+    the footers.  Run on the sf0.01 fixture next to the test one."""
+    from warp10_platform_spark.sources.directory import SeriesDirectory
+    from warp10_platform_spark.sources.tables import PointsLayout, points_layout
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.exists(os.path.join(sf, "events.parquet")):
+        pytest.skip("sf0.01 testdata not present")
+    d = points_layout(spark, sf).directory
+    pick, read, picks, reads = SeriesDirectory.pick, PointsLayout._read, [], []
+
+    def picking(self, selectors):
+        picks.append(pick(self, selectors))
+        return picks[-1]
+
+    def reading(self, groups, columns):
+        reads.append(groups)
+        return read(self, groups, columns)
+
+    monkeypatch.setattr(SeriesDirectory, "pick", picking)
+    monkeypatch.setattr(PointsLayout, "_read", reading)
+    footer = {(f, i): _compressed_bytes(pf, i) for f, pf in enumerate(d.files) for i in range(pf.num_row_groups)}
+    for selector in ("events.click{user=7}", r"~events\.(click|view){user~1[0-9]}", "events.view{}", "~.*{}"):
+        assert _gate_fetch(spark, sf, selector).table.num_rows
+        (p,), (groups,) = picks, reads
+        read_groups = sorted((f, int(i)) for f, rgs in groups.items() for i in rgs)
+        assert [(f, int(g - d.file_groups[f])) for f, g in zip(d.group_file[p.groups], p.groups)] == read_groups
+        assert p.nbytes == sum(footer[k] for k in read_groups), selector
+        picks.clear()
+        reads.clear()
 
 
 def _rescaled(script):
@@ -437,7 +518,7 @@ def test_scan_reads_only_the_matched_series_without_maps(spark, sf_dir, monkeypa
     start, end = pc.min(ts).as_py() + 1, pc.max(ts).as_py() - 1
     for text in (r"~events\.(click|view){user~1[0-9]}", "events.click{user=7}", "~.*{}"):
         sel = parse_selector(text)
-        got = layout.scan(layout.directory.select([sel]), start, end).table
+        got = layout.scan(layout.directory.pick([sel]), start, end).table
         keep = [start <= r["ts"] <= end and matches(sel, r["class"], dict(r["labels"]), dict(r["attributes"]))
                 for r in everything.to_pylist()]
         want = everything.filter(pa.array(keep))
@@ -472,7 +553,7 @@ def test_a_shared_gts_id_does_not_mix_series(tmp_path):
     }), str(tmp_path), partition_cols=["class"])
     layout = PointsLayout(str(tmp_path))
     for text, want in (("c{h=a}", [0, 3]), ("c{k=x}", [1, 4]), ("c{h=}", [2, 5]), ("c{h~.*}", [0, 1, 3, 4])):
-        t = layout.scan(layout.directory.select([parse_selector(text)]), None, None).table
+        t = layout.scan(layout.directory.pick([parse_selector(text)]), None, None).table
         assert t["ts"].to_pylist() == want, text
         assert t["labels"].to_pylist() == [list(series[pick[i]].items()) for i in want]
         assert t["attributes"].to_pylist() == [[("n", str(pick[i]))] for i in want]
@@ -555,7 +636,7 @@ def test_a_one_user_selection_reads_only_its_row_groups(clustered, monkeypatch):
     everything = layout.dataset.to_table()
     user = everything["labels_key"][len(everything) // 2].as_py()
     sel = parse_selector("~events\\..*{user=%s}" % user.split('"')[-2])
-    got = layout.scan(layout.directory.select([sel]), None, None).table
+    got = layout.scan(layout.directory.pick([sel]), None, None).table
     want = everything.filter(pc.equal(everything["labels_key"], user))
     key = [(c, "ascending") for c in ("class", "ts", "event_id")]
     assert got.num_rows and got.sort_by(key).equals(want.sort_by(key))
@@ -617,7 +698,7 @@ def test_an_interleaved_layout_answers_like_a_filter(tmp_path):
     for text in ("a{h=3}", "~.*{h~[2-5]}", "b{k=x}", "a{h=}", "~.*{}", "~[ab]{h~1.*}"):
         sel = parse_selector(text)
         for start, end in ((None, None), (100, 700), (None, 400), (300, None)):
-            got = layout.scan(layout.directory.select([sel]), start, end).table
+            got = layout.scan(layout.directory.pick([sel]), start, end).table
             keep = [(start is None or r["ts"] >= start) and (end is None or r["ts"] <= end)
                     and matches(sel, r["class"], dict(r["labels"])) for r in everything.to_pylist()]
             want = everything.filter(pa.array(keep))

@@ -19,13 +19,13 @@ def test_fetch_range_pushes_predicates(spark, sf_dir):
 def test_warpscript_fetch_prunes_class_and_pushes_ts(spark, sf_dir, form, monkeypatch):
     """WarpScript FETCH, both argument forms, reads the class-partitioned
     layout on both routes. Spark route: a class regex prunes partitions
-    and both time bounds reach the parquet scan. Arrow route: only the
-    selected classes' files are read, and every row lies in the range and
-    matches the label regex."""
+    and both time bounds reach the parquet scan. Arrow route: every row
+    group picked (and read) is in a selected class's file, and every row
+    lies in the range and matches the label regex."""
     import json
-    import os
     import re
 
+    from warp10_platform_spark.sources.directory import SeriesDirectory
     from warp10_platform_spark.warpscript import functions as WF
     from warp10_platform_spark.warpscript.stack import WarpScriptStack
 
@@ -50,10 +50,20 @@ def test_warpscript_fetch_prunes_class_and_pushes_ts(spark, sf_dir, form, monkey
     assert f"GreaterThanOrEqual(ts,{start})" in pushed and f"LessThanOrEqual(ts,{end})" in pushed
 
     start, end = 1_704_844_800_000_000, 1_705_449_600_000_000  # a week inside the data
-    gf = fetch("1[0-9]", start, end)
+    pick, picks = SeriesDirectory.pick, []
+
+    def picking(self, selectors):
+        picks.append((self, pick(self, selectors)))
+        return picks[-1][1]
+
+    with monkeypatch.context() as m:
+        m.setattr(SeriesDirectory, "pick", picking)
+        gf = fetch("1[0-9]", start, end)
     assert gf.table is not None and gf.table.num_rows
-    assert {os.path.basename(os.path.dirname(f)) for f in gf.files} == {
-        "class=events.click", "class=events.view"}
+    ((d, p),) = picks
+    # each file's class is the class=... directory that holds it
+    assert len(p.groups) and {d.classes[c] for c in d.file_class[d.group_file[p.groups]]} <= {
+        "events.click", "events.view"}
     assert set(gf.table["class"].to_pylist()) == {"events.click", "events.view"}
     assert all(start <= t <= end for t in gf.table["ts"].to_pylist())
     users = {e["value"] for k in gf.table["labels_key"].to_pylist() for e in json.loads(k)}

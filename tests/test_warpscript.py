@@ -147,6 +147,54 @@ def test_findsets_reads_only_matched_series(spark, sf_dir):
     assert {r.k: sorted(r.values) for r in rows} == {"user": ["10", "11", "12", "13", "14"]}
 
 
+def test_find_family_reads_the_persisted_directory(spark, sf_dir, monkeypatch):
+    """FIND, FINDSETS, FINDSTATS and METASET read the directory table
+    persisted once per dataset, never the events, and answer what a
+    directory rebuilt from the points gives.  Run on the sf0.01 fixture
+    next to the test one."""
+    import gzip
+    import os
+
+    from warp10_platform_spark.core import gtscodec as gc
+    from warp10_platform_spark.functions import aes
+    from warp10_platform_spark.sources import directory
+    from warp10_platform_spark.sources.tables import events_points
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.exists(os.path.join(sf, "events.parquet")):
+        pytest.skip("sf0.01 testdata not present")
+    sels = [("events.click", {"user": "7"}), ("~events\\.(click|view)", {"user": "~1[0-9]"}),
+            ("~.*", {}), ("events.nothing", {})]
+
+    def answers():
+        out = []
+        for cls, labels in sels:
+            st = WarpScriptStack(spark, sf)
+            st.push([cls, labels])
+            st.exec("FIND")
+            find = st.pop()
+            out.append(sorted(map(tuple, find.select("gts_id", "class", "labels_key", "first_ts", "last_ts",
+                                                     "n_points").collect())))
+            sel = "%s{%s}" % (cls, ",".join(f"{k}{'' if v.startswith('~') else '='}{v}" for k, v in labels.items()))
+            out.append(sorted((r.k, sorted(r.values)) for r in run(f"'{sel}' FINDSETS", spark, sf).pop().collect()))
+            out.append(run(f"'{sel}' FINDSTATS", spark, sf).pop().collect()[0].asDict())
+            if out[-3]:
+                st = WarpScriptStack(spark, sf)
+                st.push(["t", cls, labels, float("nan"), float("nan"), 3600000000, 60000000])
+                st.exec("METASET")
+                body = gzip.decompress(aes.unwrap(bytes(range(32)), gc.opb64_decode(st.pop())))
+                out.append(gc.read_metaset(body)["metadatas"])
+        return out, find._jdf.queryExecution().executedPlan().toString()
+
+    got, plan = answers()
+    assert "events.parquet" not in plan and "directory_" in plan
+    monkeypatch.setattr(directory, "directory_table",
+                        lambda spark, sf: directory.build_directory(events_points(spark, sf)))
+    want, plan = answers()
+    assert "events.parquet" in plan
+    assert got == want and all(got[:3])
+
+
 # ---------- extended stack / control flow / scalars ----------
 
 def test_dupn_dropn_roll_rolld():

@@ -105,7 +105,7 @@ def _jsonable(v, limit: int | None, explain: bool):
     if isinstance(v, GTSFrame):
         if explain and v.local:
             # answered on the driver: no Spark plan exists to show
-            return {"gts_route": "arrow", "files": list(v.files), "rows": v.arrow.num_rows}
+            return {"gts_route": "arrow", "rows": v.arrow.num_rows}
         if explain:
             return {"gts_plan": v.df._jdf.queryExecution().executedPlan().toString()}
         return _series_json(v, limit)

@@ -19,16 +19,18 @@ query optimizer (SURVEY §4.1) obtained for free.
 
 A frame can instead hold its points in driver memory as Arrow (`arrow`,
 an operators/gts_kernels.ArrowGTS), when FETCH answers a small request on
-the driver: each series' class, labels_key and maps once, the other
-columns once per point, and the series of each point.  BUCKETIZE, MAP and
-REDUCE then run as numpy kernels (operators/gts_kernels.py) where one
-covers the case, each handing the series on; any other op reads `df` and
-continues in Spark, from the points as one Table (`table`).  A FETCH
-frame holds both routes lazily: its `df` is the Spark scan plan and its
-`arrow` the Arrow scan, so an op without a kernel runs the plan the Spark
-route would, and reads nothing on the driver.  The /exec response renders
-every frame from an ArrowGTS (`__main__._render_arrow`): `arrow` here, or
-a Spark frame's points collected with `toArrow()`.
+the driver (the row groups its directory lookup picks are under
+_LOCAL_MAX_BYTES): each series' class, labels_key and maps once, the
+other columns once per point, and the series of each point.  BUCKETIZE,
+MAP and REDUCE then run as numpy kernels (operators/gts_kernels.py) where
+one covers the case, each handing the series on; any other op reads `df`
+and continues in Spark, from the points as one Table (`table`).  A FETCH
+frame, its lookup done, holds both routes lazily: its `df` is the Spark
+scan plan and its `arrow` the scan of the picked row groups, so an op
+without a kernel runs the plan the Spark route would, and reads nothing
+on the driver.  The /exec response renders every frame from an ArrowGTS
+(`__main__._render_arrow`): `arrow` here, or a Spark frame's points
+collected with `toArrow()`.
 """
 
 from __future__ import annotations
@@ -61,18 +63,17 @@ class GTSFrame:
     """
 
     def __init__(self, df, bucketspec: BucketSpec | None = None, value_col: str = "v_double",
-                 *, table=None, spark: SparkSession | None = None, files: tuple[str, ...] = ()):
+                 *, table=None, spark: SparkSession | None = None):
         # `df` is a DataFrame, a function that plans it (a FETCH frame's
         # Spark scan), or None to build it from `table`
         self._df = df
         self.bucketspec = bucketspec
         self.value_col = value_col
         # Arrow-backed frames: the points as an ArrowGTS, a pyarrow Table
-        # or a function that scans them, the session that builds `df` from
-        # them, and the layout files the FETCH selected
+        # or a function that scans the row groups FETCH picked and counted
+        # against its gate, and the session that builds `df` from them
         self._table = table
         self.spark = spark
-        self.files = files
 
     @property
     def df(self) -> DataFrame:
@@ -104,7 +105,7 @@ class GTSFrame:
         return None if self.arrow is None else self.arrow.table
 
     def _local(self, points, bucketspec: BucketSpec | None, value_col: str) -> "GTSFrame":
-        return GTSFrame(None, bucketspec, value_col, table=points, spark=self.spark, files=self.files)
+        return GTSFrame(None, bucketspec, value_col, table=points, spark=self.spark)
 
     # ---- construction ----
 

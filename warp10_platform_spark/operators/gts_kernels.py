@@ -1,17 +1,17 @@
 """numpy kernels for GTS frames held in driver memory as Arrow.
 
-A small /exec request (a FETCH whose class-pruned files fall under
-warpscript/functions.py's _LOCAL_MAX_BYTES) is answered on the driver:
-the reference evaluates WarpScript over in-memory GTS arrays too (SURVEY
-§1.1, GeoTimeSerie's parallel primitive arrays), and for a kilobyte answer
-that beats planning Spark jobs.  Such a frame is an ArrowGTS: its class,
-labels_key and maps once per series, the other columns once per point,
-and the series of each point, which FETCH's scan already knows and each
-kernel hands on, so no kernel works out again which rows form a series.
-These kernels give BUCKETIZE, MAP and REDUCE Spark's semantics over it.
-The caller checks `covers` for the op's name first; a kernel returns
-None for another case it does not cover, and the caller then continues in
-Spark (GTSFrame.df).
+A small /exec request (a FETCH whose picked row groups take fewer bytes
+than warpscript/functions.py's _LOCAL_MAX_BYTES) is answered on the
+driver: the reference evaluates WarpScript over in-memory GTS arrays too
+(SURVEY §1.1, GeoTimeSerie's parallel primitive arrays), and for a
+kilobyte answer that beats planning Spark jobs.  Such a frame is an
+ArrowGTS: its class, labels_key and maps once per series, the other
+columns once per point, and the series of each point, which FETCH's scan
+already knows and each kernel hands on, so no kernel works out again
+which rows form a series.  These kernels give BUCKETIZE, MAP and REDUCE
+Spark's semantics over it.  The caller checks `covers` for the op's name
+first; a kernel returns None for another case it does not cover, and the
+caller then continues in Spark (GTSFrame.df).
 
 Agreement with the Spark operators (tests/test_local_route.py):
 

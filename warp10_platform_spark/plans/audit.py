@@ -30,8 +30,8 @@ def plan_bytes(df: DataFrame) -> int | None:
     A path-based read of a partitioned layout (spark.read.parquet(dir))
     reports the whole layout's size whatever its partition filters: the
     relation's statistics come from the file index before pruning.  So
-    /exec FETCH gates on the bytes of the files left after class pruning
-    (sources/tables.PointsLayout.size) instead of on this figure."""
+    /exec FETCH gates on the bytes of the row groups its directory lookup
+    picks (sources/directory.SeriesDirectory.pick), not on this figure."""
     if df.isStreaming:
         return None
     try:

@@ -13,25 +13,27 @@ analogs here:
   up in it: each class once, each label clause once per distinct value
   of its label that starts with the clause's literal prefix, plus once
   for "absent".  It also holds each file's parquet handle, the row
-  count of its row groups and, per series, the first and last row that
-  series has in each file.  The layout writes each class file sorted by
-  series (the reference's (classId, labelsId) key order), so those row
-  spans name the few row groups the pyarrow scan that follows reads;
-  it decodes no map column nor the class, and hands on the series it
+  count and compressed bytes of its row groups and, per series, the
+  first and last row that series has in each file.  The layout writes
+  each class file sorted by series (the reference's (classId, labelsId)
+  key order), so those row spans pick the few row groups the pyarrow
+  scan that follows reads, and their bytes choose FETCH's route; it
+  decodes no map column nor the class, and hands on the series it
   matched each row to, with their class, labels_key and maps from the
   directory, once per series (operators/gts_kernels.ArrowGTS).
 - The Spark `directory` table: one row per series with identity + stats,
-  consulted by FIND/FINDSTATS and used as a broadcast semi-join filter
-  in front of FETCH.  At 100 TB it is maintained incrementally at ingest
-  (the streaming_last view is its seed) and persisted as its own parquet
-  — ~1e6 series rows vs ~1e12 point rows, a 10^6× smaller scan for every
-  metadata-only query.  Here it is derived on demand from the points
-  frame (same schema, same consumers).
+  consulted by FIND, FINDSTATS, FINDSETS and METASET and used as a
+  broadcast semi-join filter in front of FETCH.  At 100 TB it is
+  maintained incrementally at ingest (the streaming_last view is its
+  seed) and persisted as its own parquet — ~1e6 series rows vs ~1e12
+  point rows, a 10^6× smaller scan for every metadata-only query.  Here
+  it is built from the points once per dataset (`directory_table`).
 """
 
 from __future__ import annotations
 
 import bisect
+from collections import namedtuple
 
 import numpy as np
 import pyarrow as pa
@@ -51,6 +53,13 @@ def _spans(t: pa.Table) -> tuple[np.ndarray, np.ndarray]:
     return first, len(codes) - 1 - np.unique(codes[::-1], return_index=True)[1]
 
 
+# what a driver-route FETCH reads, decided before it reads
+# (SeriesDirectory.pick): the matched series (ascending indices), the first
+# and the last row of their spans ordered by first row, the row groups those
+# overlap (numbered across the files, ascending) and their compressed bytes
+Pick = namedtuple("Pick", "series first last groups nbytes")
+
+
 class SeriesDirectory:
     """The series of a class-partitioned points layout, held on the
     driver as columns and numbered in Spark's ascending (class,
@@ -62,11 +71,11 @@ class SeriesDirectory:
     them (-1 where the series lacks the label).  Per file: its
     `pyarrow.parquet.ParquetFile`, its class code (`class_names` holds
     the classes as an Arrow array) and its first row group.  Per row
-    group: its file, its row count and the cumulative row count.  Per
-    (series, file) holding it: a span, the series' first and last row
-    in that file, ordered by first row.  Rows and row groups are
-    numbered across the files, in file order.  No Python object exists
-    per series."""
+    group: its file, its row count, the cumulative row count and its
+    compressed bytes from the file's footer.  Per (series, file) holding
+    it: a span, the series' first and last row in that file, ordered by
+    first row.  Rows and row groups are numbered across the files, in
+    file order.  No Python object exists per series."""
 
     def __init__(self, fragments: dict[str, list]):
         """Read the (class, labels_key) series of `fragments` (class →
@@ -74,7 +83,7 @@ class SeriesDirectory:
         self.classes = sorted(fragments)
         self.class_names = pa.array(self.classes, pa.string())
         cols = ["labels_key", "gts_id", "labels", "attributes"]
-        self.files, file_class, group_rows, group_file, heads, first, last = [], [], [], [], [], [], []
+        self.files, file_class, group_rows, group_bytes, group_file, heads, first, last = [], [], [], [], [], [], [], []
         for code, cls in enumerate(self.classes):
             for frag in fragments[cls]:
                 pf = pq.ParquetFile(frag.path)
@@ -84,12 +93,15 @@ class SeriesDirectory:
                 base = sum(group_rows)
                 first.append(lo + base)
                 last.append(hi + base)
-                group_rows += [pf.metadata.row_group(i).num_rows for i in range(pf.num_row_groups)]
+                for rg in map(pf.metadata.row_group, range(pf.num_row_groups)):
+                    group_rows.append(rg.num_rows)
+                    group_bytes.append(sum(rg.column(i).total_compressed_size for i in range(rg.num_columns)))
                 group_file += [len(self.files)] * pf.num_row_groups
                 file_class.append(code)
                 self.files.append(pf)
         self.file_class = np.array(file_class, np.int64)
         self.group_rows = np.array(group_rows, np.int64)
+        self.group_bytes = np.array(group_bytes, np.int64)
         self.group_ends = np.cumsum(self.group_rows)
         self.group_file = np.array(group_file, np.int64)
         self.file_groups = np.searchsorted(self.group_file, np.arange(len(self.files)))
@@ -156,26 +168,32 @@ class SeriesDirectory:
             hit |= ok
         return np.flatnonzero(hit)
 
-    def row_groups(self, series: np.ndarray) -> tuple[dict[int, np.ndarray], np.ndarray, np.ndarray]:
-        """Where the rows of `series` are: file → the ascending row groups
-        of that file that overlap one of their spans; the indices, into
-        the rows of all those row groups read in that order, of the rows
-        that lie in such a span; and the class code of each of those
-        rows.  In a file sorted by series a span holds its series' rows
-        only; in an unsorted one it covers most of the file, and so do
-        the row groups."""
+    def pick(self, selectors) -> Pick:
+        """The series the parsed `selectors` match and the row groups that
+        overlap one of their spans, with those row groups' compressed
+        bytes, which FETCH compares with its gate.  In a file sorted by
+        series a span holds its series' rows only; in an unsorted one it
+        covers most of the file, and so do the row groups."""
+        series = self.select(selectors)
         chosen = np.zeros(len(self.gts_id), bool)
         chosen[series] = True
         at = chosen[self.span_series]
         first, last, ends = self.span_first[at], self.span_last[at], self.group_ends
         touched = np.bincount(np.searchsorted(ends, first, "right"), minlength=len(ends) + 1)
         touched -= np.bincount(np.searchsorted(ends, last, "right") + 1, minlength=len(ends) + 1)
-        g = np.flatnonzero(np.cumsum(touched)[:-1])
+        groups = np.flatnonzero(np.cumsum(touched)[:-1])
+        return Pick(series, first, last, groups, int(self.group_bytes[groups].sum()))
+
+    def row_groups(self, pick: Pick) -> tuple[dict[int, np.ndarray], np.ndarray, np.ndarray]:
+        """file → its picked row groups, ascending; the indices, into the
+        rows of all those row groups read in that order, of the rows in a
+        span of the picked series; and the class code of each such row."""
+        g = pick.groups
         n = self.group_rows[g]
         # the row of each row read, then whether a span reaches it
-        pos = np.arange(n.sum()) + np.repeat(ends[g] - np.cumsum(n), n)
-        i = np.searchsorted(first, pos, "right") - 1
-        inside = np.flatnonzero((i >= 0) & (np.maximum.accumulate(last)[np.maximum(i, 0)] >= pos))
+        pos = np.arange(n.sum()) + np.repeat(self.group_ends[g] - np.cumsum(n), n)
+        i = np.searchsorted(pick.first, pos, "right") - 1
+        inside = np.flatnonzero((i >= 0) & (np.maximum.accumulate(pick.last)[np.maximum(i, 0)] >= pos))
         files = self.group_file[g]
         groups = {int(f): g[files == f] - self.file_groups[f] for f in np.unique(files)}
         return groups, inside, self.file_class[np.repeat(files, n)[inside]]
@@ -323,16 +341,13 @@ def directory_table(spark, sf_dir: str) -> DataFrame:
     """The directory in its canonical STORAGE form: materialized parquet
     built once per dataset (the reference's Directory service persists
     exactly this: series identity + extents, StandaloneDirectoryClient).
-    Every FIND/FINDSTATS then scans ~1 row per series and never opens the
-    points store — asserted by tests/test_plans.py."""
+    FIND, FINDSETS, FINDSTATS and METASET then scan ~1 row per series and
+    never open the points store — asserted by tests/test_plans.py."""
     import os
 
-    from warp10_platform_spark.sources.tables import _cache_key, cache_path, events_points
+    from warp10_platform_spark.sources.tables import _cache_key, _read_parquet_memo, cache_path, events_points
 
-    key = _cache_key(sf_dir)
-    path = cache_path(f"directory_{key}")
+    path = cache_path(f"directory_{_cache_key(sf_dir)}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         build_directory(events_points(spark, sf_dir)).write.mode("overwrite").parquet(path)
-    from warp10_platform_spark.sources.tables import _read_parquet_memo
-
     return _read_parquet_memo(spark, path)

@@ -227,14 +227,11 @@ def _points_path(sf_dir: str) -> str:
 
 class PointsLayout:
     """The canonical_points files seen from the driver, through pyarrow:
-    the files that hold each class, their bytes on disk, and the
-    directory of the series they hold and of the rows each series spans
-    (sources/directory.SeriesDirectory).
-
-    Catalyst's size estimate of a path-based partitioned read is the whole
-    layout whatever the class predicate (plans.plan_bytes), so the bytes a
-    FETCH will read after class pruning come from here instead: summing
-    the selected partitions' file sizes reads no parquet."""
+    the files that hold each class, and the directory of the series they
+    hold, of the rows each series spans and of the row groups' compressed
+    bytes (sources/directory.SeriesDirectory).  FETCH routes on the bytes
+    of the row groups the directory picks for its selectors and, on the
+    driver route, scans exactly those row groups."""
 
     def __init__(self, path: str):
         import pyarrow.dataset as ds
@@ -246,31 +243,17 @@ class PointsLayout:
         for frag in self.dataset.get_fragments():
             cls = ds.get_partition_keys(frag.partition_expression)["class"]
             self.fragments.setdefault(cls, []).append(frag)
-        self._bytes = {c: sum(os.path.getsize(f.path) for f in fs) for c, fs in self.fragments.items()}
         self.directory = SeriesDirectory(self.fragments)
 
-    def classes(self, selectors) -> list[str]:
-        """The classes any of the parsed `selectors` can match."""
-        from warp10_platform_spark.core.selector import class_matches
-
-        return sorted(c for c in self.fragments if any(class_matches(s, c) for s in selectors))
-
-    def size(self, classes: list[str]) -> int:
-        """Bytes on disk of the files that hold `classes`."""
-        return sum(self._bytes[c] for c in classes)
-
-    def files(self, classes: list[str]) -> tuple[str, ...]:
-        return tuple(f.path for c in classes for f in self.fragments[c])
-
-    def scan(self, series, start: int | None, end: int | None):
-        """Rows of the directory's `series` (a non-empty ascending index
-        array) with start <= ts <= end, as an ArrowGTS of the layout's
-        schema, grouped by file in file order.  Only the row groups that
-        overlap those series' row spans are read.  The class, labels_key
-        and maps of each series come from the directory, once per series,
-        and each row's series from its match there: a row is kept only if
-        its (class, labels_key) is one of `series`, so two series sharing
-        a gts_id cannot mix, and a file not sorted by series (a span
+    def scan(self, pick, start: int | None, end: int | None):
+        """Rows of the series of `pick` (a sources/directory.Pick with at
+        least one series) with start <= ts <= end, as an ArrowGTS of the
+        layout's schema, grouped by file in file order.  Only the picked
+        row groups are read.  The class, labels_key and maps of each
+        series come from the directory, once per series, and each row's
+        series from its match there: a row is kept only if its (class,
+        labels_key) is one of the picked series, so two series sharing a
+        gts_id cannot mix, and a file not sorted by series (a span
         covering most of it) answers alike, only slower."""
         import numpy as np
 
@@ -278,10 +261,10 @@ class PointsLayout:
 
         d = self.directory
         schema = self.dataset.schema
-        groups, inside, row_class = d.row_groups(series)
+        groups, inside, row_class = d.row_groups(pick)
         t = self._read(groups, [c for c in schema.names if c == "labels_key" or c not in SERIES_COLUMNS])
         t = t.take(inside)
-        rows = d.rows(row_class, t["labels_key"], series)
+        rows = d.rows(row_class, t["labels_key"], pick.series)
         keep = rows >= 0
         if start is not None or end is not None:
             ts = t["ts"]
@@ -298,7 +281,7 @@ class PointsLayout:
         t = t.drop_columns(["labels_key"])
         if len(idx) < t.num_rows:
             t = t.take(idx)
-        return ArrowGTS(d.series(series), np.searchsorted(series, rows[idx]), t, schema)
+        return ArrowGTS(d.series(pick.series), np.searchsorted(pick.series, rows[idx]), t, schema)
 
     def _read(self, groups: dict, columns: list[str]):
         """`columns` of the row groups `groups` (file → row groups of that

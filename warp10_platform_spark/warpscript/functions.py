@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from warp10_platform_spark.core import timeunits as _tuc
 from warp10_platform_spark.core.frame import GTSFrame
 from warp10_platform_spark.core.selector import selector_of
-from warp10_platform_spark.sources.tables import canonical_points, events_points
+from warp10_platform_spark.sources.tables import canonical_points
 
 
 class _Registry(dict):
@@ -411,22 +411,26 @@ def _ts_param(v, now_us: int) -> int:
     return int(dt.replace(microsecond=0).timestamp()) * _tuc.UNITS_PER_S + _tuc.us(dt.microsecond)
 
 
-# FETCH answers on the driver from Arrow (GTSFrame.table) when the files
-# left after class pruning take fewer bytes on disk than this, and plans
-# Spark jobs otherwise.  On 4 cores (scripts/fetch_route_crossover.py,
-# figures in CHANGES.md) Arrow answered dashboard scripts 2.4x faster at
-# 20 MB, level with Spark at 41 MB and 2x slower at 81 MB.
+# FETCH answers on the driver from Arrow (GTSFrame.table) when the row
+# groups the series directory picks for its selectors, the ones that
+# route reads, take fewer compressed bytes than this, and plans Spark
+# jobs otherwise.  On 4 cores (scripts/fetch_route_crossover.py, figures
+# in CHANGES.md) Arrow answered dashboard scripts 2.4x faster at 20 MB,
+# level with Spark at 41 MB and 2x slower at 81 MB of bytes it read then
+# (whole class files), which is what this gate counts.  Not re-measured
+# where one class exceeds it (sf10).
 _LOCAL_MAX_BYTES = 32 << 20
 
 
 def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -> GTSFrame | None:
-    """FETCH's driver route, or None where it does not apply: above
-    _LOCAL_MAX_BYTES, for attribute clauses, and for regexes Python's re
-    does not read as Spark (Java) does.  On first use of its points the
-    frame looks the selectors up in the layout's series directory, then
-    reads only the row groups that hold the matched series and keeps
-    their rows in the ts bounds; when no series matches it scans
-    nothing.  Until then its Spark frame is the Spark route's scan
+    """FETCH's driver route, or None where it does not apply: for
+    attribute clauses, for regexes Python's re does not read as Spark
+    (Java) does, and when the row groups the selectors pick take
+    _LOCAL_MAX_BYTES compressed bytes or more.  The selectors are looked
+    up once, here, in the layout's series directory; on first use of its
+    points the frame reads only the picked row groups and keeps the
+    matched series' rows in the ts bounds, and when no series matches it
+    scans nothing.  Until then its Spark frame is the Spark route's scan
     plan."""
     from warp10_platform_spark.core.selector import parse_selector, python_compiles
     from warp10_platform_spark.sources.tables import points_layout
@@ -438,18 +442,11 @@ def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -
     if any(s.attributes for s in sels) or not all(python_compiles(s) for s in sels):
         return None
     layout = points_layout(st.spark, st.sf_dir)
-    classes = layout.classes(sels)
-    if layout.size(classes) >= _LOCAL_MAX_BYTES:
+    pick = layout.directory.pick(sels)
+    if pick.nbytes >= _LOCAL_MAX_BYTES:
         return None
-
-    def table():
-        series = layout.directory.select(sels)
-        return layout.scan(series, start, end) if len(series) else layout.dataset.schema.empty_table()
-
-    return GTSFrame(
-        lambda: _spark_fetch(st, selectors, start, end, None).df,
-        table=table, spark=st.spark, files=layout.files(classes),
-    )
+    table = (lambda: layout.scan(pick, start, end)) if len(pick.series) else layout.dataset.schema.empty_table()
+    return GTSFrame(lambda: _spark_fetch(st, selectors, start, end, None).df, table=table, spark=st.spark)
 
 
 def _selected_points(st, selectors: list[str]):
@@ -614,11 +611,11 @@ def _fetch(st):
 
 @register("FIND")
 def _find(st):
-    from warp10_platform_spark.sources.directory import build_directory, find
+    from warp10_platform_spark.sources.directory import directory_table, find
 
     args = st.pop()
     cls, labels = (args[-4], args[-3]) if len(args) >= 4 else (args[0], args[1] if len(args) > 1 else {})
-    st.push(find(build_directory(events_points(st.spark, st.sf_dir)), selector_of(cls, labels)))
+    st.push(find(directory_table(st.spark, st.sf_dir), selector_of(cls, labels)))
 
 
 @register("BUCKETIZE")

@@ -558,12 +558,11 @@ REGISTRY["FETCHSTRING"] = _mk_fetch_typed("v_string")
 
 def _found(st):
     """The directory rows the selector on top of the stack matches."""
-    from warp10_platform_spark.sources.directory import build_directory, find
-    from warp10_platform_spark.sources.tables import events_points
+    from warp10_platform_spark.sources.directory import directory_table, find
 
     args = st.pop()
     selector = args[0] if isinstance(args, list) else args
-    return find(build_directory(events_points(st.spark, st.sf_dir)), selector)
+    return find(directory_table(st.spark, st.sf_dir), selector)
 
 
 @register("FINDSETS")
@@ -1106,8 +1105,7 @@ def _metaset(st):
     override via stack attribute ``metaset.master.key``."""
     from warp10_platform_spark.core import gtscodec as gc
     from warp10_platform_spark.functions import aes
-    from warp10_platform_spark.sources.directory import build_directory, find
-    from warp10_platform_spark.sources.tables import events_points
+    from warp10_platform_spark.sources.directory import directory_table, find
 
     args = st.pop()
     if not isinstance(args, list) or len(args) != 7:
@@ -1125,9 +1123,9 @@ def _metaset(st):
     # with the reference's message instead of collecting the directory.
     cap = int(getattr(st, "attributes", {}).get("maxgts", 100_000))
     # persist for the call: the cap probe and the encode are two JOBS on
-    # the same directory frame, and without the cache each would rebuild
-    # the directory from a full points scan (review find, r9)
-    dir_df = find(build_directory(events_points(st.spark, st.sf_dir)), selector).persist()
+    # the same matched rows, and without the cache each would scan the
+    # directory table and test the selector again
+    dir_df = find(directory_table(st.spark, st.sf_dir), selector).persist()
     try:
         n = dir_df.limit(cap + 1).count()
         if n > cap:
