@@ -1,7 +1,8 @@
 """Directory-cardinality probe at 10^6 distinct series (r8 verdict #2).
 
 Every other fixture is point-heavy/series-light; this probe runs the
-metadata-axis surface — FIND / FINDSTATS (exact + HLL) / directory-
+metadata-axis surface — FIND / FINDSTATS (exact + HLL, and WarpScript
+FIND / FINDSTATS on the driver's series directory) / directory-
 filtered FETCH / gskip-gcount / METASET's gts.limit / the series
 accessors' driver cap — against .cache/series1m (scripts/
 make_scale_fixtures.py series1m: 10^6 series, 3 points each) and
@@ -73,6 +74,24 @@ def main():
     res["findstats_hll_n_series"] = hll_rows[0]["n_series"]
     res["findstats_hll_rel_err"] = round(abs(hll_rows[0]["n_series"] - res["directory_rows"]) / res["directory_rows"], 4)
 
+    # FIND and FINDSTATS through WarpScript, the route /exec takes: a
+    # lookup in the points layout's series directory, built once first
+    from warp10_platform_spark.sources.tables import points_layout
+    from warp10_platform_spark.warpscript.functions import REGISTRY
+    from warp10_platform_spark.warpscript.stack import WarpScriptStack
+
+    def warpscript(op, arg):
+        st = WarpScriptStack(spark, FIXTURE)
+        st.push(arg)
+        REGISTRY[op](st)
+        return st.pop().collect()
+
+    _, res["series_directory_build_secs"] = timed(points_layout, spark, FIXTURE)
+    rows, res["ws_find_secs"] = timed(warpscript, "FIND", ["~events\\.p.*", {}])
+    res["ws_find_matches"] = len(rows)
+    rows, res["ws_findstats_secs"] = timed(warpscript, "FINDSTATS", "~events\\.p.*{}")
+    res["ws_findstats_n_series"] = rows[0]["n_series"]
+
     # directory-filtered FETCH: broadcast semi-join in front of the scan
     pts = events_points(spark, FIXTURE)
     ff = fetch_filtered(pts, directory, "events.purchase{}")
@@ -88,9 +107,6 @@ def main():
     # (events.click{}) must fail with the reference's message; the same
     # selector under a raised cap succeeds (the boundary is the cap, not
     # the selector)
-    from warp10_platform_spark.warpscript.functions import REGISTRY
-    from warp10_platform_spark.warpscript.stack import WarpScriptStack
-
     st = WarpScriptStack(spark, FIXTURE)
     st.push(["t", "events.click", {}, float("nan"), float("nan"), 3600000000, 60000000])
     t0 = time.perf_counter()
@@ -130,7 +146,8 @@ def main():
     for k in (
         "directory_build_secs directory_rows find_matches find_secs "
         "find_plan_reads_directory_only findstats_exact_secs findstats_hll_secs "
-        "findstats_hll_rel_err fetch_filtered_rows fetch_filtered_secs "
+        "findstats_hll_rel_err series_directory_build_secs ws_find_matches ws_find_secs "
+        "ws_findstats_n_series ws_findstats_secs fetch_filtered_rows fetch_filtered_secs "
         "fetch_filtered_broadcast_semijoin gskip_rows gskip_secs "
         "metaset_default_cap_fired metaset_cap_check_secs "
         "metaset_200k_raised_cap_ok metaset_200k_raised_cap_secs "

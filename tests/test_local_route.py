@@ -681,7 +681,8 @@ def test_an_interleaved_layout_answers_like_a_filter(tmp_path):
     """Series interleaved over many row groups and two files of a class
     (a layout not sorted by series, where spans overlap), with gts_ids
     shared between series: every scan equals the brute-force
-    `selector.matches` filter of the whole layout."""
+    `selector.matches` filter of the whole layout, and the directory's
+    extents are the layout's per-series ts min, max and count."""
     from warp10_platform_spark.core.selector import matches, parse_selector
     from warp10_platform_spark.sources.tables import PointsLayout
 
@@ -694,6 +695,11 @@ def test_an_interleaved_layout_answers_like_a_filter(tmp_path):
     _write_layout(str(tmp_path), {"a": [part(150), part(90)], "b": [part(120)]}, row_group_size=16)
     layout = PointsLayout(str(tmp_path))
     everything = layout.dataset.to_table()
+    d = layout.directory
+    got = d.entries(np.arange(len(d.gts_id))).select(["class", "labels_key", "first_ts", "last_ts", "n_points"])
+    want = everything.group_by(["class", "labels_key"]).aggregate([("ts", "min"), ("ts", "max"), ("ts", "count")])
+    want = want.select(["class", "labels_key", "ts_min", "ts_max", "ts_count"])
+    assert sorted(zip(*got.to_pydict().values())) == sorted(zip(*want.to_pydict().values()))
     key = [(c, "ascending") for c in ("class", "labels_key", "ts")]
     for text in ("a{h=3}", "~.*{h~[2-5]}", "b{k=x}", "a{h=}", "~.*{}", "~[ab]{h~1.*}"):
         sel = parse_selector(text)

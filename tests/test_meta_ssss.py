@@ -198,39 +198,49 @@ def test_metaset_respects_gts_limit(spark, sf_dir):
     assert isinstance(st2.pop(), str)
 
 
-def test_metaset_distributed_encode_byte_identical(spark, sf_dir, monkeypatch):
-    """The executor-side (pandas-UDF) Metadata encode path must produce a
-    byte-identical MetaSet to the driver-side loop: both sort on
-    (class, labels_key) and the blobs are deterministic, so only the
-    WHERE the encode runs may differ. Patches the floor to force the
-    distributed path on the tiny fixture and compares decoded structs
-    AND raw serialized bytes (pre-AES, which is the only nondeterminism
-    in the envelope)."""
-    import gzip as _gz
+@pytest.mark.parametrize("layout", ["fixture", "hand-written"])
+def test_metaset_body_is_the_directory_rows_in_key_order(spark, sf_dir, tmp_path, monkeypatch, layout):
+    """With the expiry zeroed, METASET's serialized body is write_metaset
+    over write_metadata of the rows of a directory rebuilt from the
+    points, sorted by (class, labels_key), each with its labels in
+    labels_key's key order.  The hand-written layout's labels maps hold
+    their keys in another order."""
+    import gzip
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from warp10_platform_spark.core import gtscodec as gc
     from warp10_platform_spark.functions import aes
-    from warp10_platform_spark.warpscript import functions_series
+    from warp10_platform_spark.operators.gts_kernels import labels_key
+    from warp10_platform_spark.sources import tables
+    from warp10_platform_spark.sources.directory import build_directory
 
-    args = ["btoken", "~.*", {}, float("nan"), float("nan"), 3600000000, 60000000]
+    if layout == "fixture":
+        points = tables.events_points(spark, sf_dir)
+    else:
+        series = [{"z": "1", "a": "2"}, {"k": "x", "h": "b"}, {"h": "a"}, {}]
+        pick = [1, 0, 3, 2, 1, 0, 2]
+        mp = pa.map_(pa.string(), pa.string())
+        pq.write_to_dataset(pa.table({
+            "labels": pa.array([list(series[i].items()) for i in pick], mp),
+            "attributes": pa.array([[]] * len(pick), mp),
+            "ts": pa.array(range(len(pick)), pa.int64()),
+            "labels_key": [labels_key(series[i]) for i in pick],
+            "gts_id": pa.array(pick, pa.int64()),
+            "class": ["c", "b", "c", "b", "b", "c", "c"],
+        }), str(tmp_path), partition_cols=["class"])
+        monkeypatch.setattr(tables, "points_layout", lambda spark, sf: tables.PointsLayout(str(tmp_path)))
+        points = spark.read.parquet(str(tmp_path))
+    rows = build_directory(points).orderBy("class", "labels_key").collect()
+    metas = [gc.write_metadata(r["class"], {e["key"]: e["value"] for e in json.loads(r.labels_key)}) for r in rows]
+    want = gc.write_metaset(0, "btoken", metas, maxduration=3600000000)
 
-    def run():
-        st = WarpScriptStack(spark, sf_dir)
-        st.push(list(args))
-        REGISTRY["METASET"](st)
-        blob = st.pop()
-        body = _gz.decompress(aes.unwrap(bytes(range(32)), gc.opb64_decode(blob)))
-        ms = gc.read_metaset(body)
-        # expiry embeds wall-clock; zero it for the byte compare
-        return gc.write_metaset(
-            0, ms["token"],
-            [gc.write_metadata(m["name"], m["labels"], m.get("attributes")) for m in ms["metadatas"]],
-            maxduration=ms["maxduration"], notbefore=ms["notbefore"], notafter=ms["notafter"],
-        ), ms
-
-    driver_bytes, driver_ms = run()
-    monkeypatch.setattr(functions_series, "_METASET_DISTRIBUTED_FLOOR", 0)
-    dist_bytes, dist_ms = run()
-    assert len(driver_ms["metadatas"]) > 1
-    assert dist_ms["metadatas"] == driver_ms["metadatas"]
-    assert dist_bytes == driver_bytes
+    st = WarpScriptStack(spark, sf_dir)
+    st.push(["btoken", "~.*", {}, float("nan"), float("nan"), 3600000000, 60000000])
+    REGISTRY["METASET"](st)
+    body = gzip.decompress(aes.unwrap(bytes(range(32)), gc.opb64_decode(st.pop())))
+    # field 1, the expiry, is a varint after its header byte
+    end = next(i for i in range(1, len(body)) if body[i] < 0x80)
+    assert len(rows) > 1 and body[:1] + b"\0" + body[end + 1:] == want

@@ -147,52 +147,85 @@ def test_findsets_reads_only_matched_series(spark, sf_dir):
     assert {r.k: sorted(r.values) for r in rows} == {"user": ["10", "11", "12", "13", "14"]}
 
 
-def test_find_family_reads_the_persisted_directory(spark, sf_dir, monkeypatch):
-    """FIND, FINDSETS, FINDSTATS and METASET read the directory table
-    persisted once per dataset, never the events, and answer what a
-    directory rebuilt from the points gives.  Run on the sf0.01 fixture
-    next to the test one."""
+def test_find_family_answers_from_the_series_directory(spark, sf_dir, monkeypatch):
+    """FIND, FINDSETS, FINDSTATS and METASET look their selector up in
+    the points layout's series directory and run no Spark job once the
+    layout exists; a Java-only regex is matched on the persisted
+    directory table instead and answers like its Python twin.  Both
+    routes answer what a directory rebuilt from the points gives.  Run
+    on the sf0.01 fixture next to the test one."""
     import gzip
     import os
 
     from warp10_platform_spark.core import gtscodec as gc
+    from warp10_platform_spark.core import selector
     from warp10_platform_spark.functions import aes
     from warp10_platform_spark.sources import directory
-    from warp10_platform_spark.sources.tables import events_points
+    from warp10_platform_spark.sources.tables import events_points, points_layout
 
     sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     if not os.path.exists(os.path.join(sf, "events.parquet")):
         pytest.skip("sf0.01 testdata not present")
+    points_layout(spark, sf)
     sels = [("events.click", {"user": "7"}), ("~events\\.(click|view)", {"user": "~1[0-9]"}),
-            ("~.*", {}), ("events.nothing", {})]
+            ("~.*", {}), ("events.nothing", {}), ("~events\\.(?<k>click|view)", {"user": "~1[0-9]"})]
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    tabled = []
+    table = directory.directory_table
+
+    def recording(spark, sf):
+        tabled.append(sf)
+        return table(spark, sf)
+
+    monkeypatch.setattr(directory, "directory_table", recording)
 
     def answers():
-        out = []
+        """The answers, and per call the Spark jobs it ran and whether it
+        read the directory table."""
+        out, runs = [], []
+
+        def call(script, st=None):
+            st = st or WarpScriptStack(spark, sf)
+            del tabled[:]
+            jobs = scheduler.numTotalJobs()
+            st.exec(script)
+            top = st.pop()
+            rows = top.collect() if hasattr(top, "collect") else top
+            runs.append((scheduler.numTotalJobs() - jobs, bool(tabled)))
+            return rows
+
         for cls, labels in sels:
             st = WarpScriptStack(spark, sf)
             st.push([cls, labels])
-            st.exec("FIND")
-            find = st.pop()
-            out.append(sorted(map(tuple, find.select("gts_id", "class", "labels_key", "first_ts", "last_ts",
-                                                     "n_points").collect())))
+            out.append(sorted((r.gts_id, r["class"], r.labels_key, r.first_ts, r.last_ts, r.n_points)
+                              for r in call("FIND", st)))
             sel = "%s{%s}" % (cls, ",".join(f"{k}{'' if v.startswith('~') else '='}{v}" for k, v in labels.items()))
-            out.append(sorted((r.k, sorted(r.values)) for r in run(f"'{sel}' FINDSETS", spark, sf).pop().collect()))
-            out.append(run(f"'{sel}' FINDSTATS", spark, sf).pop().collect()[0].asDict())
+            out.append(sorted((r.k, sorted(r.values)) for r in call(f"'{sel}' FINDSETS")))
+            out.append(call(f"'{sel}' FINDSTATS")[0].asDict())
             if out[-3]:
                 st = WarpScriptStack(spark, sf)
                 st.push(["t", cls, labels, float("nan"), float("nan"), 3600000000, 60000000])
-                st.exec("METASET")
-                body = gzip.decompress(aes.unwrap(bytes(range(32)), gc.opb64_decode(st.pop())))
+                body = gzip.decompress(aes.unwrap(bytes(range(32)), gc.opb64_decode(call("METASET", st))))
                 out.append(gc.read_metaset(body)["metadatas"])
-        return out, find._jdf.queryExecution().executedPlan().toString()
+        return out, runs
 
-    got, plan = answers()
-    assert "events.parquet" not in plan and "directory_" in plan
+    got, runs = answers()
+    # the last selector, the Java-only one, answers in its 4 calls
+    assert runs[:-4] == [(0, False)] * (len(runs) - 4) and all(tab for _, tab in runs[-4:])
+    assert got[-4:] == got[4:8]
+    monkeypatch.setattr(selector, "python_compiles", lambda sel: False)
     monkeypatch.setattr(directory, "directory_table",
                         lambda spark, sf: directory.build_directory(events_points(spark, sf)))
-    want, plan = answers()
-    assert "events.parquet" in plan
+    want, _ = answers()
     assert got == want and all(got[:3])
+
+
+@pytest.mark.parametrize("op", ["FINDSTATS", "FINDSETS"])
+def test_find_family_refuses_attribute_clauses(spark, sf_dir, op):
+    """The directory keeps no series attributes: a selector with an
+    attribute clause is refused by name, not failed in Spark."""
+    with pytest.raises(ValueError, match=r"no series attributes.*\{src=x\}"):
+        run(f"'events.click{{user=7}}{{src=x}}' {op}", spark, sf_dir)
 
 
 # ---------- extended stack / control flow / scalars ----------

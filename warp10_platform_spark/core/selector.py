@@ -17,7 +17,8 @@ StandaloneDirectoryClient).  FETCH has two routes here:
   layout's SeriesDirectory (sources/directory.py) — `class_matches` once
   per class, `clause_test` once per distinct label value that starts
   with the clause's `literal_prefix` plus once for an absent label — and
-  only the row groups that hold the matched series are scanned.
+  only the row groups that hold the matched series are scanned.  The FIND
+  family takes the same lookup; its Java-only regexes read the directory table.
 
 `clause_test` is the one driver-side definition of a label clause; the
 Column compiler below mirrors it.

@@ -4,8 +4,8 @@ The reference keeps a dedicated Directory service (class/labels →
 classId/labelsId, served from memory, backed by LevelDB/HBase) and its
 FETCH looks the selector up there first, then reads the matched series
 only (FETCH.java:238 → StandaloneDirectoryClient → GTSDecoderIterator),
-so metadata selectors never touch the points store.  There are two
-analogs here:
+so metadata selectors never touch the points store, and FIND answers
+from it alone (FIND.java:73).  There are two analogs here:
 
 - `SeriesDirectory`, held on the driver, one entry per series of the
   class-partitioned points layout (sources/tables.PointsLayout builds it
@@ -20,10 +20,12 @@ analogs here:
   scan that follows reads, and their bytes choose FETCH's route; it
   decodes no map column nor the class, and hands on the series it
   matched each row to, with their class, labels_key and maps from the
-  directory, once per series (operators/gts_kernels.ArrowGTS).
+  directory, once per series (operators/gts_kernels.ArrowGTS).  With
+  each series' extent, it answers WarpScript FIND, FINDSETS, FINDSTATS
+  and METASET too, without a Spark job (`SeriesDirectory.entries`).
 - The Spark `directory` table: one row per series with identity + stats,
-  consulted by FIND, FINDSTATS, FINDSETS and METASET and used as a
-  broadcast semi-join filter in front of FETCH.  At 100 TB it is
+  read by the batch queries and by the FIND family for a regex only
+  Java reads as written, and a broadcast semi-join filter before FETCH.  At 100 TB it is
   maintained incrementally at ingest (the streaming_last view is its
   seed) and persisted as its own parquet — ~1e6 series rows vs ~1e12
   point rows, a 10^6× smaller scan for every metadata-only query.  Here
@@ -46,11 +48,27 @@ from warp10_platform_spark.core.schema import labels_from_key
 from warp10_platform_spark.core.selector import class_matches, clause_test, literal_prefix, selector_predicate
 
 
-def _spans(t: pa.Table) -> tuple[np.ndarray, np.ndarray]:
-    """The first and the last row of each distinct labels_key of `t`."""
+_NO_TS = np.iinfo(np.int64)
+
+
+def _extents(group: np.ndarray, size: int, lo, hi, n=None) -> tuple[np.ndarray, ...]:
+    """Per group 0..size-1 of `group`: its least `lo` and greatest `hi`
+    (int64's max and min where it has none) and its sum of `n` or count."""
+    least, most = np.full(size, _NO_TS.max), np.full(size, _NO_TS.min)
+    np.minimum.at(least, group, lo)
+    np.maximum.at(most, group, hi)
+    return least, most, np.bincount(group, n, size).astype(np.int64)
+
+
+def _spans(t: pa.Table) -> tuple[np.ndarray, ...]:
+    """Per distinct labels_key of `t`, in order of its first row: that
+    row, its last row and its extent (least and greatest ts, row count)."""
     codes = pc.dictionary_encode(t["labels_key"].combine_chunks()).indices.to_numpy()
     first = np.unique(codes, return_index=True)[1]
-    return first, len(codes) - 1 - np.unique(codes[::-1], return_index=True)[1]
+    last = len(codes) - 1 - np.unique(codes[::-1], return_index=True)[1]
+    ts = t["ts"]
+    return first, last, *_extents(codes, len(first), ts.fill_null(_NO_TS.max).to_numpy(),
+                                  ts.fill_null(_NO_TS.min).to_numpy())
 
 
 # what a driver-route FETCH reads, decided before it reads
@@ -65,31 +83,34 @@ class SeriesDirectory:
     driver as columns and numbered in Spark's ascending (class,
     labels_key) order, so ascending series indices are in that order.
 
-    Per series: the codes of its class and labels_key, its gts_id, and
-    the labels and attributes maps of its first row.  Per label name:
-    its distinct values in ascending order and each series' code among
-    them (-1 where the series lacks the label).  Per file: its
-    `pyarrow.parquet.ParquetFile`, its class code (`class_names` holds
-    the classes as an Arrow array) and its first row group.  Per row
-    group: its file, its row count, the cumulative row count and its
-    compressed bytes from the file's footer.  Per (series, file) holding
-    it: a span, the series' first and last row in that file, ordered by
-    first row.  Rows and row groups are numbered across the files, in
-    file order.  No Python object exists per series."""
+    Per series: the codes of its class and labels_key, its gts_id, the
+    labels and attributes maps of its first row and its extent
+    (`entries`).  Per label name: its distinct values in ascending order
+    and each series' code among them (-1 where the series lacks the
+    label).  Per file: its `pyarrow.parquet.ParquetFile`, its class code
+    (`class_names` holds the classes as an Arrow array) and its first
+    row group.  Per row group: its file, its row count, the cumulative
+    row count and its compressed bytes from the file's footer.  Per
+    (series, file) holding it: a span, the series' first and last row in
+    that file, ordered by first row.  Rows and row groups are numbered
+    across the files, in file order.  No Python object exists per
+    series."""
 
     def __init__(self, fragments: dict[str, list]):
         """Read the (class, labels_key) series of `fragments` (class →
         parquet fragments), one file at a time."""
         self.classes = sorted(fragments)
         self.class_names = pa.array(self.classes, pa.string())
-        cols = ["labels_key", "gts_id", "labels", "attributes"]
+        cols = ["labels_key", "ts", "gts_id", "labels", "attributes"]
         self.files, file_class, group_rows, group_bytes, group_file, heads, first, last = [], [], [], [], [], [], [], []
+        extents = []
         for code, cls in enumerate(self.classes):
             for frag in fragments[cls]:
                 pf = pq.ParquetFile(frag.path)
                 t = pf.read(columns=cols)
-                lo, hi = _spans(t)
+                lo, hi, *extent = _spans(t)
                 heads.append(t.take(lo))
+                extents.append(extent)
                 base = sum(group_rows)
                 first.append(lo + base)
                 last.append(hi + base)
@@ -121,6 +142,8 @@ class SeriesDirectory:
         order = np.argsort(first, kind="stable")
         self.span_first, self.span_last, self.span_series = first[order], last[order], span_series[order]
         self.class_code, self.key_code = np.divmod(self._pair, len(self.keys))
+        self.first_ts, self.last_ts, self.n_points = _extents(
+            span_series, len(self._pair), *map(np.concatenate, zip(*extents)))
         series = heads.take(at)
         self.gts_id = series["gts_id"].to_numpy()
         self.labels = series["labels"].combine_chunks()
@@ -203,6 +226,23 @@ class SeriesDirectory:
         return pa.table({"class": self.class_names.take(self.class_code[series]),
                          "labels_key": self.keys.take(self.key_code[series]),
                          "labels": self.labels.take(series), "attributes": self.attributes.take(series)})
+
+    def entries(self, series: np.ndarray) -> pa.Table:
+        """The directory rows of `series` with build_directory's columns,
+        the labels in labels_key's key order (as labels_from_key gives
+        them) and a null first_ts and last_ts where a series has no ts."""
+        # a taken map array's offsets start at 0
+        labels = self.labels.take(series)
+        parent = np.repeat(np.arange(len(labels)), np.diff(labels.offsets))
+        order = pc.sort_indices(pa.table({"p": parent, "k": labels.keys}), [("p", "ascending"), ("k", "ascending")])
+        first, last = self.first_ts[series], self.last_ts[series]
+        return pa.table({
+            "gts_id": self.gts_id[series],
+            "class": self.class_names.take(self.class_code[series]),
+            "labels_key": self.keys.take(self.key_code[series]),
+            "labels": pa.MapArray.from_arrays(labels.offsets, labels.keys.take(order), labels.items.take(order)),
+            "first_ts": pa.array(first, mask=first == _NO_TS.max),
+            "last_ts": pa.array(last, mask=last == _NO_TS.min), "n_points": self.n_points[series]})
 
     def rows(self, row_class: np.ndarray, labels_key: pa.ChunkedArray, series: np.ndarray) -> np.ndarray:
         """The series of each row (its class code and labels_key), or -1
@@ -341,8 +381,8 @@ def directory_table(spark, sf_dir: str) -> DataFrame:
     """The directory in its canonical STORAGE form: materialized parquet
     built once per dataset (the reference's Directory service persists
     exactly this: series identity + extents, StandaloneDirectoryClient).
-    FIND, FINDSETS, FINDSTATS and METASET then scan ~1 row per series and
-    never open the points store — asserted by tests/test_plans.py."""
+    A FIND over it scans ~1 row per series and never opens the points
+    store — asserted by tests/test_plans.py."""
     import os
 
     from warp10_platform_spark.sources.tables import _cache_key, _read_parquet_memo, cache_path, events_points

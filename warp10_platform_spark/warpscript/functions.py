@@ -422,6 +422,26 @@ def _ts_param(v, now_us: int) -> int:
 _LOCAL_MAX_BYTES = 32 << 20
 
 
+def _found(st, selector: str, limit: int | None = None):
+    """The directory rows `selector` matches, in (class, labels_key)
+    order, as an Arrow table from the layout's series directory, as
+    FETCH's driver route looks it up; for a regex only Java reads as
+    written, at most `limit` of them from the directory table."""
+    from warp10_platform_spark.core.selector import parse_selector, python_compiles
+    from warp10_platform_spark.sources.directory import directory_table, find
+    from warp10_platform_spark.sources.tables import points_layout
+
+    sel = parse_selector(selector)
+    if sel.attributes:
+        clause = ",".join(k + op + v for k, op, v in sel.attributes)
+        raise ValueError(f"{selector}: the directory keeps no series attributes to match {{{clause}}} with")
+    if python_compiles(sel):
+        d = points_layout(st.spark, st.sf_dir).directory
+        return d.entries(d.select([sel]))
+    rows = find(directory_table(st.spark, st.sf_dir), selector).orderBy("class", "labels_key")
+    return (rows if limit is None else rows.limit(limit)).toArrow()
+
+
 def _local_fetch(st, selectors: list[str], start: int | None, end: int | None) -> GTSFrame | None:
     """FETCH's driver route, or None where it does not apply: for
     attribute clauses, for regexes Python's re does not read as Spark
@@ -611,11 +631,10 @@ def _fetch(st):
 
 @register("FIND")
 def _find(st):
-    from warp10_platform_spark.sources.directory import directory_table, find
-
+    """[ class labels ] FIND (FIND.java:73): the matched directory rows."""
     args = st.pop()
     cls, labels = (args[-4], args[-3]) if len(args) >= 4 else (args[0], args[1] if len(args) > 1 else {})
-    st.push(find(directory_table(st.spark, st.sf_dir), selector_of(cls, labels)))
+    st.push(st.spark.createDataFrame(_found(st, selector_of(cls, labels))))
 
 
 @register("BUCKETIZE")

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from warp10_platform_spark.core.frame import GTSFrame
 from warp10_platform_spark.core.selector import selector_of
-from warp10_platform_spark.warpscript.functions import REGISTRY, _as_frame, register
+from warp10_platform_spark.warpscript.functions import REGISTRY, _as_frame, _found, register
 
 
 # ---- engine tiers bound into the script surface (WarpScriptLib.java:
@@ -556,30 +556,39 @@ REGISTRY["FETCHBOOLEAN"] = _mk_fetch_typed("v_bool")
 REGISTRY["FETCHSTRING"] = _mk_fetch_typed("v_string")
 
 
-def _found(st):
-    """The directory rows the selector on top of the stack matches."""
-    from warp10_platform_spark.sources.directory import directory_table, find
-
+def _selector_arg(st) -> str:
     args = st.pop()
-    selector = args[0] if isinstance(args, list) else args
-    return find(directory_table(st.spark, st.sf_dir), selector)
+    return args[0] if isinstance(args, list) else args
 
 
 @register("FINDSETS")
 def _findsets(st):
     """selector FINDSETS (FINDSETS.java): per-label value sets of the
-    matched series."""
-    ex = _found(st).select(F.explode("labels").alias("k", "v"))
-    st.push(ex.groupBy("k").agg(F.collect_set("v").alias("values")))
+    matched series, as (k, values) rows in key order, each set sorted."""
+    import pyarrow as pa
+
+    labels = _found(st, _selector_arg(st))["labels"].combine_chunks()
+    pairs = pa.Table.from_struct_array(labels.cast(pa.list_(pa.struct([("k", pa.string()), ("v", pa.string())])))
+                                       .flatten())
+    # a set holds the non-null values, as collect_set does
+    sets = pairs.sort_by([("k", "ascending"), ("v", "ascending")]).group_by("k", use_threads=False).aggregate(
+        [("v", "distinct")])
+    schema = pa.schema([pa.field("k", pa.string(), False),
+                        pa.field("values", pa.list_(pa.field("element", pa.string(), False)), False)])
+    st.push(st.spark.createDataFrame(pa.table([sets["k"].to_pylist(), sets["v_distinct"].to_pylist()], schema=schema)))
 
 
 @register("FINDSTATS")
 def _findstats(st):
     """selector FINDSTATS (FINDSTATS.java): exact class and series counts
     of the matched series."""
-    from warp10_platform_spark.sources.directory import findstats
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    st.push(findstats(_found(st)))
+    found = _found(st, _selector_arg(st))
+    counts = [[pc.count_distinct(found[c]).as_py()] for c in ("class", "gts_id")]
+    schema = pa.schema([pa.field("n_classes", pa.int64(), False), pa.field("n_series", pa.int64(), False)])
+    st.push(st.spark.createDataFrame(pa.table(counts, schema=schema)))
 
 
 @register("UPDATE")
@@ -1086,13 +1095,6 @@ def _metadiff(st):
     st.push(GTSFrame(meta_delta(gf.df, attrs), gf.bucketspec, gf.value_col))
 
 
-# Below this many matched series METASET keeps the driver-side encode
-# loop (the Arrow/pandas-UDF startup ~2 s would dominate); above it the
-# per-series Metadata blobs are built on the executors. Both paths are
-# byte-identical (test_meta_ssss.py patches this to 0 to prove it).
-_METASET_DISTRIBUTED_FLOOR = 5000
-
-
 @register("METASET")
 def _metaset(st):
     """[ token 'class' {labels} notbefore notafter maxduration ttl ]
@@ -1105,7 +1107,6 @@ def _metaset(st):
     override via stack attribute ``metaset.master.key``."""
     from warp10_platform_spark.core import gtscodec as gc
     from warp10_platform_spark.functions import aes
-    from warp10_platform_spark.sources.directory import directory_table, find
 
     args = st.pop()
     if not isinstance(args, list) or len(args) != 7:
@@ -1115,83 +1116,20 @@ def _metaset(st):
     def _opt(v):
         return None if isinstance(v, float) and _math.isnan(v) else int(v)
 
-    selector = selector_of(str(cls), labels)
-    # Bounded materialization (r7 verdict #4): the reference's FIND.java:
-    # 523 enforces the stack's gts.limit attribute (DEFAULT_GTS_LIMIT
-    # 100000) while draining the directory iterator — same contract
-    # here via a limit(cap+1) probe, so a 10^7-series selector fails
-    # with the reference's message instead of collecting the directory.
+    # the stack's gts.limit, which FIND.java:523 enforces while draining
+    # the directory iterator (DEFAULT_GTS_LIMIT 100000)
     cap = int(getattr(st, "attributes", {}).get("maxgts", 100_000))
-    # persist for the call: the cap probe and the encode are two JOBS on
-    # the same matched rows, and without the cache each would scan the
-    # directory table and test the selector again
-    dir_df = find(directory_table(st.spark, st.sf_dir), selector).persist()
-    try:
-        n = dir_df.limit(cap + 1).count()
-        if n > cap:
-            raise ValueError(
-                f"METASET exceeded limit of {cap} Geo Time Series. "
-                "Consider raising the limit (MAXGTS) or narrowing the selector."
-            )
-        if n == 0:
-            raise ValueError(
-                "METASET couldn't find any metadata matching the given class and label selectors."
-            )
-        # The MetaSet body is a thrift list whose elements are independently
-        # encoded Metadata blobs (write_metaset just concatenates them), so
-        # the per-series encode is associative work that belongs on the
-        # EXECUTORS: the old driver-side loop cost ~1.4 ms/series — 276 s
-        # for a 200k-series selector at a raised MAXGTS (DIRSCALE_r9 probe).
-        # Above a small floor the blobs are built by an Arrow-batched pandas
-        # UDF and the driver only concatenates; below it the pandas-UDF
-        # startup (~2 s) would dominate, so tiny interactive calls keep the
-        # driver loop. Both paths sort on (class, labels_key) — the
-        # deterministic analog of the reference's directory iterator order —
-        # so the blob is byte-stable regardless of path or partitioning.
-        has_attrs = "attributes" in dir_df.columns
-        if n > _METASET_DISTRIBUTED_FLOOR:
-            import pandas as _pd
-
-            def _enc_fn(cls, labels, attrs):
-                from warp10_platform_spark.core import gtscodec as _gc
-
-                return _pd.Series(
-                    [
-                        _gc.write_metadata(c, dict(l) if l is not None else {}, dict(a) if a else None)
-                        for c, l, a in zip(cls, labels, attrs)
-                    ]
-                )
-
-            # this module uses postponed annotations (PEP 563), which leaves
-            # pandas_udf's type-hint inference unresolvable strings — hand it
-            # real objects instead
-            _enc_fn.__annotations__ = {
-                "cls": _pd.Series, "labels": _pd.Series, "attrs": _pd.Series, "return": _pd.Series
-            }
-            _enc = F.pandas_udf(_enc_fn, "binary")
-
-            attrs_col = F.col("attributes") if has_attrs else F.lit(None).cast("map<string,string>")
-            metas = [
-                bytes(r["b"])
-                for r in dir_df.select(
-                    _enc(F.col("class"), F.col("labels"), attrs_col).alias("b"),
-                    "class",
-                    "labels_key",
-                )
-                .sort("class", "labels_key")
-                .select("b")
-                .collect()
-            ]
-        else:
-            metas = [
-                gc.write_metadata(
-                    r["class"], dict(r["labels"] or {}),
-                    dict(r["attributes"]) if has_attrs and r["attributes"] else None,
-                )
-                for r in dir_df.sort("class", "labels_key").limit(cap).collect()
-            ]
-    finally:
-        dir_df.unpersist(blocking=False)
+    found = _found(st, selector_of(str(cls), labels), cap + 1)
+    if found.num_rows > cap:
+        raise ValueError(
+            f"METASET exceeded limit of {cap} Geo Time Series. "
+            "Consider raising the limit (MAXGTS) or narrowing the selector."
+        )
+    if found.num_rows == 0:
+        raise ValueError("METASET couldn't find any metadata matching the given class and label selectors.")
+    # in (class, labels_key) order, the deterministic analog of the
+    # reference's directory iterator order, so the body is byte-stable
+    metas = [gc.write_metadata(c, dict(lb)) for c, lb in zip(found["class"].to_pylist(), found["labels"].to_pylist())]
     import time as _t
 
     # expiry = now_ms + ttl / TIME_UNITS_PER_MS (µs platform → /1000)
